@@ -215,6 +215,35 @@ object Main {
     name -> obs.get("n").asInstanceOf[Long]
   }
 
+  /** Singer emission of `streams` in the given order through `out`, with
+    * each stream's RECORD count: the lines that start with the RECORD
+    * envelope, so a SCHEMA or STATE line that mentions `"RECORD"` (a
+    * column of that name) is not counted. Once the consumer closes, the
+    * remaining streams are skipped with a count of 0.
+    */
+  private[cli] def emitSinger(
+      streams: Seq[(String, org.apache.spark.sql.DataFrame)],
+      keyProperties: String => Seq[String],
+      state: StateStore,
+      out: String => Unit): Seq[(String, Long)] = {
+    var downstreamClosed = false
+    streams.map { case (name, df) =>
+      if (downstreamClosed) name -> 0L // consumer is gone
+      else {
+        var n = 0L
+        val completed = SingerSink.emit(name, df, keyProperties(name), state, { l =>
+          out(l)
+          if (l.startsWith(SingerSink.RecordPrefix)) n += 1
+        })
+        if (!completed) {
+          downstreamClosed = true
+          System.err.println(s"[graft] downstream closed mid-stream on $name; ending sync")
+        }
+        name -> n
+      }
+    }
+  }
+
   private def sync(
       spark: SparkSession,
       source: AirbyteSource,
@@ -294,7 +323,8 @@ object Main {
             scala.concurrent.Future.sequence(futures),
             scala.concurrent.duration.Duration.Inf)
         } finally { pool.shutdown() }
-      } else {
+      } else if (opts.contains("out")) dfs.toSeq.sortBy(_._1).map(parquetSink)
+      else {
         // aliased/duplicated outputs resolve key_properties through their
         // SOURCE stream's catalog entry, not the output name
         val sourceOf: Map[String, String] = mapsWithCatalogDrops.flatMap {
@@ -302,36 +332,19 @@ object Main {
             m.source.map(src => key -> src)
               .orElse(m.alias.map(a => a -> key))
         }
-        var downstreamClosed = false
         var emitted = 0L
-        dfs.toSeq.sortBy(_._1).map { case (name, df) =>
-          opts.get("out") match {
-            case Some(_) => parquetSink(name -> df)
-            case None if downstreamClosed => name -> 0L // consumer is gone
-            case None =>
-              var n = 0L
-              // PrintStream swallows broken pipes and raises checkError() —
-              // surface it as DownstreamClosed so emit() stops cleanly and
-              // the final state still lands in --state-out (reference
-              // tap.py:62-80). checkError() flushes, so probe every 1024
-              // lines, not per record.
-              val completed = SingerSink.emit(name, df,
-                catalog.stream(sourceOf.getOrElse(name, name))
-                  .map(_.primaryKeys).getOrElse(Seq.empty),
-                state, { l =>
-                  println(l)
-                  emitted += 1
-                  if ((emitted & 1023L) == 0L && System.out.checkError())
-                    throw new SingerSink.DownstreamClosedException()
-                  if (l.contains("\"RECORD\"")) n += 1
-                })
-              if (!completed) {
-                downstreamClosed = true
-                System.err.println(s"[graft] downstream closed mid-stream on $name; ending sync")
-              }
-              name -> n
-          }
-        }
+        // PrintStream swallows broken pipes and raises checkError() —
+        // surface it as DownstreamClosed so emit() stops cleanly and the
+        // final state still lands in --state-out (reference tap.py:62-80).
+        // checkError() flushes, so probe every 1024 lines, not per record.
+        emitSinger(dfs.toSeq.sortBy(_._1),
+          name => catalog.stream(sourceOf.getOrElse(name, name)).map(_.primaryKeys).getOrElse(Seq.empty),
+          state, { l =>
+            println(l)
+            emitted += 1
+            if ((emitted & 1023L) == 0L && System.out.checkError())
+              throw new SingerSink.DownstreamClosedException()
+          })
       }
     opts.get("state-out").foreach(p => state.save(Paths.get(p)))
     val secs = (System.nanoTime() - t0) / 1e9

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.types.StructType
+import graft.protocol.{AirbyteMessage, AirbyteMessageType}
 import graft.state.StateStore
 
 /** Distributed connector extraction: N connector invocations run as N Spark
@@ -31,15 +32,20 @@ object PipedConnectorSource {
 
   /** Run every command as its own task; parse the Airbyte JSONL protocol
     * into [[RawMessage]] rows. Lazy per-line — no buffering of the child's
-    * output beyond the current line.
+    * output beyond the current line. Lines go through the same streaming
+    * [[AirbyteMessage.parse]] as [[SubprocessSource]]: a RECORD's payload
+    * is the raw `data` text, any other message its re-serialized tree, and
+    * a line that does not parse to a known type an `UNPARSEABLE` row.
+    * stderr drains on a thread into an 8 KiB tail carried by the exit
+    * error.
     */
   def readMessages(spark: SparkSession, commands: Seq[Seq[String]]): Dataset[RawMessage] = {
     import spark.implicits._
     spark.sparkContext
       .parallelize(commands.zipWithIndex, math.max(commands.size, 1))
       .flatMap { case (cmd, idx) =>
-        val pb = new ProcessBuilder(cmd: _*)
-        val proc = pb.start()
+        val proc = new ProcessBuilder(cmd: _*).start()
+        val err = new StderrTail(proc.getErrorStream)
         val reader = new java.io.BufferedReader(
           new java.io.InputStreamReader(proc.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
         val mapper = new ObjectMapper()
@@ -50,8 +56,9 @@ object PipedConnectorSource {
             val l = reader.readLine()
             if (l == null) {
               val code = proc.waitFor()
+              val tail = err.join()
               reader.close()
-              if (code != 0) throw new RuntimeException(s"connector[$idx] exited $code")
+              if (code != 0) throw new RuntimeException(s"connector[$idx] exited $code: $tail")
             }
             l
           }
@@ -61,24 +68,17 @@ object PipedConnectorSource {
             nextLine = advance()
             val s = msgSeq
             msgSeq += 1
-            try {
-              val node = mapper.readTree(line)
-              val t = Option(node.get("type")).map(_.asText).getOrElse("UNKNOWN")
-              t match {
-                case "RECORD" =>
-                  val rec = node.get("record")
-                  RawMessage(idx, s, "RECORD", rec.path("stream").asText,
-                    mapper.writeValueAsString(rec.get("data")))
-                case "TRACE"
-                    if node.path("trace").path("type").asText == "ERROR" =>
-                  throw new RuntimeException(
-                    s"connector[$idx] error: ${node.path("trace").path("error").toString}")
-                case other =>
-                  RawMessage(idx, s, other, "", mapper.writeValueAsString(node))
-              }
-            } catch {
-              case e: RuntimeException => throw e
-              case _: Exception => RawMessage(idx, s, "UNPARSEABLE", "", line)
+            AirbyteMessage.parse(line) match {
+              case Some(AirbyteMessage.Record(stream, data)) =>
+                RawMessage(idx, s, "RECORD", stream.getOrElse(""), data.getOrElse("null"))
+              case Some(m: AirbyteMessage.Tree)
+                  if m.msgType == AirbyteMessageType.TRACE &&
+                    m.payload.path("trace").path("type").asText == "ERROR" =>
+                throw new RuntimeException(
+                  s"connector[$idx] error: ${m.payload.path("trace").path("error").toString}")
+              case Some(m: AirbyteMessage.Tree) =>
+                RawMessage(idx, s, m.msgType.toString, "", mapper.writeValueAsString(m.payload))
+              case None => RawMessage(idx, s, "UNPARSEABLE", "", line)
             }
           }
         }

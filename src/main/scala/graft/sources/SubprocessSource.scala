@@ -7,7 +7,7 @@ import graft.catalog.{AirbyteCatalog, ConfiguredCatalog}
 import graft.protocol.{AirbyteMessage, AirbyteMessageType}
 import graft.state.StateStore
 
-import java.io.{BufferedReader, BufferedWriter, InputStreamReader}
+import java.io.{BufferedReader, BufferedWriter, InputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import scala.collection.mutable
@@ -23,9 +23,15 @@ import scala.collection.mutable
   * its known scalability limit), the driver streams the child's stdout ONCE,
   * routing RECORD lines to one spill file per stream (bounded memory: we
   * hold one line at a time), folding STATE into a [[StateStore]], and
-  * fail-fasting on TRACE ERROR (reference `tap.py:649-657`). Each spill file
-  * then becomes a typed DataFrame via `from_json` with the discovered
-  * schema, so downstream transforms are columnar and distributed.
+  * fail-fasting on TRACE ERROR (reference `tap.py:649-657`). Each line gets
+  * one streaming parse ([[AirbyteMessage.parse]]); a RECORD's `data` is
+  * written to the spill file as the raw text the connector sent, never
+  * parsed into a tree or re-serialized. stderr drains on a daemon thread
+  * into an 8 KiB tail, so a chatty connector cannot fill its stderr pipe
+  * and stall stdout; the tail is joined before the exit-code check and
+  * carried in its error. Each spill file then becomes a typed DataFrame
+  * via `from_json` with the discovered schema, so downstream transforms
+  * are columnar and distributed.
   *
   * Scale note: a single connector process is inherently a single producer —
   * same as the reference. The scale-out path for many connectors/segments is
@@ -80,30 +86,26 @@ final class SubprocessSource(
         Files.newBufferedWriter(spillDir.resolve(s"$stream.jsonl"), StandardCharsets.UTF_8))
 
     try {
-      runStreaming(args.toSeq) { msg =>
-        msg.msgType match {
-          case AirbyteMessageType.RECORD =>
-            for {
-              rec <- msg.record
-              stream <- Option(rec.get("stream")).map(_.asText)
-              if selected.contains(stream) // consumer-side skip, tap.py:786-788
-              data <- Option(rec.get("data"))
-            } {
-              val w = writerFor(stream)
-              w.write(mapper.writeValueAsString(data)); w.newLine()
-            }
-          case AirbyteMessageType.STATE =>
-            msg.state.foreach(state.merge)
-          case AirbyteMessageType.LOG => // route to log4j; INFO-level
-          case AirbyteMessageType.TRACE =>
-            // TRACE ERROR → fail fast with the connector's message (tap.py:649-657)
-            msg.trace.filter(t => Option(t.get("type")).exists(_.asText == "ERROR")).foreach { t =>
-              throw new RuntimeException(
-                s"connector error: ${Option(t.get("error")).map(_.toString).getOrElse(t.toString)}")
-            }
-          case AirbyteMessageType.CONTROL => // no-op, tap.py:885-886
-          case _                          => // unknown → warn-and-continue
-        }
+      runStreaming(args.toSeq) {
+        case AirbyteMessage.Record(Some(stream), Some(data))
+            if selected.contains(stream) => // consumer-side skip, tap.py:786-788
+          val w = writerFor(stream)
+          w.write(data); w.newLine()
+        case _: AirbyteMessage.Record => // unselected, or no stream or data to route
+        case msg: AirbyteMessage.Tree =>
+          msg.msgType match {
+            case AirbyteMessageType.STATE =>
+              msg.state.foreach(state.merge)
+            case AirbyteMessageType.LOG => // route to log4j; INFO-level
+            case AirbyteMessageType.TRACE =>
+              // TRACE ERROR → fail fast with the connector's message (tap.py:649-657)
+              msg.trace.filter(t => Option(t.get("type")).exists(_.asText == "ERROR")).foreach { t =>
+                throw new RuntimeException(
+                  s"connector error: ${Option(t.get("error")).map(_.toString).getOrElse(t.toString)}")
+              }
+            case AirbyteMessageType.CONTROL => // no-op, tap.py:885-886
+            case _                          => // unknown → warn-and-continue
+          }
       }
     } finally writers.values.foreach(_.close())
 
@@ -137,13 +139,14 @@ final class SubprocessSource(
   }
 
   /** Run the connector with `args`, stream-parse stdout line-by-line.
-    * Non-zero exit or early EOF raises with the captured stderr tail
-    * (kill-on-early-exit semantics of reference `tap.py:626-642`).
+    * stderr drains on its own thread, so a connector that writes more
+    * than a pipe buffer there cannot block its stdout. Non-zero exit or
+    * early EOF raises with the stderr tail (kill-on-early-exit semantics
+    * of reference `tap.py:626-642`).
     */
   private def runStreaming(args: Seq[String])(handle: AirbyteMessage => Unit): Unit = {
-    val pb = new ProcessBuilder((command ++ args): _*)
-    pb.redirectErrorStream(false)
-    val proc = pb.start()
+    val proc = new ProcessBuilder((command ++ args): _*).start()
+    val err = new StderrTail(proc.getErrorStream)
     val out = new BufferedReader(new InputStreamReader(proc.getInputStream, StandardCharsets.UTF_8))
     try {
       var line = out.readLine()
@@ -152,10 +155,8 @@ final class SubprocessSource(
         line = out.readLine()
       }
       val code = proc.waitFor()
-      if (code != 0) {
-        val err = new String(proc.getErrorStream.readNBytes(8192), StandardCharsets.UTF_8)
-        throw new RuntimeException(s"connector exited $code: $err")
-      }
+      val tail = err.join()
+      if (code != 0) throw new RuntimeException(s"connector exited $code: $tail")
     } catch {
       case e: Throwable =>
         if (proc.isAlive) proc.destroyForcibly()
@@ -165,9 +166,44 @@ final class SubprocessSource(
 
   private def runForMessage(
       args: Seq[String],
-      want: AirbyteMessageType.Value): Option[AirbyteMessage] = {
-    var found: Option[AirbyteMessage] = None
-    runStreaming(args) { msg => if (msg.msgType == want && found.isEmpty) found = Some(msg) }
+      want: AirbyteMessageType.Value): Option[AirbyteMessage.Tree] = {
+    var found: Option[AirbyteMessage.Tree] = None
+    runStreaming(args) {
+      case msg: AirbyteMessage.Tree if msg.msgType == want && found.isEmpty => found = Some(msg)
+      case _ =>
+    }
     found
+  }
+}
+
+/** A child process's stderr, drained on a daemon thread so the child never
+  * blocks on a full pipe; keeps the last 8 KiB for error messages.
+  */
+private[sources] final class StderrTail(in: InputStream) {
+  private val limit = 8192
+  private val ring = new Array[Byte](limit)
+  private var total = 0L
+  private val drain = new Thread(() => {
+    val buf = new Array[Byte](4096)
+    try {
+      var n = in.read(buf)
+      while (n >= 0) {
+        var i = 0
+        while (i < n) { ring(((total + i) % limit).toInt) = buf(i); i += 1 }
+        total += n
+        n = in.read(buf)
+      }
+    } catch { case _: java.io.IOException => } // stream closed under us: keep what we have
+    finally in.close()
+  }, "connector-stderr")
+  drain.setDaemon(true)
+  drain.start()
+
+  /** Wait for stderr to reach EOF; its last 8 KiB as UTF-8 text. */
+  def join(): String = {
+    drain.join()
+    val start = if (total > limit) (total % limit).toInt else 0
+    val bytes = ring.drop(start) ++ ring.take(start)
+    new String(bytes, 0, math.min(total, limit.toLong).toInt, StandardCharsets.UTF_8)
   }
 }

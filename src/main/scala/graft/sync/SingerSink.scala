@@ -1,9 +1,14 @@
 package graft.sync
 
+import org.apache.spark.FutureAction
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.JsonSchemaConverter
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Singer-protocol output: SCHEMA + RECORD (+ STATE) JSONL, matching the
   * reference's emitted shape (reference `tap_airbyte/tap.py:62-77`,
@@ -42,6 +47,11 @@ object SingerSink {
       JsonSchemaConverter.toJsonSchemaNode(coerce(df).schema),
       keyProperties).toJson
 
+  /** How every line of [[recordLines]] starts, and no SCHEMA or STATE
+    * line does: the test for "this emitted line is a RECORD".
+    */
+  final val RecordPrefix = "{\"type\":\"RECORD\""
+
   /** RECORD lines as a Dataset[String] — distributed; write with
     * `ds.write.text` or collect for golden tests. `timeExtracted` is a
     * fixed value (volatile in the reference, scrubbed by its own tests) so
@@ -52,8 +62,7 @@ object SingerSink {
     val c = coerce(df)
     c.select(
       concat(
-        lit(s"""{"type":"RECORD","stream":"""),
-        lit("\"" + stream + "\","),
+        lit(RecordPrefix + ",\"stream\":\"" + stream + "\","),
         lit(""""record":"""),
         to_json(struct(c.columns.map(n => col(s"`$n`")).toSeq: _*)),
         lit(s""","time_extracted":"$timeExtracted"}""")).as("line"))
@@ -70,13 +79,24 @@ object SingerSink {
     * single ordered pass — SCHEMA, RECORDs, final STATE). For production
     * sinks use `recordLines(...).write.text(path)` instead of collecting.
     *
+    * RECORDs arrive through an ordered drain: one job per partition,
+    * submitted from the calling thread (so its job group and other local
+    * properties attribute the jobs), with up to `defaultParallelism`
+    * partitions computing at once and each delivered to `out` whole and
+    * strictly in partition order — the order `collect()` gives. The driver
+    * therefore holds up to `defaultParallelism` partitions of lines at a
+    * time, each job's result still bounded by `spark.driver.maxResultSize`.
+    * When `out` throws or a job fails, every job still outstanding is
+    * cancelled before `emit` returns or rethrows.
+    *
     * Returns `false` when the downstream consumer closed mid-stream
     * (broken pipe): emission stops cleanly, no exception escapes, and the
     * caller still owns a consistent `state` to persist — the reference's
     * graceful-EPIPE semantics (`tap.py:62-80`, which special-cases
     * BrokenPipeError ONLY). Other IOExceptions (disk full, fetch
     * failures) propagate — swallowing them would commit bookmarks for
-    * records that were never delivered.
+    * records that were never delivered — and so does a failed job, after
+    * the partitions before it were delivered.
     */
   def emit(
       stream: String,
@@ -89,7 +109,7 @@ object SingerSink {
     try {
       out(schemaMessage(stream, df, keyProperties))
       val ordered = if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*) else df
-      recordLines(stream, ordered, timeExtracted).toLocalIterator().forEachRemaining(l => out(l))
+      drainInOrder(recordLines(stream, ordered, timeExtracted).rdd, out)
       out(graft.protocol.SingerMessage.State(state.snapshot).toJson)
       true
     } catch {
@@ -97,4 +117,34 @@ object SingerSink {
       case e: java.io.IOException
           if Option(e.getMessage).exists(_.toLowerCase.contains("broken pipe")) => false
     }
+
+  /** Every line of `lines` to `out`, partition by partition in order, with
+    * up to `defaultParallelism` single-partition jobs in flight.
+    */
+  private def drainInOrder(lines: RDD[String], out: String => Unit): Unit = {
+    val sc = lines.sparkContext
+    val n = lines.getNumPartitions
+    val window = math.max(1, sc.defaultParallelism)
+    val parts = new Array[Array[String]](n)
+    val jobs = new Array[FutureAction[Unit]](n)
+    var submitted = 0
+    try {
+      for (p <- 0 until n) {
+        while (submitted < n && submitted < p + window) {
+          val q = submitted
+          jobs(q) = sc.submitJob(lines, (it: Iterator[String]) => it.toArray, Seq(q),
+            (_: Int, a: Array[String]) => parts(q) = a, ())
+          submitted += 1
+        }
+        Await.result(jobs(p), Duration.Inf)
+        val part = parts(p)
+        parts(p) = null
+        part.foreach(out)
+      }
+    } finally {
+      val outstanding = jobs.filter(j => j != null && !j.isCompleted)
+      outstanding.foreach(_.cancel())
+      outstanding.foreach(Await.ready(_, Duration.Inf))
+    }
+  }
 }

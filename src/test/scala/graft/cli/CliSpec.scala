@@ -104,4 +104,18 @@ class CliSpec extends SparkSpec {
     // doubled the accumulator — the observe-based count must not
     assert(acc.value == 1234L, s"stream was computed ${acc.value / 1234.0}x")
   }
+
+  test("emitSinger: a stream's count is its RECORD lines, even with a column named RECORD") {
+    import spark.implicits._
+    val state = new graft.state.StateStore()
+    state.setBookmark("events", "RECORD", "2")
+    val events = Seq((1L, "a"), (2L, "b")).toDF("RECORD", "name")
+    val nation = Seq(7L).toDF("n_nationkey")
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    val counts = Main.emitSinger(Seq("events" -> events, "nation" -> nation),
+      _ => Seq("RECORD"), state, lines += _)
+    // SCHEMA and STATE lines mention "RECORD" (column, key, bookmark)
+    assert(lines.count(l => !l.startsWith("{\"type\":\"RECORD\"") && l.contains("\"RECORD\"")) == 4)
+    assert(counts == Seq("events" -> 2L, "nation" -> 1L))
+  }
 }

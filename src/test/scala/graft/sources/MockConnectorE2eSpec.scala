@@ -5,6 +5,8 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.SparkSpec
 import graft.state.StateStore
 import graft.sync.{SingerSink, SyncEngine}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 
 import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
@@ -29,7 +31,7 @@ import scala.jdk.CollectionConverters._
   * Singer STATE line carry the FOLDED composite (stronger than the
   * reference's empty-state tail — state-merge drift fails too).
   */
-class MockConnectorE2eSpec extends SparkSpec {
+class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
   private val m = new ObjectMapper()
   private val singerPath = "/root/reference/tests/fixtures/KPHX.singer"
 
@@ -174,5 +176,54 @@ class MockConnectorE2eSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("exited 3"), e.getMessage)
     assert(e.getMessage.contains("disk on fire"), s"stderr tail must surface: ${e.getMessage}")
+  }
+
+  test("200 KB of stderr before the first RECORD neither blocks nor fails the read") {
+    val dir = Files.createTempDirectory("mockconnstderr")
+    val catalogMsg =
+      """{"type":"CATALOG","catalog":{"streams":[{"name":"test","json_schema":
+        |{"type":"object","properties":{"id":{"type":["integer","null"]}}},
+        |"supported_sync_modes":["full_refresh"]}]}}""".stripMargin.replace("\n", "")
+    val cmd = writeMock(dir, catalogMsg, Seq.empty)
+    val pidFile = dir.resolve("pid")
+    // 2000 lines of 100 bytes: three times a 64 KiB pipe buffer
+    Files.writeString(dir.resolve("connector.sh"),
+      s"""#!/bin/sh
+         |case "$$1" in
+         |  discover) cat '${dir.resolve("catalog_msg.jsonl")}' ;;
+         |  read)
+         |    echo $$$$ > '$pidFile'
+         |    i=0
+         |    while [ $$i -lt 2000 ]; do
+         |      echo "${"w" * 80} line $$i of stderr" >&2
+         |      i=$$((i + 1))
+         |    done
+         |    echo '{"type":"RECORD","record":{"stream":"test","data":{"id":1}}}'
+         |    echo "last words" >&2 ;;
+         |esac
+         |""".stripMargin)
+    val source = new SubprocessSource(cmd, m.createObjectNode(), dir.resolve("work"))
+    val rows = MockConnectorE2eSpec.bounded(pidFile) {
+      new SyncEngine(source).sync(spark, _ == "test", _ => "FULL_TABLE", new StateStore())("test")
+        .collect().map(_.getLong(0)).toSeq
+    }
+    assert(rows == Seq(1L))
+  }
+}
+
+object MockConnectorE2eSpec extends TimeLimits {
+  implicit private val signaler: Signaler = ThreadSignaler
+
+  /** `body` on another thread, failed after 60 s rather than hung: a reader
+    * deadlocked on the connector's pipes is freed by killing the connector
+    * whose pid its script wrote to `pidFile`.
+    */
+  def bounded[T](pidFile: Path)(body: => T): T = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val f = Future(body)(ExecutionContext.global)
+    try failAfter(60.seconds)(Await.result(f, Duration.Inf))
+    finally if (!f.isCompleted && Files.exists(pidFile))
+      java.lang.ProcessHandle.of(Files.readString(pidFile).trim.toLong).ifPresent(p => { p.destroyForcibly(); () })
   }
 }

@@ -64,4 +64,27 @@ class PipedConnectorSourceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("exited 3") || Option(e.getCause).exists(_.getMessage.contains("exited 3")))
   }
+
+  test("200 KB of stderr before the first RECORD neither blocks nor fails the task") {
+    val dir = Files.createTempDirectory("pipedstderr")
+    val script = dir.resolve("noisy.sh")
+    val pidFile = dir.resolve("pid")
+    Files.writeString(script,
+      s"""#!/bin/sh
+         |echo $$$$ > '$pidFile'
+         |i=0
+         |while [ $$i -lt 2000 ]; do
+         |  echo "${"w" * 80} line $$i of stderr" >&2
+         |  i=$$((i + 1))
+         |done
+         |echo '{"type":"RECORD","record":{"stream":"s1","data":{"id":1,"seg":0}}}'
+         |""".stripMargin)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("seg", IntegerType)))
+    val ids = MockConnectorE2eSpec.bounded(pidFile) {
+      PipedConnectorSource.records(
+        PipedConnectorSource.readMessages(spark, Seq(Seq("/bin/sh", script.toString))), "s1", schema)
+        .collect().map(_.getLong(0)).toSeq
+    }
+    assert(ids == Seq(1L))
+  }
 }

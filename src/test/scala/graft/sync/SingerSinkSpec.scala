@@ -2,8 +2,12 @@ package graft.sync
 
 import graft.SparkSpec
 import graft.state.StateStore
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -71,5 +75,74 @@ class SingerSinkSpec extends SparkSpec {
     val n = m.readTree(line)
     assert(n.get("record").get("v").asDouble == 2.5)
     assert(n.get("time_extracted").asText == "1970-01-01T00:00:00Z")
+  }
+
+  private val ts = "1970-01-01T00:00:00.000000Z"
+
+  /** The RECORD lines `emit` delivers for `df`, after checking it completed. */
+  private def emittedRecords(df: DataFrame, orderBy: Seq[String] = Seq.empty): Seq[String] = {
+    val lines = ArrayBuffer.empty[String]
+    assert(SingerSink.emit("s", df, Seq("id"), new StateStore(), lines += _, orderBy = orderBy))
+    lines.slice(1, lines.size - 1).toSeq
+  }
+
+  test("ordered drain: RECORD lines arrive in collect() order over 8+ partitions") {
+    val df = spark.range(0, 2000, 1, 9).select(col("id"), (col("id") * 7919 % 2003).as("k"))
+    val plain = SingerSink.recordLines("s", df, ts)
+    assert(plain.rdd.getNumPartitions == 9)
+    assert(emittedRecords(df) == plain.collect().toSeq)
+
+    // orderBy: a range shuffle into 8 partitions, none coalesced away
+    val conf = Seq("spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val sorted = SingerSink.recordLines("s", df.orderBy("k"), ts)
+      assert(sorted.rdd.getNumPartitions == 8)
+      val lines = emittedRecords(df, orderBy = Seq("k"))
+      assert(lines == sorted.collect().toSeq)
+      val ks = lines.map(l => m.readTree(l).get("record").get("k").asLong)
+      assert(ks.size == 2000 && ks == ks.sorted)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  test("downstream close cancels the partitions still computing; no job is left running") {
+    // every partition after the first takes 10 s unless its task is killed
+    val slow = udf { (id: Long) =>
+      var i = 0
+      while (id >= 10 && i < 100 && !TaskContext.get().isInterrupted()) { Thread.sleep(10); i += 1 }
+      id
+    }
+    val df = spark.range(0, 80, 1, 8).select(slow(col("id")).as("id"))
+    val lines = ArrayBuffer.empty[String]
+    val completed = SingerSink.emit("s", df, Seq("id"), new StateStore(), { l =>
+      if (lines.size == 3) throw new SingerSink.DownstreamClosedException()
+      lines += l
+      ()
+    })
+    assert(!completed)
+    assert(lines.size == 3) // SCHEMA + 2 RECORDs of partition 0
+    eventually(timeout(3.seconds), interval(20.millis)) {
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    }
+  }
+
+  test("a task failing in the last partition surfaces after the earlier partitions were delivered") {
+    val boom = udf { (id: Long) =>
+      if (id == 79) throw new IllegalStateException("boom in the last partition")
+      id
+    }
+    val df = spark.range(0, 80, 1, 8).select(boom(col("id")).as("id"))
+    val lines = ArrayBuffer.empty[String]
+    val e = intercept[org.apache.spark.SparkException] {
+      SingerSink.emit("s", df, Seq("id"), new StateStore(), lines += _)
+    }
+    assert(e.getMessage.contains("boom in the last partition"), e.getMessage)
+    assert(lines.size == 1 + 70) // SCHEMA + partitions 0-6, in order; no STATE
+    assert(lines.tail.map(l => m.readTree(l).get("record").get("id").asLong) == (0L until 70L))
   }
 }
