@@ -2,14 +2,16 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json}
 import graft.catalog.{AirbyteCatalog, ConfiguredCatalog}
 import graft.protocol.{AirbyteMessage, AirbyteMessageType}
 import graft.state.StateStore
 
-import java.io.{BufferedReader, BufferedWriter, InputStream, InputStreamReader}
+import java.io.{BufferedOutputStream, InputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
+import java.util.Arrays
+import java.util.concurrent.{ArrayBlockingQueue, CompletableFuture, ExecutionException, ExecutorService,
+  Executors, Future, FutureTask}
 import scala.collection.mutable
 
 /** Subprocess-backed source: an external connector program speaking the
@@ -20,29 +22,47 @@ import scala.collection.mutable
   *
   * Spark-first demultiplexing: instead of per-stream in-memory queues +
   * consumer threads (reference `tap.py:793-888`, whose unbounded queues are
-  * its known scalability limit), the driver streams the child's stdout ONCE,
-  * routing RECORD lines to one spill file per stream (bounded memory: we
-  * hold one line at a time), folding STATE into a [[StateStore]], and
-  * fail-fasting on TRACE ERROR (reference `tap.py:649-657`). Each line gets
-  * one streaming parse ([[AirbyteMessage.parse]]); a RECORD's `data` is
-  * written to the spill file as the raw text the connector sent, never
-  * parsed into a tree or re-serialized. stderr drains on a daemon thread
-  * into an 8 KiB tail, so a chatty connector cannot fill its stderr pipe
-  * and stall stdout; the tail is joined before the exit-code check and
-  * carried in its error. Each spill file then becomes a typed DataFrame
-  * via `from_json` with the discovered schema, so downstream transforms
-  * are columnar and distributed.
+  * its known scalability limit), the driver streams the child's stdout ONCE
+  * as bytes. A reader thread cuts it into blocks of up to 1 MiB at line
+  * ends (a line longer than that grows its block up to the line's end; a
+  * block is cut early when the pipe has nothing more to give, so a slow
+  * connector's messages are not held back) and queues each for a fixed
+  * pool of `availableProcessors` daemon threads, which split it into lines
+  * exactly where `BufferedReader.readLine` would (`\n`, `\r` or `\r\n`) and
+  * parse each with the byte core of [[AirbyteMessage.parse]]. At most
+  * 2 × threads blocks are in flight. The calling thread applies the parsed
+  * blocks strictly in block order, so messages take effect in the order
+  * the connector wrote them, and never waits on the pipe itself: a RECORD's
+  * `data` bytes are appended to its stream's spill file as the connector
+  * sent them (never parsed into a tree or re-serialized; a `data` that is
+  * not a JSON object is spilled as `null`), STATE folds into a
+  * [[StateStore]], and a TRACE ERROR fails fast (reference
+  * `tap.py:649-657`), killing the child before any later message is
+  * applied. An exception in a parsing thread reaches the caller as itself,
+  * and the child is destroyed. `spec`, `check` and `discover`
+  * run through the same loop. stderr drains on a daemon thread into an
+  * 8 KiB tail, so a chatty connector cannot fill its stderr pipe and stall
+  * stdout; the tail is joined before the exit-code check and carried in
+  * its error.
+  *
+  * Spill files are named by the stream's index in the configured catalog
+  * ([[SubprocessSource.spillFile]]), never by the connector's stream name.
+  * Each becomes a typed DataFrame through Spark's JSON file source with the
+  * discovered schema, which hands Jackson's byte parser each line's bytes,
+  * so downstream transforms are columnar and distributed.
   *
   * Scale note: a single connector process is inherently a single producer —
   * same as the reference. The scale-out path for many connectors/segments is
   * one spill dir per (connector, segment) read in parallel as a multi-file
-  * `spark.read`; the per-partition analog is `RDD.pipe`. The demux itself is
-  * I/O-bound line routing and never materializes the dataset in memory.
+  * `spark.read`; the per-partition analog is `RDD.pipe`. The demux itself
+  * holds a bounded number of blocks and never materializes the dataset in
+  * memory.
   */
 final class SubprocessSource(
     command: Seq[String],
     config: JsonNode,
     workDir: Path) extends AirbyteSource {
+  import SubprocessSource._
 
   private val mapper = new ObjectMapper()
 
@@ -78,20 +98,26 @@ final class SubprocessSource(
       args ++= Seq("--state", statePath.toString)
     }
 
-    val selected = configured.map(_.stream.name).toSet
-    val spillDir = Files.createDirectories(workDir.resolve("spill"))
-    val writers = mutable.Map.empty[String, BufferedWriter]
-    def writerFor(stream: String): BufferedWriter =
-      writers.getOrElseUpdate(stream,
-        Files.newBufferedWriter(spillDir.resolve(s"$stream.jsonl"), StandardCharsets.UTF_8))
+    // consumer-side selection (tap.py:786-788): unselected streams have no index
+    val index = configured.map(_.stream.name).zipWithIndex.toMap
+    Files.createDirectories(workDir.resolve("spill"))
+    val spills = new Array[OutputStream](configured.size)
+    def spillFor(i: Int): OutputStream = {
+      if (spills(i) == null)
+        spills(i) = new BufferedOutputStream(Files.newOutputStream(spillFile(workDir, i)), 1 << 16)
+      spills(i)
+    }
 
     try {
       runStreaming(args.toSeq) {
-        case AirbyteMessage.Record(Some(stream), Some(data))
-            if selected.contains(stream) => // consumer-side skip, tap.py:786-788
-          val w = writerFor(stream)
-          w.write(data); w.newLine()
-        case _: AirbyteMessage.Record => // unselected, or no stream or data to route
+        case r: AirbyteMessage.Record =>
+          for (s <- r.stream; i <- index.get(s) if r.hasData) {
+            val out = spillFor(i)
+            // The JSON source would read a top-level array as one row per
+            // element (none for `[]`): `null` keeps one all-null row.
+            if (r.dataIsObject) r.writeData(out) else out.write(NullBytes)
+            out.write('\n')
+          }
         case msg: AirbyteMessage.Tree =>
           msg.msgType match {
             case AirbyteMessageType.STATE =>
@@ -107,23 +133,17 @@ final class SubprocessSource(
             case _                          => // unknown → warn-and-continue
           }
       }
-    } finally writers.values.foreach(_.close())
+    } finally spills.foreach(s => if (s != null) s.close())
 
     configured.map { entry =>
-      val name = entry.stream.name
-      val path = spillDir.resolve(s"$name.jsonl")
+      val i = index(entry.stream.name)
       val df: DataFrame =
-        if (!Files.exists(path)) spark.createDataFrame(
+        if (spills(i) == null) spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], entry.stream.sparkSchema)
-        else {
-          import spark.implicits._
-          // Typed parse with the DISCOVERED schema (not inference): mirrors
-          // the reference trusting connector discovery (tap.py:909-913).
-          spark.read.textFile(path.toString)
-            .select(from_json(col("value"), entry.stream.sparkSchema).as("r"))
-            .select("r.*")
-        }
-      name -> df
+        // Typed parse with the DISCOVERED schema (not inference): mirrors
+        // the reference trusting connector discovery (tap.py:909-913).
+        else spark.read.schema(entry.stream.sparkSchema).json(spillFile(workDir, i).toString)
+      entry.stream.name -> df
     }.toMap
   }
 
@@ -138,22 +158,18 @@ final class SubprocessSource(
     p
   }
 
-  /** Run the connector with `args`, stream-parse stdout line-by-line.
-    * stderr drains on its own thread, so a connector that writes more
-    * than a pipe buffer there cannot block its stdout. Non-zero exit or
-    * early EOF raises with the stderr tail (kill-on-early-exit semantics
-    * of reference `tap.py:626-642`).
+  /** Run the connector with `args` and hand every message on its stdout to
+    * `handle`, in order, on the calling thread (the block demux described
+    * on the class). Non-zero exit raises with the stderr tail; any failure,
+    * `handle`'s included, destroys the child first (kill-on-early-exit
+    * semantics of reference `tap.py:626-642`).
     */
   private def runStreaming(args: Seq[String])(handle: AirbyteMessage => Unit): Unit = {
     val proc = new ProcessBuilder((command ++ args): _*).start()
     val err = new StderrTail(proc.getErrorStream)
-    val out = new BufferedReader(new InputStreamReader(proc.getInputStream, StandardCharsets.UTF_8))
+    val out = proc.getInputStream
     try {
-      var line = out.readLine()
-      while (line != null) {
-        AirbyteMessage.parse(line).foreach(handle)
-        line = out.readLine()
-      }
+      demux(out, handle)
       val code = proc.waitFor()
       val tail = err.join()
       if (code != 0) throw new RuntimeException(s"connector exited $code: $tail")
@@ -173,6 +189,109 @@ final class SubprocessSource(
       case _ =>
     }
     found
+  }
+}
+
+object SubprocessSource {
+
+  /** The spill file of the `i`-th configured stream under a source's work
+    * dir. Named by index, not by the connector's stream name: Spark's file
+    * listing hides a name starting with `_` or `.`, reads a name with glob
+    * characters as a pattern, and a `/` or `..` would leave the spill dir.
+    */
+  def spillFile(workDir: Path, i: Int): Path = workDir.resolve("spill").resolve(s"s$i.jsonl")
+
+  private val NullBytes = "null".getBytes(StandardCharsets.US_ASCII)
+  private val BlockSize = 1 << 20
+  private val threads = Runtime.getRuntime.availableProcessors
+  private val EndOfStream: Future[Array[AirbyteMessage]] = CompletableFuture.completedFuture(Array.empty)
+
+  private lazy val pool: ExecutorService = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+    val t = new Thread(r, "connector-demux")
+    t.setDaemon(true)
+    t
+  })
+
+  /** Every message of `in`, parsed block-parallel and handed to `handle`
+    * in stream order on the calling thread. A reader thread cuts the
+    * blocks, so `handle` never waits behind a read from the pipe; when
+    * `handle` or a parse throws, the blocks still queued are cancelled and
+    * the reader stops at its next block.
+    */
+  private def demux(in: InputStream, handle: AirbyteMessage => Unit): Unit = {
+    val parsed = new ArrayBlockingQueue[Future[Array[AirbyteMessage]]](2 * threads)
+    val reader = new Thread(() =>
+      try {
+        readBlocks(in) { block =>
+          val task = new FutureTask(() => parseLines(block))
+          parsed.put(task)
+          pool.execute(task)
+        }
+        parsed.put(EndOfStream)
+      } catch {
+        case _: InterruptedException => // the calling thread stopped taking blocks
+        case e: Throwable =>
+          try parsed.put(CompletableFuture.failedFuture(e))
+          catch { case _: InterruptedException => }
+      }, "connector-stdout")
+    reader.setDaemon(true)
+    reader.start()
+    try {
+      var next = parsed.take()
+      while (next ne EndOfStream) {
+        val msgs =
+          try next.get()
+          catch { case e: ExecutionException => throw e.getCause }
+        msgs.foreach(handle)
+        next = parsed.take()
+      }
+    } finally {
+      reader.interrupt()
+      parsed.forEach(f => { f.cancel(true); () })
+    }
+  }
+
+  /** Cuts `in` into blocks that end at a line end: `BlockSize` bytes or
+    * less, fewer when the pipe has nothing more to give (so a slow
+    * connector's lines are not held back), and more when one line is
+    * longer than that, which grows the block up to the line's end.
+    */
+  private def readBlocks(in: InputStream)(emit: Array[Byte] => Unit): Unit = {
+    var buf = new Array[Byte](BlockSize)
+    var n = 0       // bytes held in buf
+    var lineEnd = 0 // just past the last line end in buf(0 until n), 0 when none
+    var eof = false
+    while (!eof) {
+      if (n == buf.length) buf = Arrays.copyOf(buf, buf.length * 2)
+      val r = in.read(buf, n, buf.length - n)
+      if (r < 0) { eof = true; lineEnd = n }
+      else {
+        var i = n + r
+        while (i > n && buf(i - 1) != '\n' && buf(i - 1) != '\r') i -= 1
+        if (i > n) lineEnd = i
+        n += r
+      }
+      if (lineEnd > 0 && (eof || n == buf.length || in.available() == 0)) {
+        emit(Arrays.copyOf(buf, lineEnd))
+        System.arraycopy(buf, lineEnd, buf, 0, n - lineEnd)
+        n -= lineEnd
+        lineEnd = 0
+        if (buf.length > BlockSize && n < BlockSize) buf = Arrays.copyOf(buf, BlockSize)
+      }
+    }
+  }
+
+  /** The messages of a block's lines, split at `\n`, `\r` and `\r\n`. */
+  private def parseLines(block: Array[Byte]): Array[AirbyteMessage] = {
+    val msgs = Array.newBuilder[AirbyteMessage]
+    var from = 0
+    while (from < block.length) {
+      var until = from
+      while (until < block.length && block(until) != '\n' && block(until) != '\r') until += 1
+      if (until > from) AirbyteMessage.parse(block, from, until).foreach(msgs += _)
+      from = until + 1
+    }
+    msgs.result()
   }
 }
 

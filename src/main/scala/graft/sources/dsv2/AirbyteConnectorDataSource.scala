@@ -276,13 +276,16 @@ final class ConnectorReaderFactory(schema: StructType) extends PartitionReaderFa
 
 /** Streams one connector child's stdout, converting RECORD messages of the
   * selected stream to InternalRows of the PRUNED schema — one line in
-  * memory at a time, fail-fast on non-zero exit.
+  * memory at a time, fail-fast on non-zero exit. stderr drains on a
+  * thread into an 8 KiB tail, so a chatty connector cannot block the
+  * task, and the tail is carried by the exit error.
   */
 final class ConnectorPartitionReader(partition: ConnectorInputPartition, schema: StructType)
     extends PartitionReader[InternalRow] {
 
   private val mapper = new ObjectMapper()
   private val proc = new ProcessBuilder(partition.command: _*).start()
+  private val err = new graft.sources.StderrTail(proc.getErrorStream)
   private val reader = new java.io.BufferedReader(
     new java.io.InputStreamReader(proc.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
   private var current: InternalRow = _
@@ -301,8 +304,9 @@ final class ConnectorPartitionReader(partition: ConnectorInputPartition, schema:
       val line = reader.readLine()
       if (line == null) {
         val code = proc.waitFor()
+        val tail = err.join()
         if (code != 0)
-          throw new RuntimeException(s"connector[${partition.index}] exited $code")
+          throw new RuntimeException(s"connector[${partition.index}] exited $code: $tail")
         return false
       }
       try {

@@ -1,5 +1,6 @@
 package graft.sync
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.FutureAction
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -22,6 +23,7 @@ import scala.concurrent.duration.Duration
   * only the envelope is per-row string concat (also codegen'd `concat`).
   */
 object SingerSink {
+  private val mapper = new ObjectMapper()
 
   /** Coerce a DataFrame to Singer-serializable columns (tap.py:48-59 policy). */
   def coerce(df: DataFrame): DataFrame = {
@@ -60,9 +62,11 @@ object SingerSink {
   def recordLines(stream: String, df: DataFrame, timeExtracted: String): Dataset[String] = {
     import df.sparkSession.implicits._
     val c = coerce(df)
+    // Jackson quotes the stream name, as it does in the SCHEMA line
+    val quoted = mapper.writeValueAsString(stream)
     c.select(
       concat(
-        lit(RecordPrefix + ",\"stream\":\"" + stream + "\","),
+        lit(RecordPrefix + ",\"stream\":" + quoted + ","),
         lit(""""record":"""),
         to_json(struct(c.columns.map(n => col(s"`$n`")).toSeq: _*)),
         lit(s""","time_extracted":"$timeExtracted"}""")).as("line"))

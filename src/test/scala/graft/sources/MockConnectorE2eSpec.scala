@@ -209,6 +209,197 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
     }
     assert(rows == Seq(1L))
   }
+
+  // ---- the stdout demux: block-parallel byte parse, ordered apply ----
+
+  private val idProps = """{"id":{"type":["null","integer"]},"v":{"type":["null","string"]}}"""
+
+  /** A RECORD line of `stream` with `data` (JSON text), quoted by Jackson. */
+  private def rec(stream: String, data: String): String = {
+    val n = m.createObjectNode()
+    n.put("type", "RECORD")
+    val r = n.putObject("record")
+    r.put("stream", stream)
+    r.set[JsonNode]("data", m.readTree(data))
+    m.writeValueAsString(n)
+  }
+
+  private def stateLine(stream: String, id: String): String =
+    s"""{"type":"STATE","state":{"type":"STREAM","stream":{"stream_descriptor":{"name":"$stream"},""" +
+      s""""stream_state":{"id":"$id"}}}}"""
+
+  /** A source whose connector discovers `names`, each with `properties`,
+    * and on `read` writes its pid to `dir/pid`, then `output` byte for
+    * byte, then runs the shell text `after`.
+    */
+  private def rawSource(dir: Path, names: Seq[String], properties: String, output: Array[Byte],
+      after: String = ""): SubprocessSource = {
+    val catalog = m.createObjectNode()
+    catalog.put("type", "CATALOG")
+    val streams = catalog.putObject("catalog").putArray("streams")
+    names.foreach { name =>
+      val st = streams.addObject()
+      st.put("name", name)
+      st.set[JsonNode]("json_schema", m.readTree(s"""{"type":"object","properties":$properties}"""))
+      st.putArray("supported_sync_modes").add("full_refresh")
+    }
+    Files.writeString(dir.resolve("catalog_msg.jsonl"), m.writeValueAsString(catalog) + "\n")
+    Files.write(dir.resolve("out.bin"), output)
+    val script = dir.resolve("connector.sh")
+    Files.writeString(script,
+      s"""#!/bin/sh
+         |case "$$1" in
+         |  discover) cat '${dir.resolve("catalog_msg.jsonl")}' ;;
+         |  read) echo $$$$ > '${dir.resolve("pid")}'; cat '${dir.resolve("out.bin")}'; $after ;;
+         |esac
+         |""".stripMargin)
+    new SubprocessSource(Seq("/bin/sh", script.toString), m.createObjectNode(), dir.resolve("work"))
+  }
+
+  private def lf(lines: Seq[String]): Array[Byte] = lines.mkString("", "\n", "\n").getBytes("UTF-8")
+
+  private def readAll(src: SubprocessSource, state: StateStore) =
+    src.read(spark, graft.catalog.ConfiguredCatalog.configure(src.discover(spark), _ => true), state)
+
+  /** `id` of every row, in spill-file order (the JSON source's splits of
+    * one file come back in offset order).
+    */
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").collect().map(_.getLong(0)).toSeq
+
+  test("streams named _users, a[1] and x/y each read their own rows") {
+    val names = Seq("_users", "a[1]", "x/y")
+    val lines = (1 to 3).flatMap(i => names.zipWithIndex.map { case (n, k) => rec(n, s"""{"id":${10 * k + i}}""") })
+    val dir = Files.createTempDirectory("spillnames")
+    val dfs = readAll(rawSource(dir, names, idProps, lf(lines)), new StateStore())
+    names.zipWithIndex.foreach { case (n, k) => assert(ids(dfs(n)) == (1 to 3).map(i => 10L * k + i), n) }
+    assert(Files.list(dir.resolve("work").resolve("spill")).count() == 3)
+  }
+
+  test("a 3 MiB RECORD grows its block; record order holds across blocks") {
+    val big = "x" * (3 << 20)
+    val lines = (1 to 20000).map(i => rec("s", s"""{"id":$i,"v":"${if (i == 7000) big else s"r$i"}"}"""))
+    val dfs = readAll(rawSource(Files.createTempDirectory("bigrecord"), Seq("s"), idProps, lf(lines)),
+      new StateStore())
+    assert(ids(dfs("s")) == (1L to 20000L))
+    val v = dfs("s").select("v").collect().map(_.getString(0))
+    assert(v(6999) == big && v(6998) == "r6999" && v(7000) == "r7001")
+  }
+
+  test("CRLF and CR line ends, blank lines and non-JSON noise split as readLine splits them") {
+    val out = Seq(
+      "starting connector...\r\n", "\r\n", rec("s", """{"id":1}""") + "\r\n",
+      "   \r\n", rec("s", """{"id":2}""") + "\r", rec("s", """{"id":3}""") + "\n",
+      "{not json}\r\n", stateLine("s", "3") + "\r\n", "\n", rec("s", """{"id":4}""")) // no final line end
+    val state = new StateStore()
+    val dfs = readAll(rawSource(Files.createTempDirectory("crlf"), Seq("s"), idProps,
+      out.mkString.getBytes("UTF-8")), state)
+    assert(ids(dfs("s")) == Seq(1L, 2L, 3L, 4L))
+    assert(state.bookmark("s", "id").contains("3"))
+  }
+
+  test("STATE folds in stream order across blocks: the bookmark is the last STATE") {
+    // 40 STATEs, each after 1000 RECORDs, with falling cursors: any other
+    // order of application leaves a different last STATE
+    val lines = (1 to 40).flatMap(k =>
+      (1 to 1000).map(i => rec("s", s"""{"id":${1000 * (k - 1) + i},"v":"${"p" * 60}"}""")) :+
+        stateLine("s", (41 - k).toString))
+    val state = new StateStore()
+    val dfs = readAll(rawSource(Files.createTempDirectory("statefold"), Seq("s"), idProps, lf(lines)), state)
+    assert(state.bookmark("s", "id").contains("1"))
+    assert(dfs("s").count() == 40000)
+  }
+
+  test("a TRACE ERROR in a late block raises, kills the child and folds no later STATE") {
+    val dir = Files.createTempDirectory("lateerror")
+    val lines = (1 to 30000).map(i => rec("s", s"""{"id":$i,"v":"${"p" * 60}"}""")) ++ Seq(
+      stateLine("s", "before"),
+      """{"type":"TRACE","trace":{"type":"ERROR","error":{"message":"quota exhausted"}}}""",
+      stateLine("s", "after"))
+    val marker = dir.resolve("ran-on")
+    val src = rawSource(dir, Seq("s"), idProps, lf(lines), s"sleep 30; touch '$marker'")
+    val cat = src.discover(spark)
+    val state = new StateStore()
+    val e = MockConnectorE2eSpec.bounded(dir.resolve("pid")) {
+      intercept[RuntimeException](src.read(spark, graft.catalog.ConfiguredCatalog.configure(cat, _ => true), state))
+    }
+    assert(e.getMessage.contains("quota exhausted"), e.getMessage)
+    assert(state.bookmark("s", "id").contains("before"))
+    val pid = Files.readString(dir.resolve("pid")).trim.toLong
+    // killed, it ends within seconds; left alone it would sleep 30 s first
+    java.lang.ProcessHandle.of(pid).ifPresent(h => { h.onExit().get(10, java.util.concurrent.TimeUnit.SECONDS); () })
+    assert(!Files.exists(marker))
+  }
+
+  test("RECORD data that is null, a scalar, [] or an array of objects gives one all-null row each") {
+    val shapes = Seq("null", "42", "\"text\"", "true", "[]", """[{"id":7},{"id":8}]""")
+    val lines = rec("s", """{"id":1,"v":"a"}""") +: shapes.map(d => rec("s", d)) :+ rec("s", """{"id":2}""")
+    val rows = readAll(rawSource(Files.createTempDirectory("datashapes"), Seq("s"), idProps, lf(lines)),
+      new StateStore())("s").collect()
+    assert(rows.length == shapes.size + 2)
+    assert(rows.head.getLong(0) == 1L && rows.last.getLong(0) == 2L)
+    rows.slice(1, shapes.size + 1).foreach(r => assert(r.isNullAt(0) && r.isNullAt(1), r))
+  }
+
+  test("JSON-source rows equal textFile + from_json rows of the raw data text") {
+    // RECORD and other lines of AirbyteMessageSpec's table, all for stream "s"
+    def r(body: String) = s"""{"type":"RECORD","record":{$body}}"""
+    val table = Seq(
+      r(""""stream":"s","data":{"a":1,"s":"x"},"emitted_at":1"""),
+      """{"record":{"data":{"a":2,"s":"y"},"stream":"s","emitted_at":5},"type":"RECORD"}""",
+      r(""""stream":"s","data":{"o":{"x":3,"y":[1,2,3]},"arr":[{"k":"v"},{"k":"w"}]}"""),
+      r(""""stream":"s","data":{"s":"a}b{c\"d\\","q":"[\"]{"}"""),
+      r("\"stream\":\"s\",\"data\":{\"s\":\"caf\\u00e9 \\ud83d\\ude00\",\"u\":\"naïve 日本 😀\"}"),
+      r(""""stream":"s","data":null"""),
+      r(""""stream":"s","data": [ {"a":1} , 2 ] """),
+      r(""""stream":"s","data":42"""),
+      r("\"stream\":\"s\",\"data\":\"text \\\"q\\\"\""),
+      r(""""stream":"s","data":true"""),
+      r(""""data":{"a":1}"""),
+      r(""""stream":"s""""),
+      """{"type":"RECORD","record":5}""",
+      r(""""stream":"a","data":{"a":1,"a":2},"stream":"s","data":{"a":3,"s":"z"}"""),
+      r(""""stream":"s","data":{"a":3,"a":4}"""),
+      """{"type":"RECORD","record":{"stream":"a","data":{"a":1}},"record":{"stream":"s","data":{"a":2}}}""",
+      """{"type":"STATE","type":"RECORD","record":{"stream":"s","data":{"a":7}}}""",
+      " \t " + r(""""stream":"s","data":{"a":8}""") + "  ",
+      r(""""stream":"s","data":{"a":9}""") + " trailing",
+      """{ "type" : "RECORD" , "record" : { "stream" : "s" , "data" : {"a":10} } }""",
+      r(""""stream":"s","data":{"a":"not a number","o":{"x":"1"},"arr":{"k":"v"}}"""),
+      r(""""stream":"s","data":{"d":1.0000000000000001,"a":1e3}"""),
+      """{"type":"RECORD","record":{"stream":"s","data":{"a":1""",
+      "starting connector...", """[{"type":"RECORD"}]""", """{type: RECORD}""", "   ",
+      """{"type":"FOO","record":{"stream":"s","data":{}}}""",
+      """{"type":"LOG","log":{"level":"INFO","message":"read {1} \"rows\""}}""")
+    val props =
+      """{"a":{"type":["null","integer"]},"s":{"type":["null","string"]},"q":{"type":["null","string"]},
+        |"u":{"type":["null","string"]},"d":{"type":["null","number"]},
+        |"o":{"type":["null","object"],"properties":{"x":{"type":["null","integer"]},
+        |"y":{"type":["null","array"],"items":{"type":["null","integer"]}}}},
+        |"arr":{"type":["null","array"],"items":{"type":["null","object"],"properties":{"k":{"type":["null","string"]}}}}}"""
+        .stripMargin.replace("\n", "")
+    val dir = Files.createTempDirectory("rowcheck")
+    val src = rawSource(dir, Seq("s"), props, lf(table))
+    val catalog = src.discover(spark)
+    val mine = src.read(spark, graft.catalog.ConfiguredCatalog.configure(catalog, _ => true),
+      new StateStore())("s").collect().toSeq
+
+    // The reference: each RECORD's raw `data` text, read as text lines
+    // and typed with `from_json`.
+    val texts = table.flatMap(l => graft.protocol.AirbyteMessage.parse(l)).collect {
+      case graft.protocol.AirbyteMessage.Record(Some("s"), Some(data)) => data
+    }
+    val refFile = dir.resolve("reference.jsonl")
+    Files.writeString(refFile, texts.mkString("", "\n", "\n"))
+    val schema = catalog.streams.head.sparkSchema
+    val ref = spark.read.textFile(refFile.toString)
+      .select(org.apache.spark.sql.functions.from_json(org.apache.spark.sql.functions.col("value"), schema).as("r"))
+      .select("r.*").collect().toSeq
+    assert(texts.size == 19)
+    assert(mine == ref)
+    // data null, an array, a number, a string and a boolean
+    assert(mine.count(r => (0 until r.length).forall(r.isNullAt)) == 5)
+  }
 }
 
 object MockConnectorE2eSpec extends TimeLimits {

@@ -239,6 +239,39 @@ class AirbyteConnectorDataSourceSpec extends SparkSpec {
     assert(!Files.exists(marker), "child ran to completion despite the limit")
   }
 
+  test("200 KB of stderr neither blocks the task nor hides from the exit error") {
+    val dir = Files.createTempDirectory("dsv2stderr")
+    val pidFile = dir.resolve("pid")
+    // `noise` lines of 100 bytes on stderr; 2000 are three times a 64 KiB pipe buffer
+    def segment(name: String, noise: Int, exit: Int): Seq[String] = {
+      val script = dir.resolve(name)
+      Files.writeString(script,
+        s"""#!/bin/sh
+           |echo $$$$ > '$pidFile'
+           |i=0
+           |while [ $$i -lt $noise ]; do
+           |  echo "${"w" * 80} line $$i of stderr" >&2
+           |  i=$$((i + 1))
+           |done
+           |echo '{"type":"RECORD","record":{"stream":"s1","data":{"id":1,"seg":0,"name":"a","score":1.0}}}'
+           |echo "disk on fire" >&2
+           |exit $exit
+           |""".stripMargin)
+      Seq("/bin/sh", script.toString)
+    }
+    def load(cmd: Seq[String]) =
+      spark.read.format("graft-airbyte").option("commands", commandsJson(Seq(cmd)))
+        .option("stream", "s1").schema(schema).load()
+    val ids = graft.sources.MockConnectorE2eSpec.bounded(pidFile) {
+      load(segment("noisy.sh", 2000, 0)).collect().map(_.getLong(0)).toSeq
+    }
+    assert(ids == Seq(1L))
+    val e = intercept[org.apache.spark.SparkException] {
+      graft.sources.MockConnectorE2eSpec.bounded(pidFile)(load(segment("failing.sh", 20, 3)).collect())
+    }
+    assert(e.getMessage.contains("exited 3") && e.getMessage.contains("disk on fire"), e.getMessage)
+  }
+
   test("limit is NOT pushed when a residual filter could drop rows") {
     val cmds = Seq(fakeSegment(4, 1 to 5))
     val df = spark.read.format("graft-airbyte")

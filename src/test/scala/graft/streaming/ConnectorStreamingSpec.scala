@@ -65,7 +65,7 @@ class ConnectorStreamingSpec extends SparkSpec {
     val src2 = new SubprocessSource(fakeConnector(work2, 9 to 12),
       new ObjectMapper().createObjectNode(), work2)
     src2.read(spark, ConfiguredCatalog.configure(src2.discover(spark), _ => true), state)
-    val spill2 = work2.resolve("spill").resolve("s1.jsonl")
+    val spill2 = SubprocessSource.spillFile(work2, 0) // s1, the only configured stream
     Files.copy(spill2, java.nio.file.Paths.get(landing, "s1_seg2.jsonl"))
     val q2 = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, s"$landing/*.jsonl", cat.streams.head.sparkSchema),

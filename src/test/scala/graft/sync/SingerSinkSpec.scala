@@ -77,6 +77,17 @@ class SingerSinkSpec extends SparkSpec {
     assert(n.get("time_extracted").asText == "1970-01-01T00:00:00Z")
   }
 
+  test("a stream name with a quote and a backslash is escaped in every RECORD envelope") {
+    val name = "a\"b\\c"
+    val lines = ArrayBuffer.empty[String]
+    assert(SingerSink.emit(name, Seq((1L, "x"), (2L, "y")).toDF("id", "v"), Seq("id"),
+      new StateStore(), lines += _, orderBy = Seq("id")))
+    val records = lines.filter(_.startsWith(SingerSink.RecordPrefix)).map(m.readTree)
+    assert(records.size == 2)
+    assert(records.forall(_.get("stream").asText == name))
+    assert(records.map(_.get("record").get("id").asLong) == Seq(1L, 2L))
+  }
+
   private val ts = "1970-01-01T00:00:00.000000Z"
 
   /** The RECORD lines `emit` delivers for `df`, after checking it completed. */
