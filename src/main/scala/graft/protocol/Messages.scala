@@ -2,7 +2,7 @@ package graft.protocol
 
 import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.node.{NullNode, ObjectNode}
 
 import java.io.OutputStream
 import java.nio.charset.StandardCharsets
@@ -31,10 +31,10 @@ object AirbyteMessage {
 
   /** A RECORD message: `record.stream` and `record.data`, the latter kept
     * as the byte span `[dataFrom, dataUntil)` of the parsed input — the
-    * connector's own UTF-8 text, never a tree. `data` is any JSON value
-    * (`null`, an array and a scalar included); `dataFrom` is -1 when the
-    * line has no `data`, and `stream` is None when it is missing or not a
-    * string. The record refers to the input bytes, so it lives only as
+    * connector's own UTF-8 text, a tree only when [[dataTree]] asks.
+    * `data` is any JSON value (`null`, an array and a scalar included);
+    * `dataFrom` is -1 when the line has no `data`, and `stream` is None
+    * when it is missing or not a string. The record refers to the input bytes, so it lives only as
     * long as they are left unchanged.
     */
   final class Record private[protocol] (
@@ -55,6 +55,10 @@ object AirbyteMessage {
 
     /** Writes the bytes of `data` to `out`. */
     def writeData(out: OutputStream): Unit = out.write(bytes, dataFrom, dataUntil - dataFrom)
+
+    /** A tree of `data` alone; a JSON null when the line has none. */
+    def dataTree: JsonNode =
+      if (dataFrom < 0) NullNode.instance else mapper.readTree(bytes, dataFrom, dataUntil - dataFrom)
   }
 
   object Record {
@@ -72,6 +76,13 @@ object AirbyteMessage {
     def connectionStatus: Option[JsonNode] = Option(payload.get("connectionStatus"))
     def log: Option[JsonNode]     = Option(payload.get("log"))
     def trace: Option[JsonNode]   = Option(payload.get("trace"))
+
+    /** For a TRACE of type ERROR, its `error` (the whole trace when it has
+      * none) as JSON text.
+      */
+    def traceError: Option[String] =
+      if (msgType != AirbyteMessageType.TRACE) None
+      else trace.filter(_.path("type").asText == "ERROR").map(t => Option(t.get("error")).getOrElse(t).toString)
   }
 
   private val mapper = new ObjectMapper()

@@ -1,6 +1,8 @@
 package graft.sources.dsv2
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.protocol.AirbyteMessage
+import graft.sources.ConnectorProcess
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -24,9 +26,10 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Each command segment becomes ONE `InputPartition`, so N connector
-  * invocations execute as N Spark tasks streaming their stdout lazily —
-  * the same topology as [[graft.sources.PipedConnectorSource]] but through
-  * the engine-native connector API, which buys: catalog integration,
+  * invocations execute as N Spark tasks streaming their stdout lazily
+  * through the one connector lifecycle, [[graft.sources.ConnectorProcess]]
+  * — the distributed path of the connector source, through the
+  * engine-native connector API, which buys: catalog integration,
   * genuine `SupportsPushDownRequiredColumns` (deselected record fields are
   * never materialized into rows — stream-map projection pushed INTO the
   * source, the DSv2 analog of the reference's stream-granularity
@@ -129,10 +132,8 @@ final class ConnectorScanBuilder(fullSchema: StructType, options: Map[String, St
         case None => throw new IllegalArgumentException("graft-airbyte: option commands required")
       }
       JsonRowConverter.validateSupported(required)
-      commands.zipWithIndex.map { case (cmd, i) =>
-        ConnectorInputPartition(i, cmd, options.getOrElse("stream", ""),
-          pushed.toSeq, limit)
-      }.toArray
+      commands.map(cmd =>
+        ConnectorInputPartition(cmd, options.getOrElse("stream", ""), pushed.toSeq, limit)).toArray
     }
 
     override def createReaderFactory(): PartitionReaderFactory =
@@ -262,7 +263,6 @@ object ConnectorFilterEval {
 }
 
 final case class ConnectorInputPartition(
-    index: Int,
     command: Seq[String],
     stream: String,
     filters: Seq[Filter] = Seq.empty,
@@ -274,20 +274,18 @@ final class ConnectorReaderFactory(schema: StructType) extends PartitionReaderFa
     new ConnectorPartitionReader(partition.asInstanceOf[ConnectorInputPartition], schema)
 }
 
-/** Streams one connector child's stdout, converting RECORD messages of the
-  * selected stream to InternalRows of the PRUNED schema — one line in
-  * memory at a time, fail-fast on non-zero exit. stderr drains on a
-  * thread into an 8 KiB tail, so a chatty connector cannot block the
-  * task, and the tail is carried by the exit error.
+/** Streams one connector child's stdout through a [[ConnectorProcess]],
+  * converting RECORD messages of the selected stream to InternalRows of the
+  * PRUNED schema: each such RECORD builds one tree of its `data` alone,
+  * which the pushed filters and the row conversion share. A TRACE ERROR or
+  * a non-zero exit (with the stderr tail) fails the task. Spark closes
+  * every reader from a task-completion listener, and closing kills the
+  * connector and its descendants.
   */
 final class ConnectorPartitionReader(partition: ConnectorInputPartition, schema: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val mapper = new ObjectMapper()
-  private val proc = new ProcessBuilder(partition.command: _*).start()
-  private val err = new graft.sources.StderrTail(proc.getErrorStream)
-  private val reader = new java.io.BufferedReader(
-    new java.io.InputStreamReader(proc.getInputStream, java.nio.charset.StandardCharsets.UTF_8))
+  private val connector = new ConnectorProcess(partition.command)
   private var current: InternalRow = _
   private var emitted: Long = 0L
 
@@ -297,46 +295,23 @@ final class ConnectorPartitionReader(partition: ConnectorInputPartition, schema:
     // draining the rest of the stream (exact — limits are only pushed
     // when no post-scan filter could drop an emitted row)
     if (partition.limit >= 0 && emitted >= partition.limit) {
-      if (proc.isAlive) { proc.destroyForcibly(); () }
+      connector.close()
       return false
     }
-    while (current == null) {
-      val line = reader.readLine()
-      if (line == null) {
-        val code = proc.waitFor()
-        val tail = err.join()
-        if (code != 0)
-          throw new RuntimeException(s"connector[${partition.index}] exited $code: $tail")
-        return false
-      }
-      try {
-        val node = mapper.readTree(line)
-        if (node.path("type").asText == "RECORD") {
-          val rec = node.get("record")
-          if ((partition.stream.isEmpty || rec.path("stream").asText == partition.stream) &&
-              partition.filters.forall(ConnectorFilterEval.eval(schema)(_, rec.get("data"))))
-            current = convert(rec.get("data"))
-        } else if (node.path("type").asText == "TRACE" &&
-            node.path("trace").path("type").asText == "ERROR") {
-          throw new RuntimeException(
-            s"connector[${partition.index}] error: ${node.path("trace").path("error")}")
-        }
-      } catch {
-        case e: RuntimeException => throw e
-        case _: Exception => // undecodable line: warn-and-skip semantics
-      }
+    while (current == null && connector.messages.hasNext) connector.messages.next() match {
+      case r: AirbyteMessage.Record if partition.stream.isEmpty || r.stream.contains(partition.stream) =>
+        val data = r.dataTree
+        if (partition.filters.forall(ConnectorFilterEval.eval(schema)(_, data)))
+          current = JsonRowConverter.toInternalRow(data, schema)
+      case m: AirbyteMessage.Tree =>
+        m.traceError.foreach(e => throw new RuntimeException(s"connector error: $e"))
+      case _ =>
     }
-    emitted += 1
-    true
+    if (current != null) emitted += 1
+    current != null
   }
-
-  private def convert(data: JsonNode): InternalRow =
-    JsonRowConverter.toInternalRow(data, schema)
 
   override def get(): InternalRow = current
 
-  override def close(): Unit = {
-    reader.close()
-    if (proc.isAlive) { proc.destroyForcibly(); () }
-  }
+  override def close(): Unit = connector.close()
 }

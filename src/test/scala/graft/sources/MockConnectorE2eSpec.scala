@@ -46,7 +46,8 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
     else "integer"
   }
 
-  private def writeMock(dir: Path, catalogLine: String, messages: Seq[String]): Seq[String] = {
+  private def writeMock(dir: Path, catalogLine: String, messages: Seq[String],
+      prelude: String = ""): Seq[String] = {
     val catalogFile = dir.resolve("catalog_msg.jsonl")
     Files.writeString(catalogFile, catalogLine + "\n")
     val msgFile = dir.resolve("messages.jsonl")
@@ -54,6 +55,7 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
     val script = dir.resolve("connector.sh")
     Files.writeString(script,
       s"""#!/bin/sh
+         |$prelude
          |case "$$1" in
          |  spec) echo '{"type":"SPEC","spec":{"connectionSpecification":{}}}' ;;
          |  check) echo '{"type":"CONNECTION_STATUS","connectionStatus":{"status":"SUCCEEDED"}}' ;;
@@ -153,15 +155,15 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
       s"V2 state list missing: $v")
   }
 
+  private val idCatalog =
+    """{"type":"CATALOG","catalog":{"streams":[{"name":"test","json_schema":""" +
+      """{"type":"object","properties":{"id":{"type":["integer","null"]}}},"supported_sync_modes":["full_refresh"]}]}}"""
+
   test("mid-stream nonzero exit fails the sync, never a silent partial table") {
     val dir = Files.createTempDirectory("mockconnfail")
-    val catalogMsg =
-      """{"type":"CATALOG","catalog":{"streams":[{"name":"test","json_schema":
-        |{"type":"object","properties":{"id":{"type":["integer","null"]}}},
-        |"supported_sync_modes":["full_refresh"]}]}}""".stripMargin.replace("\n", "")
     val half = (1 to 10).map(i =>
       s"""{"type":"RECORD","record":{"stream":"test","data":{"id":$i}}}""")
-    val cmd = writeMock(dir, catalogMsg, half)
+    val cmd = writeMock(dir, idCatalog, half)
     // overwrite the script: emit half the records then die with rc=3
     Files.writeString(dir.resolve("connector.sh"),
       s"""#!/bin/sh
@@ -180,11 +182,7 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
 
   test("200 KB of stderr before the first RECORD neither blocks nor fails the read") {
     val dir = Files.createTempDirectory("mockconnstderr")
-    val catalogMsg =
-      """{"type":"CATALOG","catalog":{"streams":[{"name":"test","json_schema":
-        |{"type":"object","properties":{"id":{"type":["integer","null"]}}},
-        |"supported_sync_modes":["full_refresh"]}]}}""".stripMargin.replace("\n", "")
-    val cmd = writeMock(dir, catalogMsg, Seq.empty)
+    val cmd = writeMock(dir, idCatalog, Seq.empty)
     val pidFile = dir.resolve("pid")
     // 2000 lines of 100 bytes: three times a 64 KiB pipe buffer
     Files.writeString(dir.resolve("connector.sh"),
@@ -210,6 +208,44 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
     assert(rows == Seq(1L))
   }
 
+  test("a sync then a second discover spawn the connector twice: discover runs once per source") {
+    val dir = Files.createTempDirectory("spawncount")
+    val spawns = dir.resolve("spawns")
+    val cmd = writeMock(dir, idCatalog,
+      Seq("""{"type":"RECORD","record":{"stream":"test","data":{"id":1}}}"""),
+      prelude = s"""echo "$$1" >> '$spawns'""")
+    val source = new SubprocessSource(cmd, m.createObjectNode(), dir.resolve("work"))
+    new SyncEngine(source).sync(spark, _ == "test", _ => "FULL_TABLE", new StateStore())
+    assert(source.discover(spark).streams.map(_.name) == Seq("test"))
+    assert(Files.readAllLines(spawns).asScala == Seq("discover", "read"))
+  }
+
+  test("a connector LOG message reaches the logger at its own level") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = Files.createTempDirectory("connectorlog")
+    val cmd = writeMock(dir, idCatalog, Seq("""{"type":"LOG","log":{"level":"WARN","message":"m"}}"""))
+    val source = new SubprocessSource(cmd, m.createObjectNode(), dir.resolve("work"))
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val appender = new AbstractAppender("connector-log-test", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = { events.add(e.toImmutable); () }
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.sources.ConnectorProcess").asInstanceOf[CoreLogger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.ALL)
+    try new SyncEngine(source).sync(spark, _ == "test", _ => "FULL_TABLE", new StateStore())
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+    assert(events.asScala.map(e => e.getLevel -> e.getMessage.getFormattedMessage).toSeq == Seq(Level.WARN -> "m"))
+  }
+
   // ---- the stdout demux: block-parallel byte parse, ordered apply ----
 
   private val idProps = """{"id":{"type":["null","integer"]},"v":{"type":["null","string"]}}"""
@@ -229,11 +265,12 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
       s""""stream_state":{"id":"$id"}}}}"""
 
   /** A source whose connector discovers `names`, each with `properties`,
-    * and on `read` writes its pid to `dir/pid`, then `output` byte for
-    * byte, then runs the shell text `after`.
+    * and on `read` writes its pid to `dir/pid`, runs the shell text
+    * `before`, writes `output` byte for byte, then runs the shell text
+    * `after`.
     */
   private def rawSource(dir: Path, names: Seq[String], properties: String, output: Array[Byte],
-      after: String = ""): SubprocessSource = {
+      before: String = "", after: String = ""): SubprocessSource = {
     val catalog = m.createObjectNode()
     catalog.put("type", "CATALOG")
     val streams = catalog.putObject("catalog").putArray("streams")
@@ -250,7 +287,9 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
       s"""#!/bin/sh
          |case "$$1" in
          |  discover) cat '${dir.resolve("catalog_msg.jsonl")}' ;;
-         |  read) echo $$$$ > '${dir.resolve("pid")}'; cat '${dir.resolve("out.bin")}'; $after ;;
+         |  read) echo $$$$ > '${dir.resolve("pid")}'
+         |    $before
+         |    cat '${dir.resolve("out.bin")}'; $after ;;
          |esac
          |""".stripMargin)
     new SubprocessSource(Seq("/bin/sh", script.toString), m.createObjectNode(), dir.resolve("work"))
@@ -317,7 +356,10 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
       """{"type":"TRACE","trace":{"type":"ERROR","error":{"message":"quota exhausted"}}}""",
       stateLine("s", "after"))
     val marker = dir.resolve("ran-on")
-    val src = rawSource(dir, Seq("s"), idProps, lf(lines), s"sleep 30; touch '$marker'")
+    // the connector's own child: killed with it, it cannot hold stdout open
+    val sleepPid = dir.resolve("sleep.pid")
+    val src = rawSource(dir, Seq("s"), idProps, lf(lines),
+      before = s"sleep 30 & echo $$! > '$sleepPid'", after = s"wait; touch '$marker'")
     val cat = src.discover(spark)
     val state = new StateStore()
     val e = MockConnectorE2eSpec.bounded(dir.resolve("pid")) {
@@ -325,9 +367,9 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
     }
     assert(e.getMessage.contains("quota exhausted"), e.getMessage)
     assert(state.bookmark("s", "id").contains("before"))
-    val pid = Files.readString(dir.resolve("pid")).trim.toLong
-    // killed, it ends within seconds; left alone it would sleep 30 s first
-    java.lang.ProcessHandle.of(pid).ifPresent(h => { h.onExit().get(10, java.util.concurrent.TimeUnit.SECONDS); () })
+    // killed, both end within seconds; left alone the script waits 30 s
+    MockConnectorE2eSpec.assertExits(dir.resolve("pid"))
+    MockConnectorE2eSpec.assertExits(sleepPid)
     assert(!Files.exists(marker))
   }
 
@@ -342,42 +384,7 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
   }
 
   test("JSON-source rows equal textFile + from_json rows of the raw data text") {
-    // RECORD and other lines of AirbyteMessageSpec's table, all for stream "s"
-    def r(body: String) = s"""{"type":"RECORD","record":{$body}}"""
-    val table = Seq(
-      r(""""stream":"s","data":{"a":1,"s":"x"},"emitted_at":1"""),
-      """{"record":{"data":{"a":2,"s":"y"},"stream":"s","emitted_at":5},"type":"RECORD"}""",
-      r(""""stream":"s","data":{"o":{"x":3,"y":[1,2,3]},"arr":[{"k":"v"},{"k":"w"}]}"""),
-      r(""""stream":"s","data":{"s":"a}b{c\"d\\","q":"[\"]{"}"""),
-      r("\"stream\":\"s\",\"data\":{\"s\":\"caf\\u00e9 \\ud83d\\ude00\",\"u\":\"naïve 日本 😀\"}"),
-      r(""""stream":"s","data":null"""),
-      r(""""stream":"s","data": [ {"a":1} , 2 ] """),
-      r(""""stream":"s","data":42"""),
-      r("\"stream\":\"s\",\"data\":\"text \\\"q\\\"\""),
-      r(""""stream":"s","data":true"""),
-      r(""""data":{"a":1}"""),
-      r(""""stream":"s""""),
-      """{"type":"RECORD","record":5}""",
-      r(""""stream":"a","data":{"a":1,"a":2},"stream":"s","data":{"a":3,"s":"z"}"""),
-      r(""""stream":"s","data":{"a":3,"a":4}"""),
-      """{"type":"RECORD","record":{"stream":"a","data":{"a":1}},"record":{"stream":"s","data":{"a":2}}}""",
-      """{"type":"STATE","type":"RECORD","record":{"stream":"s","data":{"a":7}}}""",
-      " \t " + r(""""stream":"s","data":{"a":8}""") + "  ",
-      r(""""stream":"s","data":{"a":9}""") + " trailing",
-      """{ "type" : "RECORD" , "record" : { "stream" : "s" , "data" : {"a":10} } }""",
-      r(""""stream":"s","data":{"a":"not a number","o":{"x":"1"},"arr":{"k":"v"}}"""),
-      r(""""stream":"s","data":{"d":1.0000000000000001,"a":1e3}"""),
-      """{"type":"RECORD","record":{"stream":"s","data":{"a":1""",
-      "starting connector...", """[{"type":"RECORD"}]""", """{type: RECORD}""", "   ",
-      """{"type":"FOO","record":{"stream":"s","data":{}}}""",
-      """{"type":"LOG","log":{"level":"INFO","message":"read {1} \"rows\""}}""")
-    val props =
-      """{"a":{"type":["null","integer"]},"s":{"type":["null","string"]},"q":{"type":["null","string"]},
-        |"u":{"type":["null","string"]},"d":{"type":["null","number"]},
-        |"o":{"type":["null","object"],"properties":{"x":{"type":["null","integer"]},
-        |"y":{"type":["null","array"],"items":{"type":["null","integer"]}}}},
-        |"arr":{"type":["null","array"],"items":{"type":["null","object"],"properties":{"k":{"type":["null","string"]}}}}}"""
-        .stripMargin.replace("\n", "")
+    import MockConnectorE2eSpec.{rowProps => props, rowTable => table}
     val dir = Files.createTempDirectory("rowcheck")
     val src = rawSource(dir, Seq("s"), props, lf(table))
     val catalog = src.discover(spark)
@@ -404,6 +411,51 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
 
 object MockConnectorE2eSpec extends TimeLimits {
   implicit private val signaler: Signaler = ThreadSignaler
+
+  private def r(body: String) = s"""{"type":"RECORD","record":{$body}}"""
+  /** Protocol lines for stream "s": RECORD shapes from AirbyteMessageSpec's
+    * table, non-JSON noise, a truncated object, LOG and an unknown type;
+    * `rowProps` is the JSON Schema `properties` of their `data`.
+    */
+  val rowTable: Seq[String] = Seq(
+    r(""""stream":"s","data":{"a":1,"s":"x"},"emitted_at":1"""),
+    """{"record":{"data":{"a":2,"s":"y"},"stream":"s","emitted_at":5},"type":"RECORD"}""",
+    r(""""stream":"s","data":{"o":{"x":3,"y":[1,2,3]},"arr":[{"k":"v"},{"k":"w"}]}"""),
+    r(""""stream":"s","data":{"s":"a}b{c\"d\\","q":"[\"]{"}"""),
+    r("\"stream\":\"s\",\"data\":{\"s\":\"caf\\u00e9 \\ud83d\\ude00\",\"u\":\"naïve 日本 😀\"}"),
+    r(""""stream":"s","data":null"""),
+    r(""""stream":"s","data": [ {"a":1} , 2 ] """),
+    r(""""stream":"s","data":42"""),
+    r("\"stream\":\"s\",\"data\":\"text \\\"q\\\"\""),
+    r(""""stream":"s","data":true"""),
+    r(""""data":{"a":1}"""),
+    r(""""stream":"s""""),
+    """{"type":"RECORD","record":5}""",
+    r(""""stream":"a","data":{"a":1,"a":2},"stream":"s","data":{"a":3,"s":"z"}"""),
+    r(""""stream":"s","data":{"a":3,"a":4}"""),
+    """{"type":"RECORD","record":{"stream":"a","data":{"a":1}},"record":{"stream":"s","data":{"a":2}}}""",
+    """{"type":"STATE","type":"RECORD","record":{"stream":"s","data":{"a":7}}}""",
+    " \t " + r(""""stream":"s","data":{"a":8}""") + "  ",
+    r(""""stream":"s","data":{"a":9}""") + " trailing",
+    """{ "type" : "RECORD" , "record" : { "stream" : "s" , "data" : {"a":10} } }""",
+    r(""""stream":"s","data":{"a":"not a number","o":{"x":"1"},"arr":{"k":"v"}}"""),
+    r(""""stream":"s","data":{"d":1.0000000000000001,"a":1e3}"""),
+    """{"type":"RECORD","record":{"stream":"s","data":{"a":1""",
+    "starting connector...", """[{"type":"RECORD"}]""", """{type: RECORD}""", "   ",
+    """{"type":"FOO","record":{"stream":"s","data":{}}}""",
+    """{"type":"LOG","log":{"level":"INFO","message":"read {1} \"rows\""}}""")
+  val rowProps: String =
+    """{"a":{"type":["null","integer"]},"s":{"type":["null","string"]},"q":{"type":["null","string"]},
+      |"u":{"type":["null","string"]},"d":{"type":["null","number"]},
+      |"o":{"type":["null","object"],"properties":{"x":{"type":["null","integer"]},
+      |"y":{"type":["null","array"],"items":{"type":["null","integer"]}}}},
+      |"arr":{"type":["null","array"],"items":{"type":["null","object"],"properties":{"k":{"type":["null","string"]}}}}}"""
+      .stripMargin.replace("\n", "")
+
+  /** Fails unless the process whose pid `pidFile` holds ends within 10 s. */
+  def assertExits(pidFile: Path): Unit =
+    java.lang.ProcessHandle.of(Files.readString(pidFile).trim.toLong)
+      .ifPresent(h => { h.onExit().get(10, java.util.concurrent.TimeUnit.SECONDS); () })
 
   /** `body` on another thread, failed after 60 s rather than hung: a reader
     * deadlocked on the connector's pipes is freed by killing the connector

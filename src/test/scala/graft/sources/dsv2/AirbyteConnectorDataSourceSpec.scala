@@ -206,16 +206,17 @@ class AirbyteConnectorDataSourceSpec extends SparkSpec {
   }
 
   test("limit pushdown stops consuming and kills the child early") {
-    // segment emits 3 rows, then sleeps, then writes a marker: a pushed
-    // LIMIT 2 must return without waiting for EOF, and the killed child
-    // never reaches the marker write
+    // segment forks a 30 s sleep, emits 3 rows, then waits for the sleep
+    // and writes a marker: a pushed LIMIT 2 must return without waiting
+    // for EOF, and the killed child and its sleep never reach the marker
     val dir = Files.createTempDirectory("dsv2limit")
     val marker = dir.resolve("drained.marker")
+    val sleepPid = dir.resolve("sleep.pid")
     val script = dir.resolve("c.sh")
     val lines = (1 to 3).map(i =>
       s"""echo '{"type":"RECORD","record":{"stream":"s1","data":{"id":$i,"seg":0,"name":"row$i","score":1.0}}}'""")
     Files.writeString(script,
-      (("#!/bin/sh" +: lines) ++ Seq("sleep 30", s"touch $marker"))
+      (("#!/bin/sh" +: s"sleep 30 & echo $$! > '$sleepPid'" +: lines) ++ Seq("wait", s"touch $marker"))
         .mkString("\n") + "\n")
     script.toFile.setExecutable(true)
     val df = spark.read.format("graft-airbyte")
@@ -236,7 +237,33 @@ class AirbyteConnectorDataSourceSpec extends SparkSpec {
     val secs = (System.nanoTime() - t0) / 1e9
     assert(rows.length == 2 && rows.map(_.getLong(0)).toSet == Set(1L, 2L))
     assert(secs < 25.0, s"limit did not stop the drain: ${secs}s")
+    graft.sources.MockConnectorE2eSpec.assertExits(sleepPid)
     assert(!Files.exists(marker), "child ran to completion despite the limit")
+  }
+
+  test("rows equal the tree-per-line reference rows on the protocol line table") {
+    import graft.sources.MockConnectorE2eSpec.{rowProps, rowTable}
+    val dir = Files.createTempDirectory("dsv2rows")
+    Files.writeString(dir.resolve("out.jsonl"), rowTable.mkString("", "\n", "\n"))
+    Files.writeString(dir.resolve("c.sh"), s"#!/bin/sh\ncat '${dir.resolve("out.jsonl")}'\n")
+    val rowSchema = graft.schema.JsonSchemaConverter.toStructType(
+      s"""{"type":"object","properties":$rowProps}""")
+    val mine = spark.read.format("graft-airbyte")
+      .option("commands", commandsJson(Seq(Seq("/bin/sh", dir.resolve("c.sh").toString))))
+      .option("stream", "s")
+      .schema(rowSchema)
+      .load()
+      .collect().toSeq
+
+    // The reference: a tree of each whole line, its `record.stream` as
+    // text, and the row of its `record.data` tree.
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(rowSchema)
+    val ref = rowTable.flatMap(l => scala.util.Try(mapper.readTree(l)).toOption)
+      .filter(n => n.path("type").asText == "RECORD" && n.get("record").path("stream").asText == "s")
+      .map(n => toRow(JsonRowConverter.toInternalRow(n.get("record").get("data"), rowSchema)))
+    assert(ref.size == 20)
+    assert(mine == ref)
   }
 
   test("200 KB of stderr neither blocks the task nor hides from the exit error") {
