@@ -3,7 +3,7 @@ package graft.state
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Incremental-replication state accumulator.
@@ -144,9 +144,17 @@ final class StateStore(initial: Option[JsonNode] = None) {
     }
   }
 
+  /** Writes the state to `path` atomically: a temp file in the same
+    * directory, renamed over `path`, so a crash leaves the old file whole.
+    */
   def save(path: Path): Unit = synchronized {
-    Files.createDirectories(path.getParent)
-    Files.writeString(path, mapper.writeValueAsString(current))
+    val target = path.toAbsolutePath
+    val dir = Files.createDirectories(target.getParent)
+    val tmp = Files.createTempFile(dir, target.getFileName.toString, ".tmp")
+    try {
+      Files.writeString(tmp, mapper.writeValueAsString(current))
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
     ()
   }
 }

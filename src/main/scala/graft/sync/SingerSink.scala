@@ -4,10 +4,13 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.FutureAction
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.JsonSchemaConverter
 
+import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
@@ -19,8 +22,9 @@ import scala.concurrent.duration.Duration
   * serializer fallback (`tap.py:48-59`): datetime/date → ISO-8601 string,
   * Decimal → double, bytes → UTF-8 string, everything else stringified.
   * Implemented as Catalyst casts so serialization is distributed and
-  * codegen'd — the RECORD JSON itself is built by `to_json` on executors;
-  * only the envelope is per-row string concat (also codegen'd `concat`).
+  * codegen'd: each RECORD line — envelope `concat` around `to_json` — is
+  * built on the executors as UTF-8 bytes, and the driver only cuts the
+  * returned byte blocks into lines.
   */
 object SingerSink {
   private val mapper = new ObjectMapper()
@@ -54,10 +58,14 @@ object SingerSink {
     */
   final val RecordPrefix = "{\"type\":\"RECORD\""
 
-  /** RECORD lines as a Dataset[String] — distributed; write with
-    * `ds.write.text` or collect for golden tests. `timeExtracted` is a
-    * fixed value (volatile in the reference, scrubbed by its own tests) so
-    * output stays deterministic.
+  /** The `time_extracted` of every RECORD [[emit]] writes: a fixed value
+    * (volatile in the reference, scrubbed by its own tests) so output stays
+    * deterministic.
+    */
+  final val TimeExtracted = "1970-01-01T00:00:00.000000Z"
+
+  /** RECORD lines as a Dataset[String], built on the executors; [[emit]]
+    * drains it.
     */
   def recordLines(stream: String, df: DataFrame, timeExtracted: String): Dataset[String] = {
     import df.sparkSession.implicits._
@@ -79,19 +87,21 @@ object SingerSink {
     */
   final class DownstreamClosedException extends java.io.IOException("downstream closed")
 
-  /** Full sync emission for one stream to a writer (golden-test mode:
-    * single ordered pass — SCHEMA, RECORDs, final STATE). For production
-    * sinks use `recordLines(...).write.text(path)` instead of collecting.
+  /** Full sync emission for one stream to a writer, in one ordered pass:
+    * SCHEMA, RECORDs, final STATE. This is the CLI's stdout path.
     *
     * RECORDs arrive through an ordered drain: one job per partition,
     * submitted from the calling thread (so its job group and other local
     * properties attribute the jobs), with up to `defaultParallelism`
     * partitions computing at once and each delivered to `out` whole and
-    * strictly in partition order — the order `collect()` gives. The driver
-    * therefore holds up to `defaultParallelism` partitions of lines at a
-    * time, each job's result still bounded by `spark.driver.maxResultSize`.
-    * When `out` throws or a job fails, every job still outstanding is
-    * cancelled before `emit` returns or rethrows.
+    * strictly in partition order — the order `collect()` gives. A job
+    * returns its partition as one block of UTF-8 bytes, newline-ended
+    * lines, which the driver cuts into lines for `out`; no RECORD line holds
+    * a raw newline (the stream name is Jackson-quoted and `to_json` escapes
+    * control characters). The driver therefore holds at most
+    * `defaultParallelism` partition blocks at a time, each within
+    * `spark.driver.maxResultSize`. When `out` throws or a job fails, every
+    * job still outstanding is cancelled before `emit` returns or rethrows.
     *
     * Returns `false` when the downstream consumer closed mid-stream
     * (broken pipe): emission stops cleanly, no exception escapes, and the
@@ -107,13 +117,10 @@ object SingerSink {
       df: DataFrame,
       keyProperties: Seq[String],
       state: graft.state.StateStore,
-      out: String => Unit,
-      timeExtracted: String = "1970-01-01T00:00:00.000000Z",
-      orderBy: Seq[String] = Seq.empty): Boolean =
+      out: String => Unit): Boolean =
     try {
       out(schemaMessage(stream, df, keyProperties))
-      val ordered = if (orderBy.nonEmpty) df.orderBy(orderBy.map(col): _*) else df
-      drainInOrder(recordLines(stream, ordered, timeExtracted).rdd, out)
+      drainInOrder(recordLines(stream, df, TimeExtracted).queryExecution.toRdd, out)
       out(graft.protocol.SingerMessage.State(state.snapshot).toJson)
       true
     } catch {
@@ -122,33 +129,50 @@ object SingerSink {
           if Option(e.getMessage).exists(_.toLowerCase.contains("broken pipe")) => false
     }
 
-  /** Every line of `lines` to `out`, partition by partition in order, with
-    * up to `defaultParallelism` single-partition jobs in flight.
+  /** Every line of `lines` (one string column) to `out`, partition by
+    * partition in order, with up to `defaultParallelism` single-partition
+    * jobs in flight.
     */
-  private def drainInOrder(lines: RDD[String], out: String => Unit): Unit = {
+  private def drainInOrder(lines: RDD[InternalRow], out: String => Unit): Unit = {
     val sc = lines.sparkContext
     val n = lines.getNumPartitions
     val window = math.max(1, sc.defaultParallelism)
-    val parts = new Array[Array[String]](n)
+    val blocks = new Array[Array[Byte]](n)
     val jobs = new Array[FutureAction[Unit]](n)
     var submitted = 0
     try {
       for (p <- 0 until n) {
         while (submitted < n && submitted < p + window) {
           val q = submitted
-          jobs(q) = sc.submitJob(lines, (it: Iterator[String]) => it.toArray, Seq(q),
-            (_: Int, a: Array[String]) => parts(q) = a, ())
+          jobs(q) = sc.submitJob(lines, utf8Block _, Seq(q),
+            (_: Int, b: Array[Byte]) => blocks(q) = b, ())
           submitted += 1
         }
         Await.result(jobs(p), Duration.Inf)
-        val part = parts(p)
-        parts(p) = null
-        part.foreach(out)
+        val block = blocks(p)
+        blocks(p) = null
+        var from = 0
+        while (from < block.length) {
+          var end = from
+          while (block(end) != '\n') end += 1
+          out(new String(block, from, end - from, UTF_8))
+          from = end + 1
+        }
       }
     } finally {
       val outstanding = jobs.filter(j => j != null && !j.isCompleted)
       outstanding.foreach(_.cancel())
       outstanding.foreach(Await.ready(_, Duration.Inf))
     }
+  }
+
+  /** A partition's lines as UTF-8 bytes, each ended by a newline. */
+  private def utf8Block(rows: Iterator[InternalRow]): Array[Byte] = {
+    val buf = new ByteArrayOutputStream(1 << 16)
+    rows.foreach { r =>
+      r.getUTF8String(0).writeTo(buf)
+      buf.write('\n')
+    }
+    buf.toByteArray
   }
 }

@@ -62,4 +62,29 @@ class StateStoreSpec extends AnyFunSuite {
     val loaded = StateStore.load(p)
     assert(loaded.bookmark("events", "ts").contains("2024-01-15 00:00:00"))
   }
+
+  test("save to a bare relative file name (no parent) writes it in the working directory") {
+    val st = new StateStore()
+    st.setBookmark("events", "ts", "7")
+    val p = java.nio.file.Paths.get(s"graft-state-${java.util.UUID.randomUUID}.json")
+    assert(p.getParent == null)
+    try {
+      st.save(p)
+      assert(StateStore.load(p).bookmark("events", "ts").contains("7"))
+    } finally java.nio.file.Files.deleteIfExists(p)
+  }
+
+  test("save over an existing file replaces it and leaves no temp file behind") {
+    val dir = java.nio.file.Files.createTempDirectory("state")
+    val p = dir.resolve("s.json")
+    val st = new StateStore()
+    st.setBookmark("events", "ts", "1")
+    st.save(p)
+    st.setBookmark("events", "ts", "2")
+    st.save(p)
+    assert(StateStore.load(p).bookmark("events", "ts").contains("2"))
+    val left = java.nio.file.Files.list(dir)
+    try assert(left.toArray.toSeq == Seq(p))
+    finally left.close()
+  }
 }

@@ -26,8 +26,7 @@ class GoldenSyncSpec extends SparkSpec {
         filter = Some("event_id >= 990"), drops = Seq("props", "ts"))))
     val dfs = engine.sync(spark, _ == "events", _ => "INCREMENTAL", state)
     val lines = ArrayBuffer.empty[String]
-    SingerSink.emit("events", dfs("events"), Seq("event_id"), state,
-      lines += _, orderBy = Seq("event_id"))
+    SingerSink.emit("events", dfs("events").orderBy("event_id"), Seq("event_id"), state, lines += _)
     lines.toSeq
   }
 

@@ -3,8 +3,9 @@ package graft.sync
 import graft.SparkSpec
 import graft.state.StateStore
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -31,7 +32,7 @@ class SingerSinkSpec extends SparkSpec {
     val state = new StateStore()
     state.setBookmark("s1", "id", "2")
     val lines = ArrayBuffer.empty[String]
-    SingerSink.emit("s1", df, Seq("id"), state, lines += _, orderBy = Seq("id"))
+    SingerSink.emit("s1", df.orderBy("id"), Seq("id"), state, lines += _)
 
     assert(lines.size == 4) // 1 SCHEMA + 2 RECORD + 1 STATE
     val schema = m.readTree(lines.head)
@@ -56,11 +57,11 @@ class SingerSinkSpec extends SparkSpec {
     state.setBookmark("s1", "id", "3")
     val lines = ArrayBuffer.empty[String]
     // consumer dies after 2 lines (SCHEMA + 1 RECORD) — broken pipe
-    val completed = SingerSink.emit("s1", df, Seq("id"), state, { l =>
+    val completed = SingerSink.emit("s1", df.orderBy("id"), Seq("id"), state, { l =>
       if (lines.size >= 2) throw new java.io.IOException("Broken pipe")
       lines += l
       ()
-    }, orderBy = Seq("id"))
+    })
     assert(!completed)   // signalled, not thrown
     assert(lines.size == 2)
     // state is still intact and saveable — the --state-out path works
@@ -80,20 +81,20 @@ class SingerSinkSpec extends SparkSpec {
   test("a stream name with a quote and a backslash is escaped in every RECORD envelope") {
     val name = "a\"b\\c"
     val lines = ArrayBuffer.empty[String]
-    assert(SingerSink.emit(name, Seq((1L, "x"), (2L, "y")).toDF("id", "v"), Seq("id"),
-      new StateStore(), lines += _, orderBy = Seq("id")))
+    assert(SingerSink.emit(name, Seq((1L, "x"), (2L, "y")).toDF("id", "v").orderBy("id"), Seq("id"),
+      new StateStore(), lines += _))
     val records = lines.filter(_.startsWith(SingerSink.RecordPrefix)).map(m.readTree)
     assert(records.size == 2)
     assert(records.forall(_.get("stream").asText == name))
     assert(records.map(_.get("record").get("id").asLong) == Seq(1L, 2L))
   }
 
-  private val ts = "1970-01-01T00:00:00.000000Z"
+  private val ts = SingerSink.TimeExtracted
 
   /** The RECORD lines `emit` delivers for `df`, after checking it completed. */
-  private def emittedRecords(df: DataFrame, orderBy: Seq[String] = Seq.empty): Seq[String] = {
+  private def emittedRecords(df: DataFrame): Seq[String] = {
     val lines = ArrayBuffer.empty[String]
-    assert(SingerSink.emit("s", df, Seq("id"), new StateStore(), lines += _, orderBy = orderBy))
+    assert(SingerSink.emit("s", df, Seq("id"), new StateStore(), lines += _))
     lines.slice(1, lines.size - 1).toSeq
   }
 
@@ -103,7 +104,7 @@ class SingerSinkSpec extends SparkSpec {
     assert(plain.rdd.getNumPartitions == 9)
     assert(emittedRecords(df) == plain.collect().toSeq)
 
-    // orderBy: a range shuffle into 8 partitions, none coalesced away
+    // a sorted frame: a range shuffle into 8 partitions, none coalesced away
     val conf = Seq("spark.sql.shuffle.partitions" -> "8",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     val saved = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -111,7 +112,7 @@ class SingerSinkSpec extends SparkSpec {
     try {
       val sorted = SingerSink.recordLines("s", df.orderBy("k"), ts)
       assert(sorted.rdd.getNumPartitions == 8)
-      val lines = emittedRecords(df, orderBy = Seq("k"))
+      val lines = emittedRecords(df.orderBy("k"))
       assert(lines == sorted.collect().toSeq)
       val ks = lines.map(l => m.readTree(l).get("record").get("k").asLong)
       assert(ks.size == 2000 && ks == ks.sorted)
@@ -155,5 +156,34 @@ class SingerSinkSpec extends SparkSpec {
     assert(e.getMessage.contains("boom in the last partition"), e.getMessage)
     assert(lines.size == 1 + 70) // SCHEMA + partitions 0-6, in order; no STATE
     assert(lines.tail.map(l => m.readTree(l).get("record").get("id").asLong) == (0L until 70L))
+  }
+
+  test("byte framing: RECORD lines equal collect() through multi-byte text, escapes, binary and empty partitions") {
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType), StructField("b", BinaryType)))
+    val rows = Seq(
+      Row(1L, "caf\u00e9 \u4e2d \ud83d\ude00", Array[Byte](0x0A, 0xFF.toByte)),
+      Row(2L, "q\"b\\n\nl", null),
+      Row(null, null, Array[Byte](0x61, 0x0A, 0x62)),
+      Row(4L, "", Array.emptyByteArray))
+    // 4 rows over 7 slices: some partitions are empty
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 7), schema)
+    val expected = SingerSink.recordLines("s", df, ts).collect().toSeq
+    assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ == 0) >= 3)
+    val lines = emittedRecords(df)
+    assert(lines == expected)
+    val recs = lines.map(m.readTree(_).get("record"))
+    def field(name: String) = recs.map(r => Option(r.get(name)).filterNot(_.isNull).map(_.asText))
+    assert(field("s") == Seq(Some("caf\u00e9 \u4e2d \ud83d\ude00"), Some("q\"b\\n\nl"), None, Some("")))
+    assert(field("id") == Seq(Some("1"), Some("2"), None, Some("4")))
+    assert(field("b").map(_.map(_.take(1))) == Seq(Some("\n"), None, Some("a"), Some("")))
+    assert(field("b")(2).contains("a\nb"))
+  }
+
+  test("a zero-row frame emits SCHEMA and STATE only") {
+    val df = spark.range(0, 100, 1, 5).toDF().where(col("id") < 0)
+    val lines = ArrayBuffer.empty[String]
+    assert(SingerSink.emit("s", df, Seq("id"), new StateStore(), lines += _))
+    assert(lines.map(m.readTree(_).get("type").asText) == Seq("SCHEMA", "STATE"))
   }
 }
