@@ -19,8 +19,7 @@ import org.apache.spark.sql.SparkSession
   * (the driver's case). Queries are idempotent by construction (Verify
   * and the oracle harness already run them repeatedly).
   *
-  * Round 15: the SparkSession is RESTARTED every
-  * SPARK_GRAFT_RESTART_EVERY (default 64) queries — see the inline
+  * Round 15: the SparkSession is RESTARTED every 64 queries — see the inline
   * rationale — so per-query session pressure is bounded by a constant
   * instead of growing with the inventory, and round-over-round warm
   * timings of unchanged queries compare like with like.
@@ -37,7 +36,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Session-pressure bound (round 15): one long-lived session accrues
     // heap/GC, codegen-cache, and broadcast churn across 3 × |inventory|
     // executions, and every inventory-growth round read as a broad
@@ -50,19 +48,8 @@ object Bench {
     // period, so a query sitting right after a boundary in one pass sits
     // mid-period in the other and the min() estimator drops the
     // boundary's session-warmup constant.
-    val restartEvery = sys.env.getOrElse("SPARK_GRAFT_RESTART_EVERY", "64").toInt
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    val restartEvery = 64
+    var spark = Sessions.create()
 
     // ---- machine-variance sentinel (round 16) ----
     // The restart harness (r15) killed within-suite session pressure;
@@ -80,7 +67,7 @@ object Bench {
     // different workload size.
     val sentinelNames = Seq("q1_agg", "q_window", "q_topk", "q_incremental",
       "q_asof_join")
-    val sentinelReps = sys.env.getOrElse("SPARK_GRAFT_SENTINEL_REPS", "3").toInt
+    val sentinelReps = 3
     // pinned reference: median of three r16 probes at sf0.1/local[32]
     // on the round-16 machine (1.652 / 1.517 / 1.811 s) — the ±10%
     // spread between probes IS the between-run variance the factor
@@ -100,16 +87,9 @@ object Bench {
     val sentinelTimes: Seq[(String, Double)] = runSentinel(spark, sentinelReps)
     val sentinelTotal = sentinelTimes.map(_._2).sum
     val machineFactor = sentinelTotal / sentinelRefTotal
-    // sentinel-only mode: a ~15 s machine probe without the full sweep
-    if (sys.env.get("SPARK_GRAFT_SENTINEL_ONLY").contains("1")) {
-      def f3s(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-      println(s"""{"metric":"sentinel_total","value":${f3s(sentinelTotal)},"unit":"sec","sentinel":${sentinelTimes.map { case (k, v) => "\"" + k + "\":" + f3s(v) }.mkString("{", ",", "}")},"machine_factor":${f3s(machineFactor)},"sf":"$sfDir"}""")
-      spark.stop()
-      return
-    }
     // the sentinel's JIT/cache warmup must not leak into the cold pass
     spark.stop()
-    spark = newSession()
+    spark = Sessions.create()
 
     // A failing query must be LOUD: it is reported per-name AND per-pass
     // in the JSON, never silently timed as ~0 s (which would make a
@@ -129,8 +109,7 @@ object Bench {
     // survives in-process restarts, so the pre-sweep 3-rep warmup is
     // not repaid); ~9 blocks x 3 passes x ~3 s keeps the overhead under
     // ~5% of the sweep.
-    val blockSentinelReps =
-      sys.env.getOrElse("SPARK_GRAFT_BLOCK_SENTINEL_REPS", "2").toInt
+    val blockSentinelReps = 2
     // Block factors are on the WARM-SESSION basis — mid-sweep restarts
     // reuse a hot JVM (codegen cache, JIT), so the same 5 queries run
     // ~2x faster than the fresh-JVM pre-sweep probe. Dividing them by
@@ -149,9 +128,9 @@ object Bench {
         restartOffset: Int): Seq[(String, Double)] = {
       val factors = scala.collection.mutable.ArrayBuffer.empty[Double]
       val out = sorted.zipWithIndex.map { case ((name, fn), i) =>
-        if (restartEvery > 0 && i > 0 && (i + restartOffset) % restartEvery == 0) {
+        if (i > 0 && (i + restartOffset) % restartEvery == 0) {
           spark.stop()
-          spark = newSession()
+          spark = Sessions.create()
           val bt = runSentinel(spark, blockSentinelReps).map(_._2).sum
           factors += bt / sentinelWarmRefTotal
         }
@@ -215,14 +194,14 @@ object Bench {
       if (inverted.isEmpty) Map.empty
       else {
         spark.stop()
-        spark = newSession()
+        spark = Sessions.create()
         val factors = scala.collection.mutable.ArrayBuffer.empty[Double]
         factors += runSentinel(spark, blockSentinelReps).map(_._2).sum / sentinelWarmRefTotal
         val fnMap = SparkEntry.queries
         val out = inverted.zipWithIndex.flatMap { case (n, i) =>
-          if (restartEvery > 0 && i > 0 && i % restartEvery == 0) {
+          if (i > 0 && i % restartEvery == 0) {
             spark.stop()
-            spark = newSession()
+            spark = Sessions.create()
             factors += runSentinel(spark, blockSentinelReps).map(_._2).sum / sentinelWarmRefTotal
           }
           val t0 = System.nanoTime()

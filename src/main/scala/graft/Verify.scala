@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,14 +14,7 @@ object Verify {
         s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     }
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>

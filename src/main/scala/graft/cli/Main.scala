@@ -53,14 +53,7 @@ object Main {
       else mapper.readTree(Files.readString(Paths.get(configPath)))
     val source = buildSource(config)
 
-    lazy val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    lazy val spark = graft.Sessions.create(master = sys.env.get("SPARK_MASTER"))
 
     try {
       if (opts.contains("about")) {

@@ -257,7 +257,7 @@ object ProductQuant {
       // coarse-quantizer quality saturates at a few thousand vectors
       // (trainCentroids' own contract); at 100k the float Lloyd pass
       // DOMINATED the whole serve (measured 38 s vs 2.6 s at a 200k-row
-      // corpus — tools/ScaleIvfpq), so the hybrid defaults to a tight
+      // corpus — SCALE.md "Round-15: IVF-PQ"), so the hybrid defaults to a tight
       // sample where the flat-IVF path keeps the looser one
       maxTrainRows: Long = 20000L,
       pretrainedPq: Option[(DataFrame, DataFrame)] = None): DataFrame = {
@@ -317,7 +317,7 @@ object ProductQuant {
   }
 
   /** WRITE-ONCE IVF-PQ layout — the form in which the hybrid actually
-    * pays off. tools/ScaleIvfpq measured the AD-HOC [[ivfpqTopK]]
+    * pays off. SCALE.md "Round-15: IVF-PQ" measured the AD-HOC [[ivfpqTopK]]
     * LOSING to the plain full-ADC scan at every corpus multiple
     * (0.07–0.28×): the ad-hoc job must train the coarse quantizer,
     * assign cells, and run a corpus-sized codes⋈cells join before any

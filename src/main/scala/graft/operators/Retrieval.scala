@@ -53,7 +53,7 @@ object Retrieval {
     * pins checksum equality between the two): its `coalesce(1)` +
     * k single-task rounds was the r15 verdict's one scale-killer —
     * driver-paced at 100× query volume where the aggregate stays flat
-    * (measured in SCALE.md r16, tools.ScaleMmr).
+    * (measured in SCALE.md "Round-16: MMR re-shaped").
     */
   def mmrRerank(
       cands: DataFrame,

@@ -485,10 +485,10 @@ object Similarity {
     * touches a sign bit — XOR + bit_count stay portable across engines.
     */
   /** (id, lo, hi) sign signatures for a vector table — the thin
-    * 24-byte/row leg of [[signBitTopK]]; package-visible so the scale
-    * harness (tools.ScaleAnn) measures the exact production kernel.
+    * 24-byte/row leg of [[signBitTopK]] (scale numbers: SCALE.md
+    * "Round-14: sign-bit ANN prefilter de-windowed").
     */
-  private[graft] def signSignatures(
+  private def signSignatures(
       df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .select(col("id"), signWord(col("v"), 0).as("lo"),

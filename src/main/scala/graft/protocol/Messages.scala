@@ -180,7 +180,8 @@ object AirbyteMessage {
 }
 
 /** Singer-side messages the engine emits (reference `tap.py:62-77`,
-  * fixture shape `tests/fixtures/KPHX.singer`).
+  * fixture shape `tests/fixtures/KPHX.singer`). RECORD lines are not
+  * messages here: `SingerSink.recordLines` renders them in bulk.
   */
 sealed trait SingerMessage { def toJson: String }
 
@@ -196,18 +197,6 @@ object SingerMessage {
       n.set[JsonNode]("schema", schema)
       val kp = n.putArray("key_properties")
       keyProperties.foreach(kp.add)
-      mapper.writeValueAsString(n)
-    }
-  }
-
-  final case class Record(stream: String, record: JsonNode, timeExtracted: Option[String])
-      extends SingerMessage {
-    def toJson: String = {
-      val n: ObjectNode = mapper.createObjectNode()
-      n.put("type", "RECORD")
-      n.put("stream", stream)
-      n.set[JsonNode]("record", record)
-      timeExtracted.foreach(n.put("time_extracted", _))
       mapper.writeValueAsString(n)
     }
   }

@@ -1297,7 +1297,7 @@ object LlmOps {
 
     // Persisted IVF-PQ index (ProductQuant.writeIvfpqIndex /
     // queryIvfpqIndex): the form in which the hybrid actually pays off
-    // at scale — tools/ScaleIvfpq measured the AD-HOC hybrid LOSING to
+    // at scale — SCALE.md "Round-15: IVF-PQ" measured the AD-HOC hybrid LOSING to
     // the plain full-ADC scan at every corpus multiple (its
     // corpus-sized codes⋈cells join + training never amortize in one
     // job), so the layout persists codes partitionBy(cid) and queries

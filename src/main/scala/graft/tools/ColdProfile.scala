@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Attributes a query's cold-start tax (Bench pass-1 vs pass-2 gap):
   * `runMain graft.tools.ColdProfile [sfDir] name [name...]` — each query
   * reports, in ONE fresh JVM: planning time (analyze+optimize, forced
@@ -18,20 +16,13 @@ object ColdProfile {
     val (sfDir, names) =
       if (args.nonEmpty && args.head.startsWith("/")) (args.head, args.tail.toSeq)
       else ("/root/testdata/sf0.1", args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val noCodegen = sys.env.contains("SPARK_GRAFT_NO_CODEGEN")
-    val b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Sessions.create()
     if (noCodegen) {
-      b.config("spark.sql.codegen.wholeStage", "false")
-      b.config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    println(s"# codegen=${!noCodegen} cpus=$cpus sf=$sfDir")
+    println(s"# codegen=${!noCodegen} cpus=${graft.Sessions.cores} sf=$sfDir")
     names.foreach { n =>
       def sec(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -1,27 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Re-run a list of queries N times in fresh sessions, write each with
   * the Verify sink shape (coalesce(1).write.parquet) and report row
   * counts per iteration — the detector for nondeterministic plans (the
   * q_krippendorff AQE exchange-reuse race, r18). Usage:
-  *   runMain graft.tools.FlakeCheck <sfDir> <cpus> <iters> <q1,q2,...>
+  *   SPARK_GRAFT_CPUS=<cpus> sbt "runMain graft.tools.FlakeCheck <sfDir> <iters> <q1,q2,...>"
   */
 object FlakeCheck {
   def main(args: Array[String]): Unit = {
     val d = args(0)
-    val cpus = args(1)
-    val iters = args(2).toInt
-    val names = args(3).split(',').toSeq
+    val iters = args(1).toInt
+    val names = args(2).split(',').toSeq
     val bad = scala.collection.mutable.Buffer.empty[String]
     for (name <- names) {
       val counts = (1 to iters).map { _ =>
-        val s = SparkSession.builder().master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false").getOrCreate()
-        s.sparkContext.setLogLevel("ERROR")
+        val s = graft.Sessions.create()
         val out = s"/tmp/flake_check/$name"
         try {
           graft.SparkEntry.queries(name)(s, d)

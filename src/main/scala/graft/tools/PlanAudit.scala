@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 
 /** Scale audit: one line per query summarizing the physical plan's
   * scale-relevant properties — exchange (shuffle) count, join strategies,
-  * scan column width, filter pushdown, cartesian products. Run at sf0.01:
+  * scan column width, filter pushdown, cartesian products. Run at sf0.01
+  * on 8 cores, the plan shapes of every committed `PLAN_AUDIT_*.txt`:
   *
-  *   sbt "runMain graft.tools.PlanAudit" > PLAN_AUDIT.txt
+  *   SPARK_GRAFT_CPUS=8 sbt "runMain graft.tools.PlanAudit" > PLAN_AUDIT.txt
   *
   * Round 17: counts accumulate across ALL jobs a query runs, not just the
   * final collect's plan. The iterative family (pagerank / components /
@@ -23,12 +23,7 @@ import org.apache.spark.sql.execution.QueryExecution
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.create()
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     // optional trailing args: audit only these query names (builder-side
     // iteration on a single plan; the driver runs the full inventory)

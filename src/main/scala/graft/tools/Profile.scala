@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query cost split: wall seconds vs summed executor task time vs
   * shuffle bytes vs job/stage counts. Separates driver-bound queries
@@ -22,13 +21,7 @@ object Profile {
     val (sfDir, names) =
       if (args.nonEmpty && args.head.startsWith("/")) (args.head, args.tail.toSeq)
       else ("/root/testdata/sf0.1", args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.create()
 
     val taskMs = new AtomicLong(0)
     val taskCount = new AtomicInteger(0)

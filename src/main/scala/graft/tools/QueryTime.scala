@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Times individual queries in isolation (repeat runs, one JVM) — the
   * profiling companion to Bench's full sweep: `runMain graft.tools.QueryTime
   * [sfDir] name [name...]` prints per-run seconds so plan cost separates
@@ -10,15 +9,9 @@ object QueryTime {
     val (sfDir, names) =
       if (args.nonEmpty && args.head.startsWith("/")) (args.head, args.tail.toSeq)
       else ("/root/testdata/sf0.1", args.toSeq)
-    // honor the bench's parallelism knob so isolated timings measure the
-    // SAME plan shape (shuffle partitions, AQE coalescing) as Bench
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the same session policy as Bench, so isolated timings measure the
+    // SAME plan shape (shuffle partitions, AQE coalescing)
+    val spark = graft.Sessions.create()
     names.foreach { n =>
       val times = (1 to 3).map { _ =>
         val t0 = System.nanoTime()

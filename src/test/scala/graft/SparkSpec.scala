@@ -4,19 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all suites (one JVM, reused session). */
+/** Shared local SparkSession for all suites (one JVM, reused session).
+  * Cores are pinned at 4, not read from `SPARK_GRAFT_CPUS`, so test plan
+  * shapes do not depend on the machine's core count.
+  */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.create(n = 4, logLevel = "ERROR")
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -18,12 +18,7 @@ import graft.expressions.{functions => gfn}
   */
 object BoundedTopKProps extends Properties("BoundedTopK") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("bounded-topk-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genScore: Gen[Option[Double]] = Gen.frequency(
     6 -> Gen.chooseNum(-3, 3).map(v => Some(v.toDouble)),

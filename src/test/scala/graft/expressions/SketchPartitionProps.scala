@@ -21,12 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object SketchPartitionProps extends Properties("SketchPartition") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("sketch-partition-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   property("KMV equals brute-force k smallest distinct under any split") =
     Prop.forAll(

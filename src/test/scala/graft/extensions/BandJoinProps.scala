@@ -11,17 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object BandJoinProps extends Properties("BandJoinRewrite") {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("band-join-props").getOrCreate()
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations :+ RewriteBandJoin
-    s
-  }
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genSide: Gen[Seq[Int]] = for {
     n <- Gen.chooseNum(1, 12)
@@ -37,12 +27,20 @@ object BandJoinProps extends Properties("BandJoinRewrite") {
         .toDF("id_b", "y")
       def q() = a.crossJoin(b).filter(abs(col("x") - col("y")) <= w)
         .select("id_a", "id_b")
-      spark.conf.set("spark.graft.band.rewrite.enabled", "true")
-      val got = q().collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toSeq.sorted
-      spark.conf.set("spark.graft.band.rewrite.enabled", "false")
-      val exact = q().collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toSeq.sorted
-      got == exact
+      // the rule rides on the shared test session only for this check
+      val prev = spark.experimental.extraOptimizations
+      spark.experimental.extraOptimizations = prev :+ RewriteBandJoin
+      try {
+        spark.conf.set("spark.graft.band.rewrite.enabled", "true")
+        val got = q().collect().map(r => (r.getLong(0), r.getLong(1)))
+          .toSeq.sorted
+        spark.conf.set("spark.graft.band.rewrite.enabled", "false")
+        val exact = q().collect().map(r => (r.getLong(0), r.getLong(1)))
+          .toSeq.sorted
+        got == exact
+      } finally {
+        spark.experimental.extraOptimizations = prev
+        spark.conf.unset("spark.graft.band.rewrite.enabled")
+      }
     }
 }

@@ -15,12 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ComponentsProps extends Properties("Components") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("components-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genEdges: Gen[Seq[(Long, Long)]] = for {
     n <- Gen.chooseNum(1, 25)

@@ -13,12 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ContainKMeansProps extends Properties("ContainKMeans") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("contain-kmeans-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // --- containment ---------------------------------------------------
 

@@ -12,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DcovProps extends Properties("DistanceCovariance") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("dcov-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genSeries: Gen[List[(Long, Long)]] = for {
     n <- Gen.chooseNum(1, 12)

@@ -15,12 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DhondtProps extends Properties("Dhondt") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("dhondt-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genParties: Gen[(Seq[(String, Long)], Long)] = for {
     n <- Gen.chooseNum(1, 8)

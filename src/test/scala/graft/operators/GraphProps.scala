@@ -14,12 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraphProps extends Properties("GraphOps") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("graph-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genGraph: Gen[Seq[(Long, Long)]] = for {
     nNodes <- Gen.chooseNum(2, 8)

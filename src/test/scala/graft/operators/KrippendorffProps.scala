@@ -12,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object KrippendorffProps extends Properties("KrippendorffAlpha") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("krippendorff-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // (unit, category) ratings; units 0..n-1, categories from a small set
   private val genRatings: Gen[List[(Long, String)]] = for {

@@ -17,12 +17,7 @@ import org.apache.spark.sql.SparkSession
   */
 object MatchingProps extends Properties("GaleShapley") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("matching-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // (s, r, p, a): ragged dense-ranked pref lists over few acceptees
   private val genPrefs: Gen[List[(Long, Long, Long, Long)]] = for {

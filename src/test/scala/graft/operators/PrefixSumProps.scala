@@ -17,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object PrefixSumProps extends Properties("PrefixSum") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("prefix-sum-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // (group | null, unique-per-group order key, value)
   private val genRows: Gen[Seq[(Option[String], Long, Long)]] = for {

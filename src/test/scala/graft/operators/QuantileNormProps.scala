@@ -11,12 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object QuantileNormProps extends Properties("QuantileNorm") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("quantile-norm-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private def reference(rows: Seq[(Long, String, Long)]): Map[Long, Long] = {
     val pool = rows.map(_._3).sorted

@@ -11,12 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RobustStatsProps extends Properties("RobustStats") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("robust-stats-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genAB: Gen[Seq[(Boolean, Long)]] = for {
     n <- Gen.chooseNum(1, 40)

@@ -15,12 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityJoinProps extends Properties("SimilarityJoin") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("simjoin-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genDocs: Gen[(List[(Long, List[String])], Int, Int)] = for {
     nDocs <- Gen.chooseNum(1, 10)

@@ -12,12 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object StatsProps extends Properties("Stats") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("stats-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // Keyed pairs with deliberately tiny value range so |d| ties and
   // zero differences are common.

@@ -13,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeriesProps extends Properties("TimeSeries") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("time-series-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // (key, ord, value) with unique (key, ord)
   private val genRows: Gen[(Seq[(String, Long, Long)], Long)] = for {

@@ -16,12 +16,7 @@ import org.apache.spark.sql.SparkSession
   */
 object TwoSampleMetricsProps extends Properties("TwoSampleMetrics") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("two-sample-metrics-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val genAB: Gen[Seq[(Boolean, Long)]] = for {
     n <- Gen.chooseNum(2, 24)

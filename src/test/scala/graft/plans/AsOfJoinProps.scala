@@ -15,12 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoinProps extends Properties("AsOfJoinExec") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("asof-join-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   private val keys = Seq("A", "B", "C")
 

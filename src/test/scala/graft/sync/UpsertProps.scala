@@ -14,12 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object UpsertProps extends Properties("Upsert") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("upsert-props").getOrCreate()
+  private lazy val spark: SparkSession = graft.TestSpark.spark
 
   // (key, cursor, uid, value) — uid unique per row, the tiebreak
   private val genRows: Gen[Seq[(Long, Long, Long, Long)]] = for {

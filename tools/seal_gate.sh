@@ -21,7 +21,7 @@ grep -q "^0 failures$" /tmp/seal_oracle.log \
   || { grep -v "\[OK\]" /tmp/seal_oracle.log | head -20; echo "SEAL GATE FAIL: oracle failures"; exit 1; }
 
 echo "== seal gate 2/2: PlanAudit (full inventory) =="
-sbt -batch "runMain graft.tools.PlanAudit" 2>/dev/null \
+SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.tools.PlanAudit" 2>/dev/null \
   | sed 's/^\[info\] //' \
   | grep -E '^(query +|q[0-9a-z_]+ )' > "PLAN_AUDIT_${ROUND}.txt" \
   || { echo "SEAL GATE FAIL: PlanAudit produced no table"; exit 1; }
