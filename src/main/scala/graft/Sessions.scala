@@ -5,7 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The one SparkSession factory. Every main, tool and test session is
   * built here, so they share one policy: `local[cores]`, one shuffle
   * partition per core, UTC session time, no UI. AQE stays at Spark's
-  * default (on), which `SessionsSpec` pins.
+  * default (on), which `SessionsSpec` pins. Logging starts at WARN from
+  * the classpath `log4j2.properties`, so the context's start-up INFO
+  * lines never print; `create` then sets the session's own level.
   */
 object Sessions {
 

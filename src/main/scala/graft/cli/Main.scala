@@ -294,29 +294,9 @@ object Main {
     val dfs = engine.sync(spark, selected, replication, state)
 
     val catalog = source.discover(spark)
-    // Per-stream consumer parallelism (SURVEY §2.1 #9 — the reference runs
-    // one daemon thread per stream, tap.py:783-791): with --out and
-    // --jobs N, stream writes run as N concurrent Spark jobs from the
-    // driver (Spark job submission is thread-safe; executors multiplex).
-    // Singer stdout emission stays sequential — stdout is one resource,
-    // exactly like the reference's STDOUT_LOCK.
-    val jobs = opts.get("jobs").flatMap(_.toIntOption).getOrElse(1)
-    val parquetSink: ((String, org.apache.spark.sql.DataFrame)) => (String, Long) = {
-      case (name, df) => writeParquetCounted(name, df, opts("out"))
-    }
     val counts: Seq[(String, Long)] =
-      if (opts.contains("out") && jobs > 1) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val futures = dfs.toSeq.sortBy(_._1).map(e =>
-            scala.concurrent.Future(parquetSink(e)))
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(futures),
-            scala.concurrent.duration.Duration.Inf)
-        } finally { pool.shutdown() }
-      } else if (opts.contains("out")) dfs.toSeq.sortBy(_._1).map(parquetSink)
+      if (opts.contains("out"))
+        dfs.toSeq.sortBy(_._1).map { case (name, df) => writeParquetCounted(name, df, opts("out")) }
       else {
         // aliased/duplicated outputs resolve key_properties through their
         // SOURCE stream's catalog entry, not the output name

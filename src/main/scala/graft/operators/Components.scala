@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components — the clustering backbone of near-dup
@@ -21,9 +21,6 @@ object Components {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** (id, component) for every vertex in `pairs` (columns idA, idB),
-    * where `component` is the minimum vertex id reachable from `id`.
-    */
   /** Triangle count over an undirected edge list given as (id_a < id_b)
     * pairs: the canonical two-join counting shape — for every wedge
     * a<b<c with edges (a,b) and (b,c), probe for the closing edge (a,c).
@@ -39,6 +36,10 @@ object Components {
       .agg(count(lit(1)).as("n_triangles"))
   }
 
+  /** `(id, label)` for every vertex in `pairs` (columns idA, idB),
+    * where `label` is the minimum vertex id reachable from `id`.
+    * Ids must be integral (every caller keys on BIGINT doc/part keys).
+    */
   def minLabel(
       pairs: DataFrame,
       idA: String = "id_a",
@@ -56,111 +57,65 @@ object Components {
     // back to id), all carrying only (id, label) pairs, and the one
     // count() action per round both materializes the round and reads
     // convergence — the boruvkaMsf pointer-jump precedent extended to
-    // the whole loop. Ids must be integral (every caller keys on
-    // BIGINT doc/part keys); labels are compared with Long min, which
-    // matches the DataFrame `least` on the same values bit-for-bit.
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val spark = pairs.sparkSession
-    val idTypes = Seq(pairs.schema(idA).dataType, pairs.schema(idB).dataType)
-    require(idTypes.forall(t => t == LongType || t == IntegerType),
-      s"minLabel needs integral vertex ids, got $idTypes — the min-label " +
-        "order must agree with the engine's value order")
-    // one pass over the caller's pair pipeline: flatMap emits both edge
-    // directions, so nothing upstream evaluates twice (the old
-    // DataFrame union read the input once per branch before its pin)
-    val sym = pairs
-      .select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
-      .rdd
-      // a null id would NPE in getLong where the old DataFrame path
-      // dropped it through join/distinct null semantics — keep the
-      // tolerant behavior (no caller emits null pair ids today)
-      .flatMap(r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0))))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // scale-adaptive width (guide §2: derive partitioning from input
-    // size, not a constant): LSH/blocking pair sets span 10² to 10⁹
-    // edges; a fixed defaultParallelism width costs rounds × width
-    // near-empty tasks on the small end (measured: ~500 10-ms tasks on
-    // a 10³-edge graph), while a width of 1 serializes a billion-edge
-    // component loop. ~64k edges per partition, capped at the session's
-    // parallelism — at cluster scale the cap keeps every core fed.
-    val nEdges = sym.count()
-    // clamp in LONG before toInt: nEdges/65536+1 wraps negative past
-    // ~1.4e14 edges, which the max(1, …) would collapse to width 1 —
-    // serializing exactly the case the adaptive width exists for
-    val part = new HashPartitioner(math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, nEdges / 65536L + 1L)).toInt)
-    val edges = sym.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // vertex spine: edges are symmetric, so keys cover every endpoint;
-    // the partitioner puts all copies of a key in one partition, so a
-    // same-partitioner reduceByKey IS the global distinct with NO
-    // shuffle — and unlike a per-partition toSet (which holds every
-    // distinct key of the partition boxed on heap at once: width is
-    // capped at defaultParallelism, so keys-per-partition grows with
-    // the graph), the reduce aggregator spills to disk under pressure
-    var labels = edges.mapValues(_ => ())
-      .reduceByKey(part, (a, _) => a)
-      .mapPartitions(it => it.map { case (v, _) => (v, v) },
-        preservesPartitioning = true)
-    var prevRound: org.apache.spark.rdd.RDD[(Long, (Long, Long))] = null
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIters) {
-      // (1) neighbor min: the smallest label in each vertex's
-      // neighborhood (map-side-combined reduceByKey)
-      val msgs = edges.join(labels, part)
-        .map { case (_, (dst, lu)) => (dst, lu) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      // old label rides along so convergence reads off the persisted
-      // rows with a plain filter+count, not another join
-      val prop = labels.leftOuterJoin(msgs, part)
-        .mapValues { case (l, m) => (l, math.min(l, m.getOrElse(l))) }
-      // (2) pointer jumping: label(v) := min(label(v), label(label(v)))
-      val byLabel = prop.map { case (v, (old, lab)) => (lab, (v, old)) }
-      val labelOf = prop.mapValues(_._2)
-      val next = byLabel.leftOuterJoin(labelOf, part)
-        .map { case (lab, ((v, old), ll)) => (v, (old, math.min(lab, ll.getOrElse(lab)))) }
-        .partitionBy(part)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      changed = next.filter { case (_, (old, lab)) => lab < old }.count()
-      // only the current round stays persisted; the count() above is
-      // the action that materialized `next`, so the superseded round
-      // is provably no longer needed
-      if (prevRound != null) prevRound.unpersist(blocking = false)
-      prevRound = next
-      labels = next.mapValues(_._2)
-      iter += 1
+    // the whole loop. Labels are compared with Long min, which matches
+    // the DataFrame `least` on the same values bit-for-bit.
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val outType = Checkpoints.idType("minLabel",
+      Seq(pairs.schema(idA).dataType, pairs.schema(idB).dataType))
+    Checkpoints.withEdgeRdd(pairs, idA, idB, symmetric = true) { (edges, part) =>
+      // vertex spine: edges are symmetric, so keys cover every endpoint;
+      // the partitioner puts all copies of a key in one partition, so a
+      // same-partitioner reduceByKey IS the global distinct with NO
+      // shuffle — and unlike a per-partition toSet (which holds every
+      // distinct key of the partition boxed on heap at once: width is
+      // capped at defaultParallelism, so keys-per-partition grows with
+      // the graph), the reduce aggregator spills to disk under pressure
+      var labels = edges.mapValues(_ => ())
+        .reduceByKey(part, (a, _) => a)
+        .mapPartitions(it => it.map { case (v, _) => (v, v) },
+          preservesPartitioning = true)
+      var prevRound: org.apache.spark.rdd.RDD[(Long, (Long, Long))] = null
+      var iter = 0
+      var changed = 1L
+      while (changed > 0 && iter < maxIters) {
+        // (1) neighbor min: the smallest label in each vertex's
+        // neighborhood (map-side-combined reduceByKey)
+        val msgs = edges.join(labels, part)
+          .map { case (_, (dst, lu)) => (dst, lu) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+        // old label rides along so convergence reads off the persisted
+        // rows with a plain filter+count, not another join
+        val prop = labels.leftOuterJoin(msgs, part)
+          .mapValues { case (l, m) => (l, math.min(l, m.getOrElse(l))) }
+        // (2) pointer jumping: label(v) := min(label(v), label(label(v)))
+        val byLabel = prop.map { case (v, (old, lab)) => (lab, (v, old)) }
+        val labelOf = prop.mapValues(_._2)
+        val next = byLabel.leftOuterJoin(labelOf, part)
+          .map { case (lab, ((v, old), ll)) => (v, (old, math.min(lab, ll.getOrElse(lab)))) }
+          .partitionBy(part)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        changed = next.filter { case (_, (old, lab)) => lab < old }.count()
+        // only the current round stays persisted; the count() above is
+        // the action that materialized `next`, so the superseded round
+        // is provably no longer needed
+        if (prevRound != null) prevRound.unpersist(blocking = false)
+        prevRound = next
+        labels = next.mapValues(_._2)
+        iter += 1
+      }
+      log.info(s"minLabel ran $iter rounds (the last confirming quiescence)")
+      try {
+        if (changed > 0) throw new IllegalStateException(
+          s"connected components did not converge within $maxIters rounds " +
+            s"($changed labels still changing) — raise maxIters; returning " +
+            "partial labels would silently keep duplicate representatives")
+        Checkpoints.pinRows(pairs.sparkSession,
+          labels.map { case (v, l) => Row(v, l) },
+          StructType(Seq(StructField("id", LongType, nullable = false),
+            StructField("label", LongType, nullable = false))),
+          Map("id" -> outType, "label" -> outType))
+      } finally if (prevRound != null) prevRound.unpersist(blocking = false)
     }
-    log.info(s"minLabel ran $iter rounds (the last confirming quiescence)")
-    if (changed > 0) {
-      // release executor storage BEFORE the raise — the session lives on
-      sym.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      if (prevRound != null) prevRound.unpersist(blocking = false)
-      throw new IllegalStateException(
-        s"connected components did not converge within $maxIters rounds " +
-          s"($changed labels still changing) — raise maxIters; returning " +
-          "partial labels would silently keep duplicate representatives")
-    }
-    // eager pin BEFORE the RDD storage is released: the returned frame
-    // must not recompute through unpersisted rounds
-    val outType = if (idTypes.contains(LongType)) LongType else idTypes.head
-    val raw = spark.createDataFrame(
-      labels.map { case (v, l) => Row(v, l) },
-      StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("label", LongType, nullable = false))))
-    val out = Checkpoints.pin(
-      if (outType == LongType) raw
-      else raw.select(col("id").cast(outType), col("label").cast(outType)))
-    sym.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    if (prevRound != null) prevRound.unpersist(blocking = false)
-    out
   }
 
   /** Dedup by component: keep only the min-id representative of every

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StructField, StructType}
 
 /** Frontier-style graph primitives beyond ranking ([[PageRank]]) and
   * clustering ([[Components]]): multi-source BFS hop counts (the
@@ -23,6 +25,19 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Graphs {
 
+  /** The BFS family's seed ids at the RDD layer, nulls dropped. The
+    * frontier loops run there (r18): each round is pure (key, value)
+    * joins over the pinned edge list, and the r17 DataFrame rendering
+    * still paid a full Catalyst analyze/optimize pass + AQE stages PER
+    * lazy round-pin at materialization (~40-50 jobs on q_ecc_pivots
+    * even after the convergence-count removal). RDD self-joins plan
+    * nothing; the whole hop chain materializes in ONE action (the
+    * minLabel treatment, Components.scala).
+    */
+  private def seedIds(seeds: DataFrame, seedCol: String): RDD[Long] =
+    seeds.select(col(seedCol).cast("long")).rdd
+      .flatMap(r => if (r.isNullAt(0)) Iterator.empty else Iterator(r.getLong(0)))
+
   /** Minimum hop count from any seed, following directed edges, capped
     * at `maxHops`: `(id, hop)` for every node reachable in <= maxHops
     * hops (seeds themselves at hop 0; unreachable nodes absent).
@@ -31,49 +46,8 @@ object Graphs {
     * per-round driver job an early-exit count costs (r17, measured).
     * Each round: one join of the pinned edge list against the frontier
     * (frontier ids only), one distinct, one anti-join against the
-    * settled set — all node-spine-sized shuffles.
+    * settled set — all node-spine-sized shuffles. Ids must be integral.
     */
-  /** Shared RDD-layer plumbing of the BFS family (r18): symmetrized-
-    * input prep, adaptive partitioner width, and the result pin. The
-    * frontier loops run at the RDD layer — each round is pure
-    * (key, value) joins over the pinned edge list, and the r17
-    * DataFrame rendering still paid a full Catalyst analyze/optimize
-    * pass + AQE stages PER lazy round-pin at materialization (~40-50
-    * jobs on q_ecc_pivots even after the convergence-count removal).
-    * RDD self-joins plan nothing; the whole hop chain materializes in
-    * ONE action (the minLabel treatment, Components.scala). Ids must
-    * be integral — every caller keys on BIGINT doc ids.
-    */
-  private def edgeRdd(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String): org.apache.spark.rdd.RDD[(Long, Long)] =
-    edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .rdd
-      // null ids never joined in the DataFrame rendering — drop, not NPE
-      .flatMap(r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else Iterator((r.getLong(0), r.getLong(1))))
-      .distinct()
-
-  /** Scale-adaptive width — derive partitioning from input size, not a
-    * constant (guide §2, the minLabel rationale): ~64k edges per
-    * partition, capped at the session's parallelism, clamped in Long.
-    */
-  private def edgePartitioner(
-      spark: org.apache.spark.sql.SparkSession,
-      nEdges: Long): org.apache.spark.HashPartitioner =
-    new org.apache.spark.HashPartitioner(math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, nEdges / 65536L + 1L)).toInt)
-
-  private def requireIntegralIds(types: Seq[org.apache.spark.sql.types.DataType],
-      what: String): Unit = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    require(types.forall(t => t == LongType || t == IntegerType),
-      s"$what needs integral vertex ids, got $types — the RDD frontier " +
-        "loop keys on Long")
-  }
-
   def bfsHops(
       edges: DataFrame,
       srcCol: String,
@@ -82,48 +56,33 @@ object Graphs {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val spark = edges.sparkSession
-    val idTypes = Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType,
-      seeds.schema(seedCol).dataType)
-    requireIntegralIds(idTypes, "bfsHops")
-    val sym = edgeRdd(edges, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val part = edgePartitioner(spark, sym.count())
-    val e = sym.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed0 = seeds.select(col(seedCol).cast("long")).rdd
-      .flatMap(r => if (r.isNullAt(0)) Iterator.empty else Iterator((r.getLong(0), 0)))
-      .reduceByKey(part, (a, _) => a) // distinct, co-partitioned with e
-    var dist = seed0
-    var frontier = seed0
-    // blind fixed rounds (r17): an emptied frontier makes every later
-    // round an empty no-op, so running the cap blind is
-    // result-identical — callers bound maxHops (3-6). first-visit-wins
-    // IS min-hop: a node enters `dist` in the round of its shortest
-    // path and the subtract blocks every later visit. Every per-round
-    // op is co-partitioned on `part` (narrow), so each hop costs ONE
-    // shuffle (the dst re-key) and ZERO driver jobs.
-    for (h <- 1 to maxHops) {
-      val nxt = e.join(frontier, part)
-        .map { case (_, (dst, _)) => (dst, h) }
-        .reduceByKey(part, (a, _) => a)
-        .subtractByKey(dist, part)
-      dist = dist.union(nxt) // partitioner-aware union: same partitioner
-      frontier = nxt
+    val outType = Checkpoints.idType("bfsHops", Seq(edges.schema(srcCol).dataType,
+      edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
+    Checkpoints.withEdgeRdd(edges, srcCol, dstCol) { (e, part) =>
+      val seed0 = seedIds(seeds, seedCol).map(s => (s, 0))
+        .reduceByKey(part, (a, _) => a) // distinct, co-partitioned with e
+      var dist = seed0
+      var frontier = seed0
+      // blind fixed rounds (r17): an emptied frontier makes every later
+      // round an empty no-op, so running the cap blind is
+      // result-identical — callers bound maxHops (3-6). first-visit-wins
+      // IS min-hop: a node enters `dist` in the round of its shortest
+      // path and the subtract blocks every later visit. Every per-round
+      // op is co-partitioned on `part` (narrow), so each hop costs ONE
+      // shuffle (the dst re-key) and ZERO driver jobs.
+      for (h <- 1 to maxHops) {
+        val nxt = e.join(frontier, part)
+          .map { case (_, (dst, _)) => (dst, h) }
+          .reduceByKey(part, (a, _) => a)
+          .subtractByKey(dist, part)
+        dist = dist.union(nxt) // partitioner-aware union: same partitioner
+        frontier = nxt
+      }
+      Checkpoints.pinRows(edges.sparkSession, dist.map { case (v, h) => Row(v, h) },
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("hop", IntegerType, nullable = false))),
+        Map("id" -> outType))
     }
-    val outType = if (idTypes.contains(LongType)) LongType else idTypes.head
-    val raw = spark.createDataFrame(
-      dist.map { case (v, h) => Row(v, h) },
-      StructType(Seq(StructField("id", LongType, nullable = false),
-        StructField("hop", IntegerType, nullable = false))))
-    val result = Checkpoints.pin(
-      if (outType == LongType) raw
-      else raw.select(col("id").cast(outType).as("id"), col("hop")))
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    result
   }
 
   /** Multi-source labeled BFS: min-hop distances (seed, id, hop) from
@@ -142,52 +101,36 @@ object Graphs {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val spark = edges.sparkSession
-    val idTypes = Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType,
-      seeds.schema(seedCol).dataType)
-    requireIntegralIds(idTypes, "multiSourceBfs")
-    val sym = edgeRdd(edges, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val part = edgePartitioner(spark, sym.count())
-    val e = sym.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // state is (seed, id)-keyed; its own partitioner of the same width
-    val pairPart = new org.apache.spark.HashPartitioner(part.numPartitions)
-    val seed0 = seeds.select(col(seedCol).cast("long")).rdd
-      .flatMap(r => if (r.isNullAt(0)) Iterator.empty
-        else Iterator(((r.getLong(0), r.getLong(0)), 0)))
-      .reduceByKey(pairPart, (a, _) => a) // distinct seeds at hop 0
-    var dist = seed0
-    // frontier keyed by vertex for the edge join: (id, seed)
-    var frontier = seed0.map { case ((seed, id), _) => (id, seed) }
-      .partitionBy(part)
-    // blind fixed rounds, RDD layer — see bfsHops. Per round: one
-    // (seed,dst) re-key shuffle + one frontier-by-vertex re-key; the
-    // edge join and the subtract are narrow (co-partitioned).
-    for (h <- 1 to maxHops) {
-      val nxt = e.join(frontier, part)
-        .map { case (_, (dst, seed)) => ((seed, dst), h) }
-        .reduceByKey(pairPart, (a, _) => a)
-        .subtractByKey(dist, pairPart)
-      dist = dist.union(nxt)
-      frontier = nxt.map { case ((seed, id), _) => (id, seed) }
+    val outType = Checkpoints.idType("multiSourceBfs", Seq(edges.schema(srcCol).dataType,
+      edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
+    Checkpoints.withEdgeRdd(edges, srcCol, dstCol) { (e, part) =>
+      // state is (seed, id)-keyed; its own partitioner of the same width
+      val pairPart = new HashPartitioner(part.numPartitions)
+      val seed0 = seedIds(seeds, seedCol).map(s => ((s, s), 0))
+        .reduceByKey(pairPart, (a, _) => a) // distinct seeds at hop 0
+      var dist = seed0
+      // frontier keyed by vertex for the edge join: (id, seed)
+      var frontier = seed0.map { case ((seed, id), _) => (id, seed) }
         .partitionBy(part)
+      // blind fixed rounds, RDD layer — see bfsHops. Per round: one
+      // (seed,dst) re-key shuffle + one frontier-by-vertex re-key; the
+      // edge join and the subtract are narrow (co-partitioned).
+      for (h <- 1 to maxHops) {
+        val nxt = e.join(frontier, part)
+          .map { case (_, (dst, seed)) => ((seed, dst), h) }
+          .reduceByKey(pairPart, (a, _) => a)
+          .subtractByKey(dist, pairPart)
+        dist = dist.union(nxt)
+        frontier = nxt.map { case ((seed, id), _) => (id, seed) }
+          .partitionBy(part)
+      }
+      Checkpoints.pinRows(edges.sparkSession,
+        dist.map { case ((s0, v), h) => Row(s0, v, h) },
+        StructType(Seq(StructField("seed", LongType, nullable = false),
+          StructField("id", LongType, nullable = false),
+          StructField("hop", IntegerType, nullable = false))),
+        Map("seed" -> outType, "id" -> outType))
     }
-    val outType = if (idTypes.contains(LongType)) LongType else idTypes.head
-    val raw = spark.createDataFrame(
-      dist.map { case ((s0, v), h) => Row(s0, v, h) },
-      StructType(Seq(StructField("seed", LongType, nullable = false),
-        StructField("id", LongType, nullable = false),
-        StructField("hop", IntegerType, nullable = false))))
-    val result = Checkpoints.pin(
-      if (outType == LongType) raw
-      else raw.select(col("seed").cast(outType).as("seed"),
-        col("id").cast(outType).as("id"), col("hop")))
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    result
   }
 
   /** Multi-source BFS with SHORTEST-PATH COUNTS — the σ half of
@@ -210,67 +153,51 @@ object Graphs {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val spark = edges.sparkSession
-    val idTypes = Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType,
-      seeds.schema(seedCol).dataType)
-    requireIntegralIds(idTypes, "pathCounts")
+    val outType = Checkpoints.idType("pathCounts", Seq(edges.schema(srcCol).dataType,
+      edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
     // σ rides BigInt at the RDD layer — integer-exact like the
     // DECIMAL(38,0) sums it replaces (a DECIMAL sum of integers IS the
     // integer sum while under 38 digits, and the 10^36 cap below
     // raises loudly well before that), so the emitted DECIMAL(38,0)
     // column is bit-identical to the DataFrame rendering's
     val sigmaCap = BigInt("9" * 36)
-    val sym = edgeRdd(edges, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val part = edgePartitioner(spark, sym.count())
-    val e = sym.partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairPart = new org.apache.spark.HashPartitioner(part.numPartitions)
-    val seed0 = seeds.select(col(seedCol).cast("long")).rdd
-      .flatMap(r => if (r.isNullAt(0)) Iterator.empty
-        else Iterator(((r.getLong(0), r.getLong(0)), (0, BigInt(1)))))
-      .reduceByKey(pairPart, (a, _) => a)
-    var dist = seed0
-    // frontier keyed by vertex: (id, (seed, sigma))
-    var frontier = seed0.map { case ((seed, id), (_, sig)) => (id, (seed, sig)) }
-      .partitionBy(part)
-    // blind fixed rounds, RDD layer — see bfsHops. A node entering at
-    // hop h takes σ = Σ σ(u) over ALL its hop-(h−1) predecessors (the
-    // reduceByKey sums them map-side); the subtract blocks every
-    // longer path.
-    for (h <- 1 to maxHops) {
-      val nxt = e.join(frontier, part)
-        .map { case (_, (dst, (seed, sig))) => ((seed, dst), sig) }
-        .reduceByKey(pairPart, (a: BigInt, b: BigInt) => a + b)
-        .subtractByKey(dist, pairPart)
-        .mapValues { sig =>
-          if (sig > sigmaCap) throw new IllegalStateException(
-            "pathCounts: sigma exceeds the 10^36 DECIMAL envelope — " +
-              "bound seeds/maxHops")
-          (h, sig)
-        }
-      dist = dist.union(nxt)
-      frontier = nxt.map { case ((seed, id), (_, sig)) => (id, (seed, sig)) }
+    Checkpoints.withEdgeRdd(edges, srcCol, dstCol) { (e, part) =>
+      val pairPart = new HashPartitioner(part.numPartitions)
+      val seed0 = seedIds(seeds, seedCol).map(s => ((s, s), (0, BigInt(1))))
+        .reduceByKey(pairPart, (a, _) => a)
+      var dist = seed0
+      // frontier keyed by vertex: (id, (seed, sigma))
+      var frontier = seed0.map { case ((seed, id), (_, sig)) => (id, (seed, sig)) }
         .partitionBy(part)
+      // blind fixed rounds, RDD layer — see bfsHops. A node entering at
+      // hop h takes σ = Σ σ(u) over ALL its hop-(h−1) predecessors (the
+      // reduceByKey sums them map-side); the subtract blocks every
+      // longer path.
+      for (h <- 1 to maxHops) {
+        val nxt = e.join(frontier, part)
+          .map { case (_, (dst, (seed, sig))) => ((seed, dst), sig) }
+          .reduceByKey(pairPart, (a: BigInt, b: BigInt) => a + b)
+          .subtractByKey(dist, pairPart)
+          .mapValues { sig =>
+            if (sig > sigmaCap) throw new IllegalStateException(
+              "pathCounts: sigma exceeds the 10^36 DECIMAL envelope — " +
+                "bound seeds/maxHops")
+            (h, sig)
+          }
+        dist = dist.union(nxt)
+        frontier = nxt.map { case ((seed, id), (_, sig)) => (id, (seed, sig)) }
+          .partitionBy(part)
+      }
+      Checkpoints.pinRows(edges.sparkSession,
+        dist.map { case ((s0, v), (h, sig)) =>
+          Row(s0, v, h, new java.math.BigDecimal(sig.bigInteger))
+        },
+        StructType(Seq(StructField("seed", LongType, nullable = false),
+          StructField("id", LongType, nullable = false),
+          StructField("hop", IntegerType, nullable = false),
+          StructField("sigma", DecimalType(38, 0), nullable = true))),
+        Map("seed" -> outType, "id" -> outType))
     }
-    val outType = if (idTypes.contains(LongType)) LongType else idTypes.head
-    val raw = spark.createDataFrame(
-      dist.map { case ((s0, v), (h, sig)) =>
-        Row(s0, v, h, new java.math.BigDecimal(sig.bigInteger))
-      },
-      StructType(Seq(StructField("seed", LongType, nullable = false),
-        StructField("id", LongType, nullable = false),
-        StructField("hop", IntegerType, nullable = false),
-        StructField("sigma", DecimalType(38, 0), nullable = true))))
-    val result = Checkpoints.pin(
-      if (outType == LongType) raw
-      else raw.select(col("seed").cast(outType).as("seed"),
-        col("id").cast(outType).as("id"), col("hop"), col("sigma")))
-    sym.unpersist(blocking = false)
-    e.unpersist(blocking = false)
-    result
   }
 
   /** Pivot betweenness (Brandes & Pich 2007, "Centrality estimation in
@@ -485,10 +412,10 @@ object Graphs {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(scale >= 100, s"scale must be >= 100, got $scale")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().repartition(col("src")).localCheckpoint(false)
+      .distinct().repartition(col("src")).transform(Checkpoints.pin(_, eager = false))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(false)
+      .transform(Checkpoints.pin(_, eager = false))
     val pins = scala.collection.mutable.Buffer[DataFrame](e, nodes)
     // renormalize raw integer sums onto [0, S] by the round's max —
     // the integer-exact stand-in for the L2 norm of float HITS.
@@ -529,13 +456,12 @@ object Graphs {
       val h = renorm(rawHub)
       hub = h
     }
-    val result = nodes
+    val result = Checkpoints.pin(nodes
       .join(hub.select(col("id"), col("score").as("hub")), Seq("id"), "left")
       .join(auth.select(col("id"), col("score").as("auth")), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("hub"), lit(0L)).as("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-      .localCheckpoint(true)
+        coalesce(col("auth"), lit(0L)).as("auth")))
     Checkpoints.release(pins.toSeq)
     result
   }
@@ -568,28 +494,18 @@ object Graphs {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).as("w"))
       .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .repartition(col("src")).localCheckpoint(false)
+      .repartition(col("src")).transform(Checkpoints.pin(_, eager = false))
     val d0 = seeds.select(col(seedCol).as("id")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(false)
-    val pins = scala.collection.mutable.Buffer[DataFrame](e, d0)
-    var dist = d0
-    for (r <- 1 to rounds) {
+      .withColumn("dist", lit(0L)).transform(Checkpoints.pin(_, eager = false))
+    // every-2nd-round pin: dist is referenced twice per round (join +
+    // union), so one unpinned stretch doubles a shallow subtree —
+    // exchange reuse dedups its execution — while each skipped pin
+    // saves a full Catalyst pass (r17: these loops were driver-bound)
+    Checkpoints.fixedRounds(d0, rounds, every = 2, buildPins = Seq(e, d0)) { dist =>
       val relaxed = e.join(dist.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.union(relaxed)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-      // every-2nd-round pin: dist is referenced twice per round (join +
-      // union), so one unpinned stretch doubles a shallow subtree —
-      // exchange reuse dedups its execution — while each skipped pin
-      // saves a full Catalyst pass (r17: these loops were driver-bound)
-      dist =
-        if (r == rounds) next.localCheckpoint(true)
-        else if (r % 2 == 0) {
-          val p = Checkpoints.pin(next, eager = false); pins += p; p
-        } else next
+      dist.union(relaxed).groupBy(col("id")).agg(min(col("dist")).as("dist"))
     }
-    Checkpoints.release(pins.toSeq)
-    dist
   }
 
   /** Fixed-horizon Katz centrality (Katz 1953) with a DYADIC damping
@@ -651,7 +567,7 @@ object Graphs {
       .groupBy(col("id"))
       .agg(loudDecToLong(sum(col("c")), "katzRounds: walk-count sum exceeds BIGINT")
         .as("katz_num"))
-    val materialized = out.localCheckpoint(true)
+    val materialized = Checkpoints.pin(out)
     Checkpoints.release(pins.toSeq)
     materialized
   }
@@ -684,31 +600,22 @@ object Graphs {
     val p = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .filter(col("src") =!= col("dst"))
     val e = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(col("src")).localCheckpoint(false)
-    val pins = scala.collection.mutable.Buffer[DataFrame](e)
+      .distinct().repartition(col("src")).transform(Checkpoints.pin(_, eager = false))
     // every endpoint appears as src after symmetrization
-    var labels = e.select(col("src").as("id")).distinct()
+    val labels0 = e.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("cnt").desc, col("label").asc)
-    for (r <- 1 to rounds) {
-      val next = e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+    val w = Window.partitionBy(col("id")).orderBy(col("cnt").desc, col("label").asc)
+    // every-2nd-round pin — see bellmanFordRounds (labels is
+    // single-referenced per round, so an unpinned stretch only deepens
+    // the plan; the skipped Catalyst pass was the measured cost)
+    Checkpoints.fixedRounds(labels0, rounds, every = 2, buildPins = Seq(e)) { labels =>
+      e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("id"), col("label"))
-      // every-2nd-round pin — see bellmanFordRounds (labels is
-      // single-referenced per round, so an unpinned stretch only deepens
-      // the plan; the skipped Catalyst pass was the measured cost)
-      labels =
-        if (r == rounds) next.localCheckpoint(true)
-        else if (r % 2 == 0) {
-          val pin = Checkpoints.pin(next, eager = false); pins += pin; pin
-        } else next
     }
-    Checkpoints.release(pins.toSeq)
-    labels
   }
 
   /** Common-neighbor link prediction (Liben-Nowell & Kleinberg 2003,
@@ -759,15 +666,6 @@ object Graphs {
     result
   }
 
-  /** Fixed-round k-core peeling over the undirected graph of `pairs`:
-    * each round drops every node whose degree in the surviving subgraph
-    * is < k, then restricts the edges to survivors. Exactly `rounds`
-    * rounds run (converged or not — the [[PageRank]] fixed-iteration
-    * replay contract); the result is `(id, deg)` for surviving nodes
-    * with their degree inside the FINAL surviving subgraph. With enough
-    * rounds this is the k-core (Seidman 1983); a fixed small count is
-    * the bounded-cost variant a corpus-scale spam sweep runs.
-    */
   /** Fixed-round k-truss peel (Cohen 2008) — the EDGE-level cohesion
     * filter [[kcoreRounds]]'s degree test only approximates: each
     * round drops canonical edges whose triangle support (common
@@ -793,10 +691,9 @@ object Graphs {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val p = pairs.select(col(idA).as("u"), col(idB).as("w"))
       .filter(col("u") =!= col("w"))
-    var canon = p.select(least(col("u"), col("w")).as("u"),
+    val canon0 = p.select(least(col("u"), col("w")).as("u"),
         greatest(col("u"), col("w")).as("w"))
-      .distinct().localCheckpoint(false)
-    val pins = scala.collection.mutable.Buffer[DataFrame](canon)
+      .distinct().transform(Checkpoints.pin(_, eager = false))
     def support(c: DataFrame): DataFrame = {
       val und = c.union(c.select(col("w").as("u"), col("u").as("w")))
         .select(col("u").as("a"), col("w").as("b"))
@@ -807,16 +704,13 @@ object Graphs {
         .join(c, Seq("u", "w"), "left_semi")
         .groupBy(col("u"), col("w")).agg(count(lit(1)).as("supp"))
     }
-    for (r <- 1 to rounds) {
-      val next = canon.join(support(canon), Seq("u", "w"), "left")
+    val canon = Checkpoints.fixedRounds(canon0, rounds, every = 1,
+        buildPins = Seq(canon0)) { c =>
+      c.join(support(c), Seq("u", "w"), "left")
         .na.fill(0L, Seq("supp"))
         .filter(col("supp") >= (k - 2).toLong)
         .select("u", "w")
-      canon =
-        if (r == rounds) next.localCheckpoint(true)
-        else { val pin = next.localCheckpoint(false); pins += pin; pin }
     }
-    Checkpoints.release(pins.toSeq)
     canon.join(support(canon), Seq("u", "w"), "left")
       .na.fill(0L, Seq("supp"))
       .select(col("u").as("id_a"), col("w").as("id_b"),
@@ -888,6 +782,15 @@ object Graphs {
       .otherwise(d.cast("long"))
   }
 
+  /** Fixed-round k-core peeling over the undirected graph of `pairs`:
+    * each round drops every node whose degree in the surviving subgraph
+    * is < k, then restricts the edges to survivors. Exactly `rounds`
+    * rounds run (converged or not — the [[PageRank]] fixed-iteration
+    * replay contract); the result is `(id, deg)` for surviving nodes
+    * with their degree inside the FINAL surviving subgraph. With enough
+    * rounds this is the k-core (Seidman 1983); a fixed small count is
+    * the bounded-cost variant a corpus-scale spam sweep runs.
+    */
   def kcoreRounds(
       pairs: DataFrame,
       idA: String,
@@ -897,21 +800,15 @@ object Graphs {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val p = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-    var e = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().localCheckpoint(false)
-    val pins = scala.collection.mutable.Buffer[DataFrame](e)
-    for (r <- 1 to rounds) {
+    val e0 = p.union(p.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct().transform(Checkpoints.pin(_, eager = false))
+    val e = Checkpoints.fixedRounds(e0, rounds, every = 1, buildPins = Seq(e0)) { e =>
       val surv = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("id"))
-      val next = e
-        .join(surv.select(col("id").as("src")), Seq("src"), "left_semi")
+      e.join(surv.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(surv.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-      e =
-        if (r == rounds) next.localCheckpoint(true)
-        else { val pin = next.localCheckpoint(false); pins += pin; pin }
     }
-    Checkpoints.release(pins.toSeq)
     e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"))
   }
@@ -946,7 +843,7 @@ object Graphs {
       .select(least(col("u"), col("w")).as("u"),
         greatest(col("u"), col("w")).as("w"))
       .distinct()
-    var e = p.localCheckpoint(false)
+    var e = Checkpoints.pin(p, eager = false)
     val pins = scala.collection.mutable.Buffer[DataFrame](e)
     val snaps = scala.collection.mutable.Buffer[DataFrame]()
     for (r <- 0 to rounds) {
@@ -969,12 +866,11 @@ object Graphs {
           .join(surv.select(col("id").as("u")), Seq("u"), "left_semi")
           .join(surv.select(col("id").as("w")), Seq("w"), "left_semi")
           .select("u", "w")
-        val pin = next.localCheckpoint(false)
-        pins += pin
-        e = pin
+        e = Checkpoints.pin(next, eager = false)
+        pins += e
       }
     }
-    val traj = snaps.reduce(_ unionAll _).localCheckpoint(true)
+    val traj = Checkpoints.pin(snaps.reduce(_ unionAll _))
     Checkpoints.release(pins.toSeq)
     val wBest = Window.orderBy(col("density_x1000").desc, col("round").asc)
     traj
@@ -1026,14 +922,12 @@ object Graphs {
     // be integral — Long total order IS the SQL (w, u, v) struct
     // order, so the chosen forest is bit-identical (loud require; the
     // only caller keys on BIGINT supplier ids/costs).
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val spark = edges.sparkSession
-    val inTypes = Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType,
-      edges.schema(weightCol).dataType)
-    require(inTypes.forall(t => t == LongType || t == IntegerType),
-      s"boruvkaMsf needs integral ids and weights, got $inTypes — the " +
-        "(w, u, v) total order must agree with the engine's value order")
+    // the id columns share the two inputs' common (widest) type, as in
+    // the old least/greatest/min(w) rendering
+    val idT = Checkpoints.idType("boruvkaMsf",
+      Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType))
+    val wT = Checkpoints.idType("boruvkaMsf", Seq(edges.schema(weightCol).dataType))
     val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // canonical simple graph: u<v, min w per pair; null ids never
     // passed the a=!=b filter in the DataFrame rendering — drop them
@@ -1051,7 +945,7 @@ object Graphs {
       .reduceByKey((x: Long, y: Long) => math.min(x, y))
       .persist(storage)
     val nEdges = canon0.count()
-    val part = edgePartitioner(spark, nEdges)
+    val part = Checkpoints.edgePartitioner(spark.sparkContext, nEdges)
     // keyed by u for the per-round component-label join
     val canon = canon0.map { case ((u, v), w) => (u, (v, w)) }
       .partitionBy(part).persist(storage)
@@ -1160,21 +1054,14 @@ object Graphs {
       else spark.sparkContext
         .union(chosenBuf.toSeq.map(_.map { case (_, (w, u, v, _, _)) => (u, v, w) }))
         .distinct()
-    val uT = inTypes(0); val vT = inTypes(1); val wT = inTypes(2)
-    // output types mirror the old least/greatest/min(w) rendering: the
-    // id columns share the two inputs' common (widest) type
-    val idT = if (uT == LongType || vT == LongType) LongType else uT
-    val raw = spark.createDataFrame(
+    // the eager pin materializes the forest off the still-persisted
+    // chosen rounds BEFORE their storage releases
+    val msf = Checkpoints.pinRows(spark,
       forest.map { case (u, v, w) => Row(u, v, w) },
       StructType(Seq(StructField("u", LongType, nullable = false),
         StructField("v", LongType, nullable = false),
-        StructField("w", LongType, nullable = false))))
-    // the eager pin materializes the forest off the still-persisted
-    // chosen rounds BEFORE their storage releases
-    val msf = Checkpoints.pin(
-      if (idT == LongType && wT == LongType) raw
-      else raw.select(col("u").cast(idT).as("u"), col("v").cast(idT).as("v"),
-        col("w").cast(wT).as("w")))
+        StructField("w", LongType, nullable = false))),
+      Map("u" -> idT, "v" -> idT, "w" -> wT))
     releaseAll()
     msf
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -21,14 +21,14 @@ import org.apache.spark.sql.types.DecimalType
   * is NO per-round node-spine join: every aggregation key is a node
   * with in-edges, and nodes WITHOUT in-edges sit at the constant
   * teleport floor every round, so the full spine is just the union of
-  * the round's aggregate with that precomputed constant slice. Each
-  * round's scores are localCheckpoint-pinned (lazily — no blocking job
-  * per round) so the logical plan stays flat (the [[Components.minLabel]]
-  * lineage discipline); the FINAL round is checkpointed eagerly — one
-  * action materializes the whole iteration — and every intermediate pin
-  * (per-round spines, the edge list, the floor slice) is unpersisted
-  * before returning, so repeated calls in one session hold only the
-  * final node-spine-sized result, not O(iters · |V|) of history.
+  * the round's aggregate with that precomputed constant slice. Every 4th
+  * round's scores are pinned lazily (no blocking job per round) so the
+  * logical plan stays flat; the FINAL round is checkpointed eagerly —
+  * one action materializes the whole iteration — and every intermediate
+  * pin (round spines, the edge list, the floor slice) is unpersisted
+  * before returning ([[Checkpoints.fixedRounds]]), so repeated calls in
+  * one session hold only the final node-spine-sized result, not
+  * O(iters · |V|) of history.
   *
   * PRECONDITION (the NaN-precondition discipline of [[Stats]]): message
   * sums accumulate in DECIMAL(38,0) — safe to ~1e36 — but the damped
@@ -40,12 +40,49 @@ import org.apache.spark.sql.types.DecimalType
   */
 object PageRank {
 
-  /** Intermediate pins release through [[Checkpoints.release]] once the
-    * final round is eagerly materialized — the final checkpoint truncates
-    * its lineage, so nothing downstream recomputes through released
-    * rounds.
+  /** The round every variant shares, over the pinned edge list `ewd`
+    * (`src`, `dst` and whatever `msg` and `carry` read): the message
+    * `msg` of each edge's source score, summed per destination in
+    * DECIMAL(38,0); the damped jump `teleport + (in_sum·85) div 100`;
+    * then the constant `floor` slice of the nodes without in-edges.
+    * `carry` columns are functionally dependent on `dst` and ride the
+    * grouping so `teleport` may read them. An overflow NULL from the
+    * damped jump propagates into a NULL score (a hub past the
+    * precondition never silently ranks).
+    *
+    * Every 4th round pins, not every round: each lazy pin costs a full
+    * Catalyst pass (~0.25 s driver, the boruvkaMsf lesson), which
+    * DOMINATED the 3-round queries at bench scale (r17 profile: wall 2-3×
+    * summed task time). A ≤4-deep unpinned join-agg chain plans once and
+    * keeps carried stats ≤ 2^4 factors. `ewd`, `floor` and `extraPins`
+    * release once the final round is materialized.
     */
-  private def release(dfs: Seq[DataFrame]): Unit = Checkpoints.release(dfs)
+  private def rankRounds(
+      ewd: DataFrame,
+      floor: DataFrame,
+      init: DataFrame,
+      iters: Int,
+      msg: Column,
+      teleport: Column,
+      carry: Seq[Column] = Nil,
+      extraPins: Seq[DataFrame] = Nil): DataFrame =
+    Checkpoints.fixedRounds(init, iters, every = 4, Seq(ewd, floor) ++ extraPins) { scores =>
+      ewd.join(scores, col("src") === col("id"))
+        .select((col("dst").as("to") +: carry :+ msg.as("c")): _*)
+        .groupBy((col("to") +: carry): _*)
+        .agg(sum(col("c").cast(DecimalType(38, 0))).as("in_sum"))
+        .select(col("to").as("id"), (teleport + expr("(in_sum * 85) div 100")).as("score"))
+        .union(floor)
+    }
+
+  /** Nodes with in-edges — exactly the aggregation keys of every round —
+    * and the rest of `srcs`' `src` ids, which never receive mass and sit
+    * at their teleport term from round 1 on (a constant slice).
+    */
+  private def splitNodes(ewd: DataFrame, srcs: DataFrame): (DataFrame, DataFrame) = {
+    val dstNodes = ewd.select(col("dst").as("id")).distinct()
+    (dstNodes, srcs.select(col("src").as("id")).join(dstNodes, Seq("id"), "left_anti"))
+  }
 
   /** Ranks after exactly `iters` rounds over the directed edge list
     * (`srcCol`, `dstCol`). Nodes = every endpoint; a node with no
@@ -66,47 +103,14 @@ object PageRank {
     // pin the message-side layout once: hash-partitioned on src, so the
     // per-round join only exchanges the (node-spine-sized) scores side
     val ewd = e.join(deg, Seq("src")).repartition(col("src"))
-      .localCheckpoint(false)
+      .transform(Checkpoints.pin(_, eager = false))
     val teleport = (scale * 15L) / 100L
-    // nodes with in-edges are exactly the aggregation keys of every
-    // round; nodes without in-edges never receive mass and sit at the
-    // teleport floor from round 1 on — a constant slice, computed once
-    val dstNodes = ewd.select(col("dst").as("id")).distinct()
-    val floorNodes = deg.select(col("src").as("id"))
-      .join(dstNodes, Seq("id"), "left_anti")
+    val (dstNodes, floorNodes) = splitNodes(ewd, deg)
     val floorScores = floorNodes.select(col("id"), lit(teleport).as("score"))
-      .localCheckpoint(false)
-    var scores = dstNodes.union(floorNodes)
-      .select(col("id"), lit(scale).as("score"))
-    val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (i <- 1 to iters) {
-      val inSum = ewd.join(scores, col("src") === col("id"))
-        .select(col("dst").as("to"), expr("score div deg").as("c"))
-        .groupBy(col("to"))
-        .agg(sum(col("c").cast(DecimalType(38, 0))).as("in_sum"))
-      // an overflow NULL from the damped jump propagates into a NULL
-      // score (a hub past the precondition never silently ranks); the
-      // no-in-edges case cannot reach here — those ids live in the
-      // constant floor slice
-      val next = inSum
-        .select(col("to").as("id"),
-          (lit(teleport) + expr("(in_sum * 85) div 100")).as("score"))
-        .union(floorScores)
-      // pin every 4th round, not every round: each lazy pin costs a full
-      // Catalyst pass (~0.25 s driver, the boruvkaMsf lesson), which
-      // DOMINATED the 3-round queries at bench scale (r17 profile: wall
-      // 2-3× summed task time). A ≤4-deep unpinned join-agg chain plans
-      // once and keeps carried stats ≤ 2^4 factors (Checkpoints.pin
-      // clamps at the boundary pins anyway).
-      scores =
-        if (i == iters) next.localCheckpoint(true)
-        else if (i % 4 == 0) {
-          val p = graft.operators.Checkpoints.pin(next, eager = false)
-          pins += p; p
-        } else next
-    }
-    release(pins.toSeq :+ ewd :+ floorScores)
-    scores
+      .transform(Checkpoints.pin(_, eager = false))
+    rankRounds(ewd, floorScores,
+      dstNodes.union(floorNodes).select(col("id"), lit(scale).as("score")),
+      iters, expr("score div deg"), lit(teleport))
   }
 
   /** Weighted PageRank (the edge-weighted generalization in Xing &
@@ -135,36 +139,14 @@ object PageRank {
       col(weightCol).as("w"))
     val wout = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
     val ewd = e.join(wout, Seq("src")).repartition(col("src"))
-      .localCheckpoint(false)
+      .transform(Checkpoints.pin(_, eager = false))
     val teleport = (scale * 15L) / 100L
-    val dstNodes = ewd.select(col("dst").as("id")).distinct()
-    val floorNodes = wout.select(col("src").as("id"))
-      .join(dstNodes, Seq("id"), "left_anti")
+    val (dstNodes, floorNodes) = splitNodes(ewd, wout)
     val floorScores = floorNodes.select(col("id"), lit(teleport).as("score"))
-      .localCheckpoint(false)
-    var scores = dstNodes.union(floorNodes)
-      .select(col("id"), lit(scale).as("score"))
-    val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (i <- 1 to iters) {
-      val inSum = ewd.join(scores, col("src") === col("id"))
-        .select(col("dst").as("to"),
-          expr("(CAST(score AS DECIMAL(38,0)) * w) div wsum").as("c"))
-        .groupBy(col("to"))
-        .agg(sum(col("c").cast(DecimalType(38, 0))).as("in_sum"))
-      val next = inSum
-        .select(col("to").as("id"),
-          (lit(teleport) + expr("(in_sum * 85) div 100")).as("score"))
-        .union(floorScores)
-      // every-4th-round pin cadence — see integerPageRank
-      scores =
-        if (i == iters) next.localCheckpoint(true)
-        else if (i % 4 == 0) {
-          val p = graft.operators.Checkpoints.pin(next, eager = false)
-          pins += p; p
-        } else next
-    }
-    release(pins.toSeq :+ ewd :+ floorScores)
-    scores
+      .transform(Checkpoints.pin(_, eager = false))
+    rankRounds(ewd, floorScores,
+      dstNodes.union(floorNodes).select(col("id"), lit(scale).as("score")),
+      iters, expr("(CAST(score AS DECIMAL(38,0)) * w) div wsum"), lit(teleport))
   }
 
   /** Personalized PageRank (Haveliwala 2002): identical fixed-point
@@ -196,7 +178,7 @@ object PageRank {
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val teleport = (scale * 15L) / 100L
     val seedSet = seeds.select(col(seedCol).as("id"), lit(1L).as("__seed"))
-      .distinct().localCheckpoint(false)
+      .distinct().transform(Checkpoints.pin(_, eager = false))
     def seedFlag(df: DataFrame): DataFrame =
       df.join(broadcast(seedSet), Seq("id"), "left")
     // the static per-destination teleport term, carried on the edge side
@@ -206,38 +188,17 @@ object PageRank {
         when(col("__seed").isNotNull, lit(teleport)).otherwise(lit(0L))
           .as("dst_tp"))
       .repartition(col("src"))
-      .localCheckpoint(false)
-    val dstNodes = ewd.select(col("dst").as("id")).distinct()
-    val floorNodes = deg.select(col("src").as("id"))
-      .join(dstNodes, Seq("id"), "left_anti")
+      .transform(Checkpoints.pin(_, eager = false))
+    val (dstNodes, floorNodes) = splitNodes(ewd, deg)
     val floorScores = seedFlag(floorNodes)
       .select(col("id"),
         when(col("__seed").isNotNull, lit(teleport)).otherwise(lit(0L))
           .as("score"))
-      .localCheckpoint(false)
-    var scores = seedFlag(dstNodes.union(floorNodes))
-      .select(col("id"),
-        when(col("__seed").isNotNull, lit(scale)).otherwise(lit(0L)).as("score"))
-    val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (i <- 1 to iters) {
-      val inSum = ewd.join(scores, col("src") === col("id"))
-        .select(col("dst").as("to"), col("dst_tp"),
-          expr("score div deg").as("c"))
-        .groupBy(col("to"), col("dst_tp"))
-        .agg(sum(col("c").cast(DecimalType(38, 0))).as("in_sum"))
-      val next = inSum
-        .select(col("to").as("id"),
-          (col("dst_tp") + expr("(in_sum * 85) div 100")).as("score"))
-        .union(floorScores)
-      // every-4th-round pin cadence — see integerPageRank
-      scores =
-        if (i == iters) next.localCheckpoint(true)
-        else if (i % 4 == 0) {
-          val p = graft.operators.Checkpoints.pin(next, eager = false)
-          pins += p; p
-        } else next
-    }
-    release(pins.toSeq :+ ewd :+ floorScores :+ seedSet)
-    scores
+      .transform(Checkpoints.pin(_, eager = false))
+    rankRounds(ewd, floorScores,
+      seedFlag(dstNodes.union(floorNodes)).select(col("id"),
+        when(col("__seed").isNotNull, lit(scale)).otherwise(lit(0L)).as("score")),
+      iters, expr("score div deg"), col("dst_tp"),
+      carry = Seq(col("dst_tp")), extraPins = Seq(seedSet))
   }
 }

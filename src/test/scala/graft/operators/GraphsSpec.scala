@@ -150,24 +150,6 @@ class GraphsSpec extends SparkSpec {
       4L -> ((0L, 600000L))))
   }
 
-  test("hitsRounds leaves no checkpoint pins behind") {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val edges = Seq((1L, 3L), (2L, 3L), (2L, 4L)).toDF("src", "dst")
-    Graphs.hitsRounds(edges, "src", "dst", rounds = 2).collect()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 1, s"pins leaked: $before -> $after")
-  }
-
-  test("kcoreRounds leaves no checkpoint pins behind") {
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("id_a", "id_b")
-    val out = Graphs.kcoreRounds(pairs, "id_a", "id_b", k = 2, rounds = 2)
-    out.collect()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // only the final round's eager checkpoint may remain
-    assert(after <= before + 1, s"pins leaked: $before -> $after")
-  }
-
   test("labelPropRounds: one round adopts the min neighbor id on a path") {
     // path 1-2-3: all neighbor multisets are distinct singletons/pairs,
     // so round 1 is pure min-neighbor-id adoption
@@ -205,16 +187,49 @@ class GraphsSpec extends SparkSpec {
     assert(r2(5L) == 5L)
   }
 
-  test("labelPropRounds is deterministic across runs and leaves no pins") {
+  test("labelPropRounds is deterministic across runs") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L)).toDF("id_a", "id_b")
-    val before = spark.sparkContext.getPersistentRDDs.size
     val a = Graphs.labelPropRounds(pairs, "id_a", "id_b", rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val b = Graphs.labelPropRounds(pairs, "id_a", "id_b", rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(a == b)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 2, s"pins leaked: $before -> $after")
+  }
+
+  test("every round-loop operator leaves at most its result pinned") {
+    val edges = pathEdges
+    val weighted = Seq((1L, 2L, 5L), (2L, 3L, 5L), (1L, 3L, 20L), (3L, 4L, 2L),
+      (4L, 5L, 1L), (9L, 10L, 1L)).toDF("src", "dst", "w")
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (2L, 4L))
+      .toDF("id_a", "id_b")
+    val seeds = Seq(1L, 9L).toDF("id")
+    // 5 rounds: PageRank pins lazily at round 4 and eagerly at round 5
+    val operators: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "integerPageRank" -> (() => PageRank.integerPageRank(edges, "src", "dst", iters = 5)),
+      "weightedPageRank" -> (() =>
+        PageRank.weightedPageRank(weighted, "src", "dst", "w", iters = 5)),
+      "personalizedPageRank" -> (() =>
+        PageRank.personalizedPageRank(edges, "src", "dst", seeds, "id", iters = 5)),
+      "bellmanFordRounds" -> (() =>
+        Graphs.bellmanFordRounds(weighted, "src", "dst", "w", seeds, "id", 3)),
+      "katzRounds" -> (() => Graphs.katzRounds(edges, "src", "dst", rounds = 3)),
+      "trussRounds" -> (() => Graphs.trussRounds(pairs, "id_a", "id_b", k = 3, rounds = 2)),
+      "kcoreRounds" -> (() => Graphs.kcoreRounds(pairs, "id_a", "id_b", k = 2, rounds = 2)),
+      "labelPropRounds" -> (() => Graphs.labelPropRounds(pairs, "id_a", "id_b", rounds = 3)),
+      "hitsRounds" -> (() => Graphs.hitsRounds(edges, "src", "dst", rounds = 2)),
+      "minLabel" -> (() => Components.minLabel(pairs)),
+      "bfsHops" -> (() => Graphs.bfsHops(edges, "src", "dst", seeds, "id", maxHops = 3)),
+      "multiSourceBfs" -> (() =>
+        Graphs.multiSourceBfs(edges, "src", "dst", seeds, "id", maxHops = 3)),
+      "pathCounts" -> (() => Graphs.pathCounts(edges, "src", "dst", seeds, "id", maxHops = 3)),
+      "boruvkaMsf" -> (() => Graphs.boruvkaMsf(weighted, "src", "dst", "w")))
+    for ((name, run) <- operators) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      assert(run().collect().nonEmpty, name)
+      val after = spark.sparkContext.getPersistentRDDs.size
+      // only the final eager checkpoint may remain
+      assert(after <= before + 1, s"$name leaked pins: $before -> $after")
+    }
   }
 
   test("linkPredict finds the open wedge pair with exact witnesses") {
