@@ -150,6 +150,24 @@ class GraphsSpec extends SparkSpec {
       4L -> ((0L, 600000L))))
   }
 
+  test("hitsRounds leaves no checkpoint pins behind") {
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val edges = Seq((1L, 3L), (2L, 3L), (2L, 4L)).toDF("src", "dst")
+    Graphs.hitsRounds(edges, "src", "dst", rounds = 2).collect()
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after <= before + 1, s"pins leaked: $before -> $after")
+  }
+
+  test("kcoreRounds leaves no checkpoint pins behind") {
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val pairs = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("id_a", "id_b")
+    val out = Graphs.kcoreRounds(pairs, "id_a", "id_b", k = 2, rounds = 2)
+    out.collect()
+    val after = spark.sparkContext.getPersistentRDDs.size
+    // only the final round's eager checkpoint may remain
+    assert(after <= before + 1, s"pins leaked: $before -> $after")
+  }
+
   test("labelPropRounds: one round adopts the min neighbor id on a path") {
     // path 1-2-3: all neighbor multisets are distinct singletons/pairs,
     // so round 1 is pure min-neighbor-id adoption
