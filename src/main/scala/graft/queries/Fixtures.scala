@@ -1,6 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 /** Shared build-once fixture discipline for driver queries that stage
   * data under /tmp/graft_fixtures (streaming replays, clustered layouts).
@@ -14,6 +14,15 @@ import java.nio.file.{Files, Path}
   * per-JVM, not per-thread).
   */
 object Fixtures {
+
+  /** The fixture root of `name` built from `$d/$table.parquet`:
+    * `/tmp/graft_fixtures/<name>_<mtime>_<size>` of that source file, so
+    * regenerated testdata never reuses a build of the old one.
+    */
+  def root(d: String, table: String, name: String): Path = {
+    val src = new java.io.File(s"$d/$table.parquet")
+    Paths.get(s"/tmp/graft_fixtures/${name}_${src.lastModified}_${src.length}")
+  }
 
   def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {

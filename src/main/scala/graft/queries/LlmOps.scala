@@ -1305,9 +1305,7 @@ object LlmOps {
     // model + codebooks ⇒ the indexed serve must match the ad-hoc
     // hybrid row-for-row on (qid, id, adist).
     "q_ann_ivfpq_indexed" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val dir = s"/tmp/graft_fixtures/ivfpq_index_c16s4x16k4r2" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val dir = Fixtures.root(d, "embeddings", "ivfpq_index_c16s4x16k4r2").toString
       val both = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
         expr("transform(embedding, " +
           "x -> CAST(round(CAST(x AS DOUBLE) * 256) AS BIGINT) + 512)").as("v"))
@@ -1346,9 +1344,7 @@ object LlmOps {
     // Both models' staleness rows ride along: the appended index shows
     // B's share, the clone (all rows appended post-training) 1000‰.
     "q_ann_ivfpq_append" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val base = s"/tmp/graft_fixtures/ivfpq_append_c16s4x16k4r2" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val base = Fixtures.root(d, "embeddings", "ivfpq_append_c16s4x16k4r2").toString
       val both = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
         expr("transform(embedding, " +
           "x -> CAST(round(CAST(x AS DOUBLE) * 256) AS BIGINT) + 512)").as("v"))
@@ -1401,9 +1397,7 @@ object LlmOps {
     // to 0; the code partitions conserve the corpus row count; a
     // second compact below threshold is a no-op.
     "q_ann_ivfpq_compact" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val base = s"/tmp/graft_fixtures/ivfpq_compact_c16s4x16k4r2" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val base = Fixtures.root(d, "embeddings", "ivfpq_compact_c16s4x16k4r2").toString
       val both = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
         expr("transform(embedding, " +
           "x -> CAST(round(CAST(x AS DOUBLE) * 256) AS BIGINT) + 512)").as("v"))
@@ -1798,9 +1792,7 @@ object LlmOps {
     // integers, so the indexed path is bit-identical and the SAME
     // ADC oracle replays it directly (the sign-index precedent).
     "q_ann_pq_indexed" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val dir = s"/tmp/graft_fixtures/pq_index_s4x16k4r2" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val dir = Fixtures.root(d, "embeddings", "pq_index_s4x16k4r2").toString
       val vq = Tables.embeddings(s, d).select(col("vec_id"),
         expr("transform(embedding, " +
           "x -> CAST(round(CAST(x AS DOUBLE) * 256) AS BIGINT) + 512)").as("v"))
@@ -1859,9 +1851,8 @@ object LlmOps {
 
     "q_ann_ivf_indexed" -> ((s, d) => {
       val (nCentroids, refineIters, split) = (16, 1, 5)
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val dir = s"/tmp/graft_fixtures/ivf_index_c${nCentroids}_r${refineIters}_s${split}" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val dir = Fixtures.root(d, "embeddings",
+        s"ivf_index_c${nCentroids}_r${refineIters}_s${split}").toString
       val emb = Tables.embeddings(s, d)
       if (!new java.io.File(s"$dir/model.json").exists()) {
         Similarity.writeIndex(emb.filter(col("vec_id") >= split), "vec_id", "embedding",
@@ -1899,9 +1890,8 @@ object LlmOps {
     // oracle from the table's own counts.
     "q_ann_ivf_append" -> ((s, d) => {
       val (nCentroids, refineIters, split) = (16, 1, 5)
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val dir = s"/tmp/graft_fixtures/ivf_append_c${nCentroids}_r${refineIters}_s${split}" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val dir = Fixtures.root(d, "embeddings",
+        s"ivf_append_c${nCentroids}_r${refineIters}_s${split}").toString
       val emb = Tables.embeddings(s, d)
       val corpus = emb.filter(col("vec_id") >= split)
       val partA = corpus.filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -1947,9 +1937,8 @@ object LlmOps {
     // the below-threshold no-op (a second compact must change nothing).
     "q_ann_ivf_compact" -> ((s, d) => {
       val (nCentroids, refineIters, split) = (16, 1, 5)
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val dir = s"/tmp/graft_fixtures/ivf_compact_c${nCentroids}_r${refineIters}_s${split}" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val dir = Fixtures.root(d, "embeddings",
+        s"ivf_compact_c${nCentroids}_r${refineIters}_s${split}").toString
       val emb = Tables.embeddings(s, d)
       val corpus = emb.filter(col("vec_id") >= split)
       val partA = corpus.filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -7141,9 +7130,7 @@ object LlmOps {
     // and the SAME DuckDB replay oracles it directly (no equality
     // certificate needed, unlike the float IVF index).
     "q_ann_hamming_indexed" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/embeddings.parquet")
-      val dir = s"/tmp/graft_fixtures/sign_index_s5" +
-        s"_${srcFile.lastModified}_${srcFile.length}"
+      val dir = Fixtures.root(d, "embeddings", "sign_index_s5").toString
       val emb = Tables.embeddings(s, d)
       if (!new java.io.File(s"$dir/signs").exists()) {
         Similarity.writeSignIndex(emb.filter(col("vec_id") >= 5),

@@ -23,11 +23,10 @@ object Parity {
   private def fileSourceStream(
       s: SparkSession, d: String, table: String, format: String,
       cols: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val srcFile = new java.io.File(s"$d/$table.parquet")
     // key includes the projected columns so changing `cols` in code
     // self-invalidates the cached dump
     val colsKey = Integer.toHexString(cols.mkString(",").hashCode)
-    val tmp = s"/tmp/graft_fixtures/${table}_${format}_${colsKey}_${srcFile.lastModified}_${srcFile.length}"
+    val tmp = Fixtures.root(d, table, s"${table}_${format}_$colsKey").toString
     if (!new java.io.File(s"$tmp/_SUCCESS").exists()) {
       val w = graft.Tables(s, d, table).select(cols.map(col): _*)
         .coalesce(1).write.mode("overwrite")
@@ -51,8 +50,7 @@ object Parity {
     * round-trip) and q_dsv2_pushdown (filters pushed into the scan).
     */
   private def dsv2NationFrame(s: SparkSession, d: String): DataFrame = {
-    val srcFile = new java.io.File(s"$d/nation.parquet")
-    val dir = s"/tmp/graft_fixtures/dsv2_${srcFile.lastModified}_${srcFile.length}"
+    val dir = Fixtures.root(d, "nation", "dsv2").toString
     val script = s"$dir/c.sh"
     if (!new java.io.File(script).exists()) {
       new java.io.File(dir).mkdirs()

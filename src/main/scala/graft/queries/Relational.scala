@@ -63,9 +63,7 @@ object Relational {
     * between the two queries.
     */
   private def corruptParsed(s: SparkSession, d: String): DataFrame = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = java.nio.file.Paths.get("/tmp/graft_fixtures/" +
-      s"corrupt_${srcFile.lastModified}_${srcFile.length}")
+    val root = Fixtures.root(d, "events", "corrupt")
     Fixtures.ensure(root) {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"))
@@ -4202,9 +4200,7 @@ object Relational {
     // deterministic value rewrite (*2 for every 10th user) so a silent
     // full-table clobber OR a no-op both flip the oracle hash.
     "q_dynamic_overwrite" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/events.parquet")
-      val root = java.nio.file.Paths.get("/tmp/graft_fixtures/" +
-        s"dynover_${srcFile.lastModified}_${srcFile.length}")
+      val root = Fixtures.root(d, "events", "dynover")
       val path = root.resolve("data").toString
       Fixtures.ensure(root) {
         val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
@@ -4256,9 +4252,7 @@ object Relational {
     // surface v1 rows with NULL value, v2 rows intact; DuckDB mirrors via
     // read_parquet(union_by_name). Integer/decimal outputs.
     "q_schema_evolution" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/events.parquet")
-      val root = java.nio.file.Paths.get("/tmp/graft_fixtures/" +
-        s"schemaevo_${srcFile.lastModified}_${srcFile.length}")
+      val root = Fixtures.root(d, "events", "schemaevo")
       Fixtures.ensure(root) {
         val ev = Tables.events(s, d)
         ev.filter(col("event_id") % 2 === 0)
@@ -4287,9 +4281,7 @@ object Relational {
     // across JVMs, keyed by source (mtime, size) and guarded by
     // Fixtures.ensure's marker + cross-process file lock.
     "q_clustered_scan" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/events.parquet")
-      val root = java.nio.file.Paths.get("/tmp/graft_fixtures/" +
-        s"clustered_${srcFile.lastModified}_${srcFile.length}")
+      val root = Fixtures.root(d, "events", "clustered")
       val path = root.resolve("data").toString
       Fixtures.ensure(root) {
         graft.operators.Layout.clusteredWrite(
@@ -5187,9 +5179,7 @@ object Relational {
     // pruning is real AND touches no more buckets than the Morton layout
     // for the same box (the locality claim, checked, not asserted).
     "q_hilbert_scan" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/events.parquet")
-      val root = java.nio.file.Paths.get("/tmp/graft_fixtures/" +
-        s"hilbert_${srcFile.lastModified}_${srcFile.length}")
+      val root = Fixtures.root(d, "events", "hilbert")
       val path = root.resolve("data").toString
       Fixtures.ensure(root) {
         graft.operators.Layout.hilbertWrite(
@@ -5212,9 +5202,7 @@ object Relational {
     }),
 
     "q_zorder_scan" -> ((s, d) => {
-      val srcFile = new java.io.File(s"$d/events.parquet")
-      val root = java.nio.file.Paths.get("/tmp/graft_fixtures/" +
-        s"zorder_${srcFile.lastModified}_${srcFile.length}")
+      val root = Fixtures.root(d, "events", "zorder")
       val path = root.resolve("data").toString
       Fixtures.ensure(root) {
         graft.operators.Layout.zorderWrite(

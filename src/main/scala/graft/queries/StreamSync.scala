@@ -1,7 +1,8 @@
 package graft.queries
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
@@ -10,7 +11,8 @@ import graft.sources.SubprocessSource
 import graft.state.StateStore
 import graft.streaming.StreamingSync
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
+import java.nio.file.attribute.FileTime
 
 /** The streaming sync path under the DuckDB oracle gate: a bounded
   * connector replay (an Airbyte-protocol child process emitting the nation
@@ -28,6 +30,14 @@ import java.nio.file.{Files, Path, Paths}
   * a partial prior attempt can never masquerade as a finished sync.
   * Fixture generation collects the 25 nation rows driver-side by design
   * (bounded replay input, not an operator path).
+  *
+  * Every other `q_stream_*` fixture is one [[replay]]: its batches are
+  * [[land]]ed as JSONL files in strictly increasing mtime order (one file
+  * per micro-batch under maxFilesPerTrigger = 1), its stream transform
+  * runs to a checkpointed parquet sink under AvailableNow, its guard runs
+  * on the finished sink BEFORE the `_DONE` marker is written, and the
+  * sink path is returned only once `_DONE` exists — a failed guard leaves
+  * no marker, so the next call rebuilds instead of serving the sink.
   */
 object StreamSync {
 
@@ -42,48 +52,91 @@ object StreamSync {
       sys.error(s"$what did not finish within ${ms / 1000}s — sink left unmarked")
     }
 
-  /** Build-once shared fixture — see [[Fixtures.ensure]] for the
-    * marker/lock safety model.
+  /** Land each frame of `batches` under `dir` as the JSONL of all its
+    * columns (timestamps at full µs precision), one file per frame, and
+    * return the glob that reads them. Each frame is staged as ONE text
+    * part-file beside `dir` (never inside it, where the glob would pick
+    * the staging up as an extra batch) and moved in. Micro-batch order
+    * under maxFilesPerTrigger = 1 is the files' mtime order, so the files
+    * get strictly increasing mtimes taken from the first file (never the
+    * wall clock), which survives a slow stage step.
     */
-  private def ensureFixture(root: Path)(build: => Unit): Unit =
-    Fixtures.ensure(root)(build)
-
-  /** Stage `df` as ONE text part-file and move it to `landing/name` — one
-    * landed file is one micro-batch under maxFilesPerTrigger = 1. Shared by
-    * every fixture builder below so the stage/move discipline can't drift
-    * between them.
-    */
-  private def landOne(df: DataFrame, root: Path, landing: Path, name: String): Path = {
-    val staged = root.resolve(s"staged_$name").toString
-    df.coalesce(1).write.text(staged)
-    val listing = Files.list(Paths.get(staged))
-    val part =
-      try listing.filter(_.toString.endsWith(".txt")).findFirst().orElseThrow()
-      finally listing.close()
-    val f = landing.resolve(name)
-    Files.move(part, f)
-    f
+  private[queries] def land(dir: Path, batches: Seq[DataFrame]): String = {
+    Files.createDirectories(dir)
+    val files = batches.zipWithIndex.map { case (df, i) =>
+      val staged = dir.resolveSibling(s"staged_${dir.getFileName}_${i + 1}")
+      df.select(to_json(struct(df.columns.map(col).toSeq: _*),
+          Map("timestampFormat" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")))
+        .coalesce(1).write.text(staged.toString)
+      val listing = Files.list(staged)
+      val part =
+        try listing.filter(_.toString.endsWith(".txt")).findFirst().orElseThrow()
+        finally listing.close()
+      Files.move(part, dir.resolve(s"batch${i + 1}.jsonl"))
+    }
+    val t0 = Files.getLastModifiedTime(files.head).toMillis
+    files.zipWithIndex.foreach { case (f, i) =>
+      Files.setLastModifiedTime(f, FileTime.fromMillis(t0 + 2000L * i))
+    }
+    s"$dir/*.jsonl"
   }
 
-  /** Order `f` strictly after `prev` in mtime: micro-batch order under
-    * maxFilesPerTrigger = 1 is the landing files' mtime order, and offsets
-    * are always taken from the sibling file (never the wall clock) so the
-    * ordering survives a slow stage step.
+  /** [[land]] `batches` under `dir` and read them back as a stream, one
+    * file per micro-batch, under the first batch's schema.
     */
-  private def mtimeAfter(f: Path, prev: Path, offsetMs: Long): Unit = {
-    Files.setLastModifiedTime(f,
-      java.nio.file.attribute.FileTime.fromMillis(
-        Files.getLastModifiedTime(prev).toMillis + offsetMs))
-    ()
+  private def replayed(s: SparkSession, dir: Path, batches: Seq[DataFrame]): DataFrame =
+    StreamingSync.readJsonlStream(s, land(dir, batches), batches.head.schema,
+      maxFilesPerTrigger = 1)
+
+  /** The fixture harness: build `name`'s stream from the fixture root
+    * (keyed by `$d/$table.parquet`), run it to a parquet sink with a
+    * checkpoint under AvailableNow (failing after 180 s), run `guard` on
+    * the sink, and only then write `_DONE`. Built once per root across
+    * JVMs ([[Fixtures.ensure]]); returns the sink path.
+    */
+  private[queries] def replay(s: SparkSession, d: String, table: String, name: String)(
+      build: Path => Dataset[_])(guard: DataFrame => Unit): String = {
+    val root = Fixtures.root(d, table, name)
+    val sink = root.resolve("sink").toString
+    Fixtures.ensure(root) {
+      val q = build(root).writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .format("parquet")
+        .option("path", sink)
+        .start()
+      awaitOrFail(q, 180000, s"$name replay")
+      guard(s.read.parquet(sink))
+      Files.createFile(root.resolve("_DONE"))
+      ()
+    }
+    sink
   }
+
+  /** Require `got` and `want` to hold the same rows: every distinct row
+    * of `got`'s columns must occur exactly twice in their union.
+    */
+  private[queries] def requireSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val diff = got.unionByName(want)
+      .groupBy(got.columns.map(col).toSeq: _*).agg(count(lit(1)).as("k"))
+      .filter(col("k") =!= 2).count()
+    require(diff == 0L,
+      s"$what: $diff ${got.columns.mkString("(", ", ", ")")} rows diverge")
+  }
+
+  /** A one-row watermark sentinel `offsetMs` past `maxTs`, in the
+    * (event_id, event_type, ts) shape of the window replays; its
+    * `__sentinel__` type keeps its own windows apart from the real ones.
+    */
+  private def eventSentinel(s: SparkSession, maxTs: java.sql.Timestamp, offsetMs: Long): DataFrame =
+    s.range(1).select(lit(-1L).as("event_id"), lit("__sentinel__").as("event_type"),
+      lit(new java.sql.Timestamp(maxTs.getTime + offsetMs)).as("ts"))
 
   private def sinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/nation.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_sync_${srcFile.lastModified}_${srcFile.length}")
+    val root = Fixtures.root(d, "nation", "stream_sync")
     val marker = root.resolve("_DONE")
     val sink = root.resolve("sink")
-    ensureFixture(root) {
+    Fixtures.ensure(root) {
         Files.createDirectories(root)
 
         // 1. Bounded connector replay: one RECORD line per nation row, a
@@ -153,70 +206,24 @@ object StreamSync {
     * marker requires sum(n) over real windows == real event count, so a
     * silently dropped window can never pass as done.
     */
-  private def windowSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_window_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-
-        // 1. Real events, full µs precision, ONE file (one micro-batch).
-        val ev = Tables.events(s, d).select(
-          to_json(struct(col("event_id"), col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-        val realFile = landOne(ev, root, landing, "batch1_events.jsonl")
-
-        val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-        def sentinel(name: String, offsetMs: Long, mtimeOffsetMs: Long): Unit = {
-          // java.time, not SimpleDateFormat: its 'S' is fraction-of-second,
-          // so the six digits scale correctly as microseconds (SDF's 'S' is
-          // a millisecond COUNT and would zero-pad into a 1000x mis-scale).
-          val iso = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-            .withZone(java.time.ZoneOffset.UTC)
-            .format(java.time.Instant.ofEpochMilli(maxTs.getTime + offsetMs))
-          val f = landing.resolve(name)
-          Files.writeString(f,
-            s"""{"event_id":-1,"event_type":"__sentinel__","ts":"$iso"}\n""")
-          mtimeAfter(f, realFile, mtimeOffsetMs)
-        }
-        sentinel("batch2_sentinel.jsonl", 2L * 3600 * 1000, 2000)
-        sentinel("batch3_sentinel.jsonl", 4L * 3600 * 1000, 4000)
-
-        // 2. Stream: watermark + window agg, append mode, one file per batch.
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val counts = StreamingSync.windowedCounts(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1),
-          "ts", watermarkDelay = "30 minutes", windowLen = "10 minutes")
-        val q = counts.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_window replay")
-
-        val real = s.read.parquet(sink.toString)
-          .filter(col("event_type") =!= "__sentinel__")
-        val emitted = real.agg(sum(col("n"))).head().getLong(0)
-        val expected = Tables.events(s, d).count()
-        require(emitted == expected,
-          s"stream_window sink covers $emitted events, expected $expected — " +
-            "a window was dropped or withheld")
-        Files.createFile(marker)
-        ()
+  private def windowSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_window") { root =>
+      val ev = Tables.events(s, d).select(col("event_id"), col("event_type"), col("ts"))
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      // Real events in ONE file (one micro-batch), then the two sentinels.
+      StreamingSync.windowedCounts(
+        replayed(s, root.resolve("landing"), Seq(ev,
+          eventSentinel(s, maxTs, 2L * 3600 * 1000),
+          eventSentinel(s, maxTs, 4L * 3600 * 1000))),
+        "ts", watermarkDelay = "30 minutes", windowLen = "10 minutes")
+    } { sunk =>
+      val real = sunk.filter(col("event_type") =!= "__sentinel__")
+      val emitted = real.agg(sum(col("n"))).head().getLong(0)
+      val expected = Tables.events(s, d).count()
+      require(emitted == expected,
+        s"stream_window sink covers $emitted events, expected $expected — " +
+          "a window was dropped or withheld")
     }
-    sink.toString
-  }
 
   /** Watermark LATE-DROP accounting under the oracle: the missing half of
     * q_stream_window's contract. That fixture proves on-time rows all
@@ -247,76 +254,31 @@ object StreamSync {
     * NOT-straggler predicate in DuckDB.
     */
   private def lateSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_late_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-
-        val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-        val straggler = col("event_id") % 97 === 0 &&
-          col("ts") < lit(maxTs) - expr("INTERVAL 1 DAY")
-        def jsonl(df: DataFrame): DataFrame = df.select(
-          to_json(struct(col("event_id"), col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-
-        // batch 1: on-time events
-        val realFile = landOne(jsonl(Tables.events(s, d).filter(!straggler)),
-          root, landing, "batch1_ontime.jsonl")
-
-        def sentinel(name: String, offsetMs: Long, mtimeOffsetMs: Long): Unit = {
-          val iso = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-            .withZone(java.time.ZoneOffset.UTC)
-            .format(java.time.Instant.ofEpochMilli(maxTs.getTime + offsetMs))
-          val f = landing.resolve(name)
-          Files.writeString(f,
-            s"""{"event_id":-1,"event_type":"__sentinel__","ts":"$iso"}\n""")
-          mtimeAfter(f, realFile, mtimeOffsetMs)
-        }
-        // batch 2: wm-propagation spacer AT ts = M (advances nothing, but
-        // lets M - 30 m become the LATE-FILTER watermark — see scaladoc)
-        sentinel("batch2_spacer.jsonl", 0L, 2000)
-        // batch 3: the stragglers, now genuinely behind the late filter
-        val lateFile = landOne(jsonl(Tables.events(s, d).filter(straggler)),
-          root, landing, "batch3_late.jsonl")
-        mtimeAfter(lateFile, realFile, 4000)
-        // batches 4/5: flush every real window out of append-mode state
-        sentinel("batch4_sentinel.jsonl", 2L * 3600 * 1000, 6000)
-        sentinel("batch5_sentinel.jsonl", 4L * 3600 * 1000, 8000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val counts = StreamingSync.windowedCounts(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1),
-          "ts", watermarkDelay = "30 minutes", windowLen = "10 minutes")
-        val q = counts.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_late replay")
-
-        val emitted = s.read.parquet(sink.toString)
-          .filter(col("event_type") =!= "__sentinel__")
-          .agg(sum(col("n"))).head().getLong(0)
-        val expected = Tables.events(s, d).filter(!straggler).count()
-        require(emitted == expected,
-          s"stream_late sink covers $emitted events, expected $expected on-time — " +
-            "a straggler leaked in or an on-time window was withheld")
-        Files.createFile(marker)
-        ()
+    lazy val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
+    def straggler = col("event_id") % 97 === 0 &&
+      col("ts") < lit(maxTs) - expr("INTERVAL 1 DAY")
+    replay(s, d, "events", "stream_late") { root =>
+      val ev = Tables.events(s, d).select(col("event_id"), col("event_type"), col("ts"))
+      StreamingSync.windowedCounts(
+        replayed(s, root.resolve("landing"), Seq(
+          ev.filter(!straggler),
+          // wm-propagation spacer AT ts = M (advances nothing, but lets
+          // M - 30 m become the LATE-FILTER watermark — see scaladoc)
+          eventSentinel(s, maxTs, 0L),
+          // the stragglers, now genuinely behind the late filter
+          ev.filter(straggler),
+          // flush every real window out of append-mode state
+          eventSentinel(s, maxTs, 2L * 3600 * 1000),
+          eventSentinel(s, maxTs, 4L * 3600 * 1000))),
+        "ts", watermarkDelay = "30 minutes", windowLen = "10 minutes")
+    } { sunk =>
+      val emitted = sunk.filter(col("event_type") =!= "__sentinel__")
+        .agg(sum(col("n"))).head().getLong(0)
+      val expected = Tables.events(s, d).filter(!straggler).count()
+      require(emitted == expected,
+        s"stream_late sink covers $emitted events, expected $expected on-time — " +
+          "a straggler leaked in or an on-time window was withheld")
     }
-    sink.toString
   }
 
   /** Streaming exact-dedup under the oracle: a bounded event subset lands
@@ -331,72 +293,23 @@ object StreamSync {
     * window).
     */
   private def dedupSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_dedup_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-
-        val ev = Tables.events(s, d).filter(col("event_id") < 2000)
-          .select(to_json(struct(col("event_id"), col("event_type"), col("value"),
-            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-        val first = landOne(ev, root, landing, "batch1_events.jsonl")
-        // two full replays, mtime-ordered into their own micro-batches
-        Seq("batch2_replay.jsonl" -> 2000L, "batch3_replay.jsonl" -> 4000L).foreach {
-          case (name, mtimeOffsetMs) =>
-            val f = landing.resolve(name)
-            Files.copy(first, f)
-            mtimeAfter(f, first, mtimeOffsetMs)
-        }
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val deduped = StreamingSync.dedupByKeyWithinWatermark(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1),
-          "ts", "45 days", Seq("event_id"))
-        val q = deduped.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_dedup replay")
-
-        val sunk = s.read.parquet(sink.toString)
-        val (n, nKeys) = (sunk.count(),
-          sunk.select(col("event_id")).distinct().count())
-        val expected = Tables.events(s, d).filter(col("event_id") < 2000).count()
-        require(n == expected && nKeys == expected,
-          s"stream_dedup sink has $n rows / $nKeys keys, expected $expected — " +
-            "a replayed duplicate leaked through or an original was dropped")
-        Files.createFile(marker)
-        ()
+    def subset = Tables.events(s, d).filter(col("event_id") < 2000)
+    replay(s, d, "events", "stream_dedup") { root =>
+      val ev = subset.select(col("event_id"), col("event_type"), col("value"), col("ts"))
+      // the subset, then two full replays in their own micro-batches
+      StreamingSync.dedupByKeyWithinWatermark(
+        replayed(s, root.resolve("landing"), Seq(ev, ev, ev)),
+        "ts", "45 days", Seq("event_id"))
+    } { sunk =>
+      val (n, nKeys) = (sunk.count(),
+        sunk.select(col("event_id")).distinct().count())
+      val expected = subset.count()
+      require(n == expected && nKeys == expected,
+        s"stream_dedup sink has $n rows / $nKeys keys, expected $expected — " +
+          "a replayed duplicate leaked through or an original was dropped")
     }
-    sink.toString
   }
 
-  /** Streaming sessionization under the oracle: every event lands as epoch
-    * seconds in batch 1 (one file — the per-user state sees the full
-    * history before any close decision), then batch 2 delivers ONE
-    * sentinel event per user, `gap + 1` past that user's last real event,
-    * which closes every still-open real session through the
-    * flatMapGroupsWithState path (state read back across micro-batches —
-    * the stateful choreography, not a single-batch sort). The sentinel's
-    * own session never closes, so it never reaches the sink; the sink is
-    * exactly the gap-and-island sessions DuckDB computes in batch. The
-    * completion marker requires sum(n_events) == real event count — a
-    * session dropped, double-closed, or left open can never pass as done.
-    */
   /** Streaming SLIDING-window fixture: the overlapping twin of
     * windowSinkDir — 1-day windows every 12 h, so every real event must
     * be counted TWICE (once per covering window). Sentinels at +26 h and
@@ -406,64 +319,34 @@ object StreamSync {
     * driver hash-compares against the same unnest-replication oracle the
     * batch q_sliding_window proves.
     */
-  private def slidingSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_sliding_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = Tables.events(s, d).select(
-          to_json(struct(col("event_id"), col("event_type"),
-            date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-        val realFile = landOne(ev, root, landing, "batch1_events.jsonl")
-        val maxTs = Tables.events(s, d).agg(max(col("ts"))).head().getTimestamp(0)
-        def sentinel(name: String, offsetMs: Long, mtimeOffsetMs: Long): Unit = {
-          val iso = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-            .withZone(java.time.ZoneOffset.UTC)
-            .format(java.time.Instant.ofEpochMilli(maxTs.getTime + offsetMs))
-          val f = landing.resolve(name)
-          Files.writeString(f,
-            s"""{"event_id":-1,"event_type":"__sentinel__","ts":"$iso"}\n""")
-          mtimeAfter(f, realFile, mtimeOffsetMs)
-        }
-        sentinel("batch2_sentinel.jsonl", 26L * 3600 * 1000, 2000)
-        sentinel("batch3_sentinel.jsonl", 28L * 3600 * 1000, 4000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val counts = StreamingSync.slidingCounts(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1),
-          "ts", watermarkDelay = "30 minutes",
-          windowLen = "1 day", slide = "12 hours")
-        val q = counts.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_sliding replay")
-
-        val emitted = s.read.parquet(sink.toString)
-          .filter(col("event_type") =!= "__sentinel__")
-          .agg(sum(col("n"))).head().getLong(0)
-        val expected = 2L * Tables.events(s, d).count()
-        require(emitted == expected,
-          s"stream_sliding sink covers $emitted window-events, expected $expected — " +
-            "an overlapping window was dropped or withheld")
-        Files.createFile(marker)
-        ()
+  private def slidingSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_sliding") { root =>
+      val ev = Tables.events(s, d).select(col("event_id"), col("event_type"), col("ts"))
+      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
+      StreamingSync.slidingCounts(
+        replayed(s, root.resolve("landing"), Seq(ev,
+          eventSentinel(s, maxTs, 26L * 3600 * 1000),
+          eventSentinel(s, maxTs, 28L * 3600 * 1000))),
+        "ts", watermarkDelay = "30 minutes",
+        windowLen = "1 day", slide = "12 hours")
+    } { sunk =>
+      val emitted = sunk.filter(col("event_type") =!= "__sentinel__")
+        .agg(sum(col("n"))).head().getLong(0)
+      val expected = 2L * Tables.events(s, d).count()
+      require(emitted == expected,
+        s"stream_sliding sink covers $emitted window-events, expected $expected — " +
+          "an overlapping window was dropped or withheld")
     }
-    sink.toString
-  }
+
+  /** 2024-01-15T00:00:00Z, where the time-split replays cut their two
+    * batches, in epoch micros and in epoch days.
+    */
+  private val cutUs = 1705276800000000L
+  private val cutDay = 19737L
+
+  /** `ev` in two batches: rows with `c` before `at`, then the rest. */
+  private def splitAt(ev: DataFrame, c: String, at: Long): Seq[DataFrame] =
+    Seq(ev.filter(col(c) < at), ev.filter(col(c) >= at))
 
   /** Streaming last-touch attribution fixture: events replay as TWO
     * micro-batches cut at a global timeline point (2024-01-15), so
@@ -473,66 +356,23 @@ object StreamSync {
     * total purchases; the driver then hash-compares every attribution
     * against DuckDB's batch IGNORE-NULLS window over the same events.
     */
-  private def attributionSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_attribution_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("event_type"))
-        val cutUs = 1705276800000000L // 2024-01-15T00:00:00Z in epoch micros
-        def jsonl(df: DataFrame): DataFrame = df.select(to_json(struct(
-          col("event_id"), col("user_id"), col("ts_us"), col("event_type"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("ts_us") < cutUs)),
-          root, landing, "batch1_early.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("ts_us") >= cutUs)),
-          root, landing, "batch2_late.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts_us",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType)))
-        import s.implicits._
-        val attributed = StreamingSync.attributeStream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.TouchEvent])
-        val q = attributed.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_attribution replay")
-
-        val got = s.read.parquet(sink.toString).count()
-        val expected = Tables.events(s, d)
-          .filter(col("event_type") === "purchase").count()
-        require(got == expected,
-          s"stream_attribution sink has $got purchases, expected $expected — " +
-            "a purchase was dropped or duplicated across batches")
-        Files.createFile(marker)
-        ()
+  private def attributionSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_attribution") { root =>
+      val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
+        unix_micros(col("ts")).as("ts_us"), col("event_type"))
+      import s.implicits._
+      StreamingSync.attributeStream(
+        replayed(s, root.resolve("landing"), splitAt(ev, "ts_us", cutUs))
+          .as[StreamingSync.TouchEvent])
+    } { sunk =>
+      val got = sunk.count()
+      val expected = Tables.events(s, d)
+        .filter(col("event_type") === "purchase").count()
+      require(got == expected,
+        s"stream_attribution sink has $got purchases, expected $expected — " +
+          "a purchase was dropped or duplicated across batches")
     }
-    sink.toString
-  }
 
-  /** Shared replay fixture for the numeric-state ValueEvent family
-    * (EWMA / Holt / anomaly / CUSUM / TWA): events of users < 30 as
-    * integer cents, landed as two mtime-ordered jsonl micro-batches cut
-    * at 2024-01-15T00:00:00Z, replayed through `transform` under
-    * AvailableNow into a parquet sink, with the row-conservation check.
-    * One definition keeps the cut constant, the schema, and the
-    * got == expected invariant from drifting apart across the family.
-    */
   /** The default ValueEvent projection: users < 30, integer cents via
     * the proven round(x*100) rendering.
     */
@@ -542,6 +382,14 @@ object StreamSync {
         unix_micros(col("ts")).as("ts_us"),
         expr("CAST(round(value * 100) AS BIGINT)").as("v"))
 
+  /** Shared replay fixture for the numeric-state ValueEvent family
+    * (EWMA / Holt / anomaly / CUSUM / TWA): events of users < 30 as
+    * integer cents, landed as two mtime-ordered jsonl micro-batches cut
+    * at 2024-01-15T00:00:00Z, replayed through `transform` under
+    * AvailableNow into a parquet sink, with the row-conservation check.
+    * One definition keeps the cut constant, the schema, and the
+    * got == expected invariant from drifting apart across the family.
+    */
   private def valueEventSinkDir(
       s: SparkSession, d: String, name: String,
       project: (SparkSession, String) => DataFrame = centsValueEvents,
@@ -549,56 +397,29 @@ object StreamSync {
       // selective emitter (conversions: one row per purchase) supplies
       // its own expectation so the dropped/duplicated guard still bites
       expectedSink: DataFrame => Long = _.count())(
-      transform: org.apache.spark.sql.Dataset[StreamingSync.ValueEvent] =>
-        org.apache.spark.sql.Dataset[_]): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_${name}_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = project(s, d)
-        val cutUs = 1705276800000000L // 2024-01-15T00:00:00Z in epoch micros
-        def jsonl(df: DataFrame): DataFrame = df.select(to_json(struct(
-          col("event_id"), col("user_id"), col("ts_us"), col("v"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("ts_us") < cutUs)),
-          root, landing, "batch1_early.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("ts_us") >= cutUs)),
-          root, landing, "batch2_late.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts_us",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType)))
-        import s.implicits._
-        val out = transform(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.ValueEvent])
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, s"stream_$name replay")
-
-        val got = s.read.parquet(sink.toString).count()
-        val expected = expectedSink(project(s, d))
-        require(got == expected,
-          s"stream_$name sink has $got rows, expected $expected — " +
-            "an event was dropped or duplicated across batches")
-        Files.createFile(marker)
-        ()
+      transform: Dataset[StreamingSync.ValueEvent] => Dataset[_]): String =
+    replay(s, d, "events", s"stream_$name") { root =>
+      val ev = project(s, d)
+      import s.implicits._
+      transform(replayed(s, root.resolve("landing"), splitAt(ev, "ts_us", cutUs))
+        .as[StreamingSync.ValueEvent])
+    } { sunk =>
+      val got = sunk.count()
+      val expected = expectedSink(project(s, d))
+      require(got == expected,
+        s"stream_$name sink has $got rows, expected $expected — " +
+          "an event was dropped or duplicated across batches")
     }
-    sink.toString
-  }
+
+  /** The documents with an id and a text, projected to `cols`. */
+  private def docColumns(s: SparkSession, d: String, cols: String*): DataFrame =
+    Tables.documents(s, d)
+      .filter(col("doc_id").isNotNull && col("text").isNotNull)
+      .select(cols.map(col): _*)
+
+  /** Three micro-batches interleaved by doc_id mod 3. */
+  private def byDocIdMod3(docs: DataFrame): Seq[DataFrame] =
+    (0 to 2).map(r => docs.filter(col("doc_id") % 3 === r))
 
   /** Streaming SimHash near-dup fixture: all documents land in THREE
     * micro-batches split by doc_id mod 3 — an interleaved split, so
@@ -611,65 +432,28 @@ object StreamSync {
     * CTE) against the same table.
     */
   private def simhashSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/documents.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_simhash_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val docs = Tables.documents(s, d)
-          .filter(col("doc_id").isNotNull && col("text").isNotNull)
-          .select(col("doc_id"), col("text"))
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("doc_id"), col("text"))).as("j"))
-        val b1 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 0)),
-          root, landing, "batch1.jsonl")
-        val b2 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 1)),
-          root, landing, "batch2.jsonl")
-        val b3 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 2)),
-          root, landing, "batch3.jsonl")
-        mtimeAfter(b2, b1, 2000)
-        mtimeAfter(b3, b2, 4000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        import s.implicits._
-        val banded = graft.operators.Dedup
-          .simhashBanded(
-            StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-              maxFilesPerTrigger = 1),
-            "doc_id", "text", maxHamming = 3)
-          .select(col("band"), col("bh"), col("id"), col("fp"))
-          .as[StreamingSync.BandedDoc]
-        val out = StreamingSync.simhashMatchStream(banded, maxHamming = 3)
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_simhash replay")
-
-        val sunk = s.read.parquet(sink.toString)
-        val got = sunk.filter(col("hamming") >= 0)
-          .select(col("id_a"), col("id_b")).distinct().count()
-        val expected = graft.operators.Dedup
-          .simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3).count()
-        require(got == expected,
-          s"stream_simhash sink has $got distinct pairs, batch finds $expected — " +
-            "cross-batch bucket state missed or invented a pair")
-        val armed = sunk.filter(col("hamming") < 0).count()
-        require(armed == 0L,
-          s"stream_simhash: $armed cap-armed markers at fixture scale — " +
-            "a bucket overflowed maxBucket and batch equality no longer holds")
-        Files.createFile(marker)
-        ()
+    def docs = docColumns(s, d, "doc_id", "text")
+    replay(s, d, "documents", "stream_simhash") { root =>
+      import s.implicits._
+      val banded = graft.operators.Dedup
+        .simhashBanded(replayed(s, root.resolve("landing"), byDocIdMod3(docs)),
+          "doc_id", "text", maxHamming = 3)
+        .select(col("band"), col("bh"), col("id"), col("fp"))
+        .as[StreamingSync.BandedDoc]
+      StreamingSync.simhashMatchStream(banded, maxHamming = 3)
+    } { sunk =>
+      val got = sunk.filter(col("hamming") >= 0)
+        .select(col("id_a"), col("id_b")).distinct().count()
+      val expected = graft.operators.Dedup
+        .simhashNearDupPairs(docs, "doc_id", "text", maxHamming = 3).count()
+      require(got == expected,
+        s"stream_simhash sink has $got distinct pairs, batch finds $expected — " +
+          "cross-batch bucket state missed or invented a pair")
+      val armed = sunk.filter(col("hamming") < 0).count()
+      require(armed == 0L,
+        s"stream_simhash: $armed cap-armed markers at fixture scale — " +
+          "a bucket overflowed maxBucket and batch equality no longer holds")
     }
-    sink.toString
   }
 
   /** Streaming frequent-tokens fixture: documents land in THREE
@@ -682,68 +466,27 @@ object StreamSync {
     * the batch top-8 per lang.
     */
   private def topkSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/documents.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_topk_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val docs = Tables.documents(s, d)
-          .filter(col("doc_id").isNotNull && col("text").isNotNull)
-          .select(col("doc_id"), col("lang"), col("text"))
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("doc_id"), col("lang"), col("text"))).as("j"))
-        val b1 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 0)),
-          root, landing, "batch1.jsonl")
-        val b2 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 1)),
-          root, landing, "batch2.jsonl")
-        val b3 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 2)),
-          root, landing, "batch3.jsonl")
-        mtimeAfter(b2, b1, 2000)
-        mtimeAfter(b3, b2, 4000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        import s.implicits._
-        val toks = StreamingSync
-          .readJsonlStream(s, s"$landing/*.jsonl", schema, maxFilesPerTrigger = 1)
-          .select(col("lang"),
-            explode(graft.expressions.functions.ascii_tokens(col("text"))).as("tok"))
-          .as[StreamingSync.LangToken]
-        val out = StreamingSync.topKStream(toks, capacity = 1024)
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_topk replay")
-
-        // exact-mode guard: final snapshot per lang == batch counts
-        val sunk = s.read.parquet(sink.toString)
-        val maxSeq = sunk.groupBy(col("lang")).agg(max(col("seq")).as("seq"))
-        val finalCounts = sunk.join(maxSeq, Seq("lang", "seq"))
-          .select(col("lang"), col("token"), col("cnt"))
-        val batchCounts = docs
-          .select(col("lang"),
-            explode(graft.expressions.functions.ascii_tokens(col("text"))).as("token"))
-          .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
-        val diff = finalCounts.unionByName(batchCounts)
-          .groupBy(col("lang"), col("token"), col("cnt")).agg(count(lit(1)).as("k"))
-          .filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_topk: $diff (lang, token, cnt) rows diverge from the batch counts — " +
-            "cross-batch MG state lost or invented mass in exact mode")
-        Files.createFile(marker)
-        ()
+    def docs = docColumns(s, d, "doc_id", "lang", "text")
+    replay(s, d, "documents", "stream_topk") { root =>
+      import s.implicits._
+      val toks = replayed(s, root.resolve("landing"), byDocIdMod3(docs))
+        .select(col("lang"),
+          explode(graft.expressions.functions.ascii_tokens(col("text"))).as("tok"))
+        .as[StreamingSync.LangToken]
+      StreamingSync.topKStream(toks, capacity = 1024)
+    } { sunk =>
+      // exact-mode guard: final snapshot per lang == batch counts
+      val maxSeq = sunk.groupBy(col("lang")).agg(max(col("seq")).as("seq"))
+      val finalCounts = sunk.join(maxSeq, Seq("lang", "seq"))
+        .select(col("lang"), col("token"), col("cnt"))
+      val batchCounts = docs
+        .select(col("lang"),
+          explode(graft.expressions.functions.ascii_tokens(col("text"))).as("token"))
+        .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("cnt"))
+      requireSameRows(finalCounts, batchCounts,
+        "stream_topk final snapshot vs the batch counts (cross-batch MG " +
+          "state lost or invented mass in exact mode)")
     }
-    sink.toString
   }
 
   /** Streaming c-chart fixture: (event_type, epoch-day) events in two
@@ -753,59 +496,25 @@ object StreamSync {
     * per-day counts — additivity makes that exact by algebra.
     */
   private def cchartSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_cchart_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = Tables.events(s, d)
-          .select(col("event_type").as("typ"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-        val cutDay = 19737L // 2024-01-15 as epoch days
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("typ"), col("day"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("day") < cutDay)),
-          root, landing, "batch1_early.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("day") >= cutDay)),
-          root, landing, "batch2_late.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("typ",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("day",
-            org.apache.spark.sql.types.LongType)))
-        import s.implicits._
-        val out = StreamingSync.cChartStream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.TypeDayEvent])
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_cchart replay")
-
-        // guard: final snapshot day counts == batch per-day counts
-        val sunk = s.read.parquet(sink.toString)
-        val maxSeq = sunk.groupBy(col("typ")).agg(max(col("seq")).as("seq"))
-        val got = sunk.join(maxSeq, Seq("typ", "seq"))
-          .select(col("typ"), col("day_idx"), col("n")).distinct()
-        val want = ev.groupBy(col("typ"), col("day").as("day_idx"))
-          .agg(count(lit(1)).as("n"))
-        val diff = got.unionByName(want)
-          .groupBy(col("typ"), col("day_idx"), col("n")).agg(count(lit(1)).as("k"))
-          .filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_cchart: $diff (typ, day, n) rows diverge from batch day counts — " +
-            "cross-batch day-count state lost or invented mass")
-        Files.createFile(marker)
-        ()
+    def ev = Tables.events(s, d)
+      .select(col("event_type").as("typ"),
+        expr("unix_micros(ts) div 86400000000").as("day"))
+    replay(s, d, "events", "stream_cchart") { root =>
+      import s.implicits._
+      StreamingSync.cChartStream(
+        replayed(s, root.resolve("landing"), splitAt(ev, "day", cutDay))
+          .as[StreamingSync.TypeDayEvent])
+    } { sunk =>
+      // guard: final snapshot day counts == batch per-day counts
+      val maxSeq = sunk.groupBy(col("typ")).agg(max(col("seq")).as("seq"))
+      val got = sunk.join(maxSeq, Seq("typ", "seq"))
+        .select(col("typ"), col("day_idx"), col("n")).distinct()
+      val want = ev.groupBy(col("typ"), col("day").as("day_idx"))
+        .agg(count(lit(1)).as("n"))
+      requireSameRows(got, want,
+        "stream_cchart final snapshot vs the batch day counts (cross-batch " +
+          "day-count state lost or invented mass)")
     }
-    sink.toString
   }
 
   /** Streaming record-days fixture: per-type FINALIZED daily counts in
@@ -815,71 +524,55 @@ object StreamSync {
     * exclusive-prior-window formulation.
     */
   private def recordsSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_records_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val daily = Tables.events(s, d)
-          .groupBy(col("event_type").as("typ"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-          .agg(count(lit(1)).as("n"))
-        val cutDay = 19737L // 2024-01-15 as epoch days
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("typ"), col("day"), col("n"))).as("j"))
-        val b1 = landOne(jsonl(daily.filter(col("day") < cutDay)),
-          root, landing, "batch1_early.jsonl")
-        val b2 = landOne(jsonl(daily.filter(col("day") >= cutDay)),
-          root, landing, "batch2_late.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("typ",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("day",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType)))
-        import s.implicits._
-        val out = StreamingSync.recordStream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.TypeDayCount])
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_records replay")
-
-        // guard: emitted flags == the batch exclusive-prior-window build
-        val got = s.read.parquet(sink.toString)
-          .select(col("typ"), col("day_idx"), col("n"),
-            col("rec_high"), col("rec_low")).distinct()
-        val wPrior = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("typ")).orderBy(col("day_idx").asc)
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val want = daily.withColumnRenamed("day", "day_idx")
-          .withColumn("__pmax", max(col("n")).over(wPrior))
-          .withColumn("__pmin", min(col("n")).over(wPrior))
-          .select(col("typ"), col("day_idx"), col("n"),
-            (col("__pmax").isNull || col("n") > col("__pmax")).as("rec_high"),
-            (col("__pmin").isNull || col("n") < col("__pmin")).as("rec_low"))
-        val diff = got.unionByName(want)
-          .groupBy(col("typ"), col("day_idx"), col("n"),
-            col("rec_high"), col("rec_low"))
-          .agg(count(lit(1)).as("k"))
-          .filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_records: $diff flag rows diverge from the batch " +
-            "exclusive-prior-window formulation — cross-batch max/min state lost")
-        Files.createFile(marker)
-        ()
+    def daily = Tables.events(s, d)
+      .groupBy(col("event_type").as("typ"),
+        expr("unix_micros(ts) div 86400000000").as("day"))
+      .agg(count(lit(1)).as("n"))
+    replay(s, d, "events", "stream_records") { root =>
+      import s.implicits._
+      StreamingSync.recordStream(
+        replayed(s, root.resolve("landing"), splitAt(daily, "day", cutDay))
+          .as[StreamingSync.TypeDayCount])
+    } { sunk =>
+      // guard: emitted flags == the batch exclusive-prior-window build
+      val got = sunk
+        .select(col("typ"), col("day_idx"), col("n"),
+          col("rec_high"), col("rec_low")).distinct()
+      val wPrior = Window.partitionBy(col("typ")).orderBy(col("day_idx").asc)
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val want = daily.withColumnRenamed("day", "day_idx")
+        .withColumn("__pmax", max(col("n")).over(wPrior))
+        .withColumn("__pmin", min(col("n")).over(wPrior))
+        .select(col("typ"), col("day_idx"), col("n"),
+          (col("__pmax").isNull || col("n") > col("__pmax")).as("rec_high"),
+          (col("__pmin").isNull || col("n") < col("__pmin")).as("rec_low"))
+      requireSameRows(got, want,
+        "stream_records flags vs the batch exclusive-prior-window " +
+          "formulation (cross-batch max/min state lost)")
     }
-    sink.toString
   }
+
+  /** Typed cent values with their epoch day: the quantile and drift
+    * replays' input.
+    */
+  private def typedCents(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(col("event_type").as("typ"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("v"),
+        expr("unix_micros(ts) div 86400000000").as("day"))
+
+  /** `ev`'s (typ, v) in two batches cut at [[cutDay]]. */
+  private def typedCentsByDay(ev: DataFrame): Seq[DataFrame] =
+    splitAt(ev, "day", cutDay).map(_.select(col("typ"), col("v")))
+
+  /** `ev` with its fixed 128×$5 grid bucket `__b` and clamp flag `__cl`. */
+  private def centBuckets(ev: DataFrame): DataFrame =
+    ev.withColumn("__b",
+        when(col("v") < 0, 0L)
+          .when(expr("v div 500") >= 128, 127L)
+          .otherwise(expr("v div 500")))
+      .withColumn("__cl",
+        when(col("v") < 0 || expr("v div 500") >= 128, 1L).otherwise(0L))
 
   /** Streaming bucketed-quantile fixture: per-type value events in two
     * TIME-SPLIT batches; quantileStream folds the fixed 128×$5 cent
@@ -887,87 +580,40 @@ object StreamSync {
     * p90, p99) equals the batch bucket-spine build — additive counts
     * make the snapshot batch-split independent by algebra.
     */
-  private def quantileSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_quantile_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = Tables.events(s, d)
-          .select(col("event_type").as("typ"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("v"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-        val cutDay = 19737L // 2024-01-15 as epoch days
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("typ"), col("v"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("day") < cutDay)),
-          root, landing, "batch1_early.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("day") >= cutDay)),
-          root, landing, "batch2_late.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("typ",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType)))
-        import s.implicits._
-        val out = StreamingSync.quantileStream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.TypeValue],
-          lo = 0L, width = 500L, nBuckets = 128)
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_quantile replay")
-
-        // guard: max-seq snapshot == the batch bucket-spine quantiles
-        val sunk = s.read.parquet(sink.toString)
-        val maxSeq = sunk.groupBy(col("typ")).agg(max(col("seq")).as("seq"))
-        val got = sunk.join(maxSeq, Seq("typ", "seq"))
-          .select(col("typ"), col("n_obs"), col("n_clamped"),
-            col("p50_lo"), col("p90_lo"), col("p99_lo")).distinct()
-        val bkt = ev
-          .withColumn("__b",
-            when(col("v") < 0, 0L)
-              .when(expr("v div 500") >= 128, 127L)
-              .otherwise(expr("v div 500")))
-          .withColumn("__cl",
-            when(col("v") < 0 || expr("v div 500") >= 128, 1L).otherwise(0L))
-          .groupBy(col("typ"), col("__b"))
-          .agg(count(lit(1)).as("__m"), sum(col("__cl")).as("__clm"))
-        val wCum = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("typ")).orderBy(col("__b").asc)
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        val wAll = org.apache.spark.sql.expressions.Window.partitionBy(col("typ"))
-        val want = bkt
-          .withColumn("__cum", sum(col("__m")).over(wCum))
-          .withColumn("__n", sum(col("__m")).over(wAll))
-          .groupBy(col("typ"))
-          .agg(max(col("__n")).as("n_obs"), sum(col("__clm")).as("n_clamped"),
-            (min(when(col("__cum") >= expr("(__n * 500 + 999) div 1000"),
-              col("__b"))) * 500).as("p50_lo"),
-            (min(when(col("__cum") >= expr("(__n * 900 + 999) div 1000"),
-              col("__b"))) * 500).as("p90_lo"),
-            (min(when(col("__cum") >= expr("(__n * 990 + 999) div 1000"),
-              col("__b"))) * 500).as("p99_lo"))
-        val diff = got.unionByName(want)
-          .groupBy(col("typ"), col("n_obs"), col("n_clamped"),
-            col("p50_lo"), col("p90_lo"), col("p99_lo"))
-          .agg(count(lit(1)).as("k")).filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_quantile: $diff snapshot rows diverge from the batch " +
-            "bucket-spine build — histogram state lost or invented mass")
-        Files.createFile(marker)
-        ()
+  private def quantileSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_quantile") { root =>
+      import s.implicits._
+      StreamingSync.quantileStream(
+        replayed(s, root.resolve("landing"), typedCentsByDay(typedCents(s, d)))
+          .as[StreamingSync.TypeValue],
+        lo = 0L, width = 500L, nBuckets = 128)
+    } { sunk =>
+      // guard: max-seq snapshot == the batch bucket-spine quantiles
+      val maxSeq = sunk.groupBy(col("typ")).agg(max(col("seq")).as("seq"))
+      val got = sunk.join(maxSeq, Seq("typ", "seq"))
+        .select(col("typ"), col("n_obs"), col("n_clamped"),
+          col("p50_lo"), col("p90_lo"), col("p99_lo")).distinct()
+      val bkt = centBuckets(typedCents(s, d))
+        .groupBy(col("typ"), col("__b"))
+        .agg(count(lit(1)).as("__m"), sum(col("__cl")).as("__clm"))
+      val wCum = Window.partitionBy(col("typ")).orderBy(col("__b").asc)
+        .rowsBetween(Window.unboundedPreceding, 0)
+      val wAll = Window.partitionBy(col("typ"))
+      val want = bkt
+        .withColumn("__cum", sum(col("__m")).over(wCum))
+        .withColumn("__n", sum(col("__m")).over(wAll))
+        .groupBy(col("typ"))
+        .agg(max(col("__n")).as("n_obs"), sum(col("__clm")).as("n_clamped"),
+          (min(when(col("__cum") >= expr("(__n * 500 + 999) div 1000"),
+            col("__b"))) * 500).as("p50_lo"),
+          (min(when(col("__cum") >= expr("(__n * 900 + 999) div 1000"),
+            col("__b"))) * 500).as("p90_lo"),
+          (min(when(col("__cum") >= expr("(__n * 990 + 999) div 1000"),
+            col("__b"))) * 500).as("p99_lo"))
+      requireSameRows(got, want,
+        "stream_quantile snapshot vs the batch bucket-spine build " +
+          "(histogram state lost or invented mass)")
     }
-    sink.toString
-  }
 
   /** Streaming drift fixture: the same typed cent values as the
     * quantile fixture in two TIME-SPLIT batches — the early window
@@ -976,105 +622,60 @@ object StreamSync {
     * snapshot's total-variation per-mille equals the batch build
     * computed from the raw table with the same early/late split.
     */
-  private def driftSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_drift_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = Tables.events(s, d)
-          .select(col("event_type").as("typ"),
-            expr("CAST(round(value * 100) AS BIGINT)").as("v"),
-            expr("unix_micros(ts) div 86400000000").as("day"))
-        val cutDay = 19737L // 2024-01-15 as epoch days
-        // Contract enforcement (r16 ADVICE #2): every key MUST appear in
-        // the pre-cut window. driftStream freezes whichever micro-batch
-        // arrives FIRST per key as the reference, so a key first seen
-        // after the cut would freeze its LIVE window as the reference
-        // and silently diverge from the batch early/late oracle. Fail
-        // the fixture build loudly here instead of relying on the
-        // downstream TV-equality guard's harder-to-read failure.
-        val lateOnlyKeys = ev.groupBy(col("typ"))
-          .agg(min(col("day")).as("__d0"))
-          .filter(col("__d0") >= cutDay).count()
-        require(lateOnlyKeys == 0L,
-          s"stream_drift: $lateOnlyKeys key(s) first appear after the cut " +
-            "day — their reference window would be empty; move the cut")
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("typ"), col("v"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("day") < cutDay)),
-          root, landing, "batch1_reference.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("day") >= cutDay)),
-          root, landing, "batch2_live.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("typ",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType)))
-        import s.implicits._
-        val out = StreamingSync.driftStream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.TypeValue],
-          lo = 0L, width = 500L, nBuckets = 128)
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_drift replay")
-
-        // guard: max-seq snapshot == the batch early/late TV build
-        val sunk = s.read.parquet(sink.toString)
-        val maxSeq = sunk.groupBy(col("typ")).agg(max(col("seq")).as("seq"))
-        val got = sunk.join(maxSeq, Seq("typ", "seq"))
-          .select(col("typ"), col("n_ref"), col("n_live"), col("n_clamped"),
-            col("tv_pm")).distinct()
-        val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-        val cell = ev
-          .withColumn("__b",
-            when(col("v") < 0, 0L)
-              .when(expr("v div 500") >= 128, 127L)
-              .otherwise(expr("v div 500")))
-          .withColumn("__cl",
-            when(col("v") < 0 || expr("v div 500") >= 128, 1L).otherwise(0L))
-          .groupBy(col("typ"), col("__b"))
-          .agg(sum(when(col("day") < cutDay, 1L).otherwise(0L)).as("r"),
-            sum(when(col("day") >= cutDay, 1L).otherwise(0L)).as("l"),
-            sum(col("__cl")).as("cl"))
-        val tot = cell.groupBy(col("typ"))
-          .agg(sum(col("r")).as("n_ref"), sum(col("l")).as("n_live"),
-            sum(col("cl")).as("n_clamped"))
-        val want = cell.join(tot, Seq("typ"))
-          .withColumn("__t",
-            abs(col("l").cast(dec) * col("n_ref")
-              - col("r").cast(dec) * col("n_live")))
-          .groupBy(col("typ"))
-          .agg(max(col("n_ref")).as("n_ref"), max(col("n_live")).as("n_live"),
-            max(col("n_clamped")).as("n_clamped"), sum(col("__t")).as("__num"))
-          .withColumn("tv_pm",
-            when(col("n_ref") === 0 || col("n_live") === 0, 0L)
-              .otherwise(expr(
-                """(1000 * __num)
-                   div (CAST(2 AS DECIMAL(38,0)) * n_ref * n_live)""")))
-          .select(col("typ"), col("n_ref"), col("n_live"), col("n_clamped"),
-            col("tv_pm"))
-        val diff = got.unionByName(want)
-          .groupBy(col("typ"), col("n_ref"), col("n_live"), col("n_clamped"),
-            col("tv_pm"))
-          .agg(count(lit(1)).as("k")).filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_drift: $diff snapshot rows diverge from the batch " +
-            "early/late TV build — reference frozen wrong or live mass lost")
-        Files.createFile(marker)
-        ()
+  private def driftSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_drift") { root =>
+      val ev = typedCents(s, d)
+      // Contract enforcement (r16 ADVICE #2): every key MUST appear in
+      // the pre-cut window. driftStream freezes whichever micro-batch
+      // arrives FIRST per key as the reference, so a key first seen
+      // after the cut would freeze its LIVE window as the reference
+      // and silently diverge from the batch early/late oracle. Fail
+      // the fixture build loudly here instead of relying on the
+      // downstream TV-equality guard's harder-to-read failure.
+      val lateOnlyKeys = ev.groupBy(col("typ"))
+        .agg(min(col("day")).as("__d0"))
+        .filter(col("__d0") >= cutDay).count()
+      require(lateOnlyKeys == 0L,
+        s"stream_drift: $lateOnlyKeys key(s) first appear after the cut " +
+          "day — their reference window would be empty; move the cut")
+      import s.implicits._
+      StreamingSync.driftStream(
+        replayed(s, root.resolve("landing"), typedCentsByDay(ev))
+          .as[StreamingSync.TypeValue],
+        lo = 0L, width = 500L, nBuckets = 128)
+    } { sunk =>
+      // guard: max-seq snapshot == the batch early/late TV build
+      val maxSeq = sunk.groupBy(col("typ")).agg(max(col("seq")).as("seq"))
+      val got = sunk.join(maxSeq, Seq("typ", "seq"))
+        .select(col("typ"), col("n_ref"), col("n_live"), col("n_clamped"),
+          col("tv_pm")).distinct()
+      val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
+      val cell = centBuckets(typedCents(s, d))
+        .groupBy(col("typ"), col("__b"))
+        .agg(sum(when(col("day") < cutDay, 1L).otherwise(0L)).as("r"),
+          sum(when(col("day") >= cutDay, 1L).otherwise(0L)).as("l"),
+          sum(col("__cl")).as("cl"))
+      val tot = cell.groupBy(col("typ"))
+        .agg(sum(col("r")).as("n_ref"), sum(col("l")).as("n_live"),
+          sum(col("cl")).as("n_clamped"))
+      val want = cell.join(tot, Seq("typ"))
+        .withColumn("__t",
+          abs(col("l").cast(dec) * col("n_ref")
+            - col("r").cast(dec) * col("n_live")))
+        .groupBy(col("typ"))
+        .agg(max(col("n_ref")).as("n_ref"), max(col("n_live")).as("n_live"),
+          max(col("n_clamped")).as("n_clamped"), sum(col("__t")).as("__num"))
+        .withColumn("tv_pm",
+          when(col("n_ref") === 0 || col("n_live") === 0, 0L)
+            .otherwise(expr(
+              """(1000 * __num)
+                 div (CAST(2 AS DECIMAL(38,0)) * n_ref * n_live)""")))
+        .select(col("typ"), col("n_ref"), col("n_live"), col("n_clamped"),
+          col("tv_pm"))
+      requireSameRows(got, want,
+        "stream_drift snapshot vs the batch early/late TV build " +
+          "(reference frozen wrong or live mass lost)")
     }
-    sink.toString
-  }
 
   /** Streaming SCD2 fixture: user-typed events in two TIME-SPLIT batches
     * (per-key time order across batches — the value-stream contract);
@@ -1082,72 +683,30 @@ object StreamSync {
     * the emitted set equals the batch q_scd2 closed-interval set.
     */
   private def scd2SinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_scd2_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val ev = Tables.events(s, d).filter(col("user_id") < 50)
-          .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_id"), col("event_type"))
-        val cutUs = 1705276800000000L // 2024-01-15T00:00:00Z
-        def jsonl(df: DataFrame): DataFrame = df.select(to_json(struct(
-          col("user_id"), col("ts_us"), col("event_id"), col("event_type"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("ts_us") < cutUs)),
-          root, landing, "batch1_early.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("ts_us") >= cutUs)),
-          root, landing, "batch2_late.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts_us",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_type",
-            org.apache.spark.sql.types.StringType)))
-        import s.implicits._
-        val out = StreamingSync.scd2Stream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.TypedEvent])
-        val q = out.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_scd2 replay")
-
-        // guard: stream closed set == batch closed set (exact rows)
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
-        val batchClosed = ev
-          .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-          .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
-          .withColumn("valid_to_us", lead(col("ts_us"), 1).over(
-            Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))))
-          .withColumn("version", row_number().over(
-            Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id")))
-            .cast("long"))
-          .filter(col("valid_to_us").isNotNull)
-          .select(col("user_id"), col("version"), col("event_type"),
-            col("ts_us").as("valid_from_us"), col("valid_to_us"))
-        val got = s.read.parquet(sink.toString)
-          .select(col("user_id"), col("version"), col("event_type"),
-            col("valid_from_us"), col("valid_to_us"))
-        val diff = got.unionByName(batchClosed)
-          .groupBy(got.columns.map(col): _*).agg(count(lit(1)).as("k"))
-          .filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_scd2: $diff rows diverge from the batch closed-interval set")
-        Files.createFile(marker)
-        ()
+    def ev = Tables.events(s, d).filter(col("user_id") < 50)
+      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
+        col("event_id"), col("event_type"))
+    replay(s, d, "events", "stream_scd2") { root =>
+      import s.implicits._
+      StreamingSync.scd2Stream(
+        replayed(s, root.resolve("landing"), splitAt(ev, "ts_us", cutUs))
+          .as[StreamingSync.TypedEvent])
+    } { sunk =>
+      // guard: stream closed set == batch closed set (exact rows)
+      val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
+      val batchClosed = ev
+        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+        .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
+        .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w))
+        .withColumn("version", row_number().over(w).cast("long"))
+        .filter(col("valid_to_us").isNotNull)
+        .select(col("user_id"), col("version"), col("event_type"),
+          col("ts_us").as("valid_from_us"), col("valid_to_us"))
+      val got = sunk
+        .select(col("user_id"), col("version"), col("event_type"),
+          col("valid_from_us"), col("valid_to_us"))
+      requireSameRows(got, batchClosed, "stream_scd2 vs the batch closed-interval set")
     }
-    sink.toString
   }
 
   /** Streaming checksum fixture: documents in three interleaved batches,
@@ -1156,66 +715,26 @@ object StreamSync {
     * this exact by algebra, not by ordering discipline).
     */
   private def checksumSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/documents.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_checksum_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        val docs = Tables.documents(s, d)
-          .filter(col("doc_id").isNotNull && col("text").isNotNull)
-          .select(col("doc_id"), col("source"), col("text"))
-        def jsonl(df: DataFrame): DataFrame =
-          df.select(to_json(struct(col("doc_id"), col("source"), col("text"))).as("j"))
-        val b1 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 0)),
-          root, landing, "batch1.jsonl")
-        val b2 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 1)),
-          root, landing, "batch2.jsonl")
-        val b3 = landOne(jsonl(docs.filter(col("doc_id") % 3 === 2)),
-          root, landing, "batch3.jsonl")
-        mtimeAfter(b2, b1, 2000)
-        mtimeAfter(b3, b2, 4000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("source",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        import s.implicits._
-        val rows = StreamingSync
-          .readJsonlStream(s, s"$landing/*.jsonl", schema, maxFilesPerTrigger = 1)
+    def docs = docColumns(s, d, "doc_id", "source", "text")
+    replay(s, d, "documents", "stream_checksum") { root =>
+      import s.implicits._
+      StreamingSync.checksumStream(
+        replayed(s, root.resolve("landing"), byDocIdMod3(docs))
           .select(col("source"),
             expr("cast(conv(substring(md5(concat(cast(doc_id as string), ':', text)), 1, 15), 16, 10) as bigint)")
               .as("h"))
-          .as[StreamingSync.SrcHash]
-        val q = StreamingSync.checksumStream(rows).writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_checksum replay")
-
-        val sunk = s.read.parquet(sink.toString)
-        val maxSeq = sunk.groupBy(col("source")).agg(max(col("seq")).as("seq"))
-        val fin = sunk.join(maxSeq, Seq("source", "seq"))
-          .select(col("source"), col("n_docs"), col("row_xor"))
-        val batch = graft.operators.Integrity
-          .corpusChecksum(docs, "source", "doc_id", "text")
-          .select(col("source"), col("n_docs"), col("row_xor"))
-        val diff = fin.unionByName(batch)
-          .groupBy(col("source"), col("n_docs"), col("row_xor"))
-          .agg(count(lit(1)).as("k")).filter(col("k") =!= 2).count()
-        require(diff == 0L,
-          s"stream_checksum: $diff source rows diverge from the batch checksum — " +
-            "XOR state lost or double-folded a row")
-        Files.createFile(marker)
-        ()
+          .as[StreamingSync.SrcHash])
+    } { sunk =>
+      val maxSeq = sunk.groupBy(col("source")).agg(max(col("seq")).as("seq"))
+      val fin = sunk.join(maxSeq, Seq("source", "seq"))
+        .select(col("source"), col("n_docs"), col("row_xor"))
+      val batch = graft.operators.Integrity
+        .corpusChecksum(docs, "source", "doc_id", "text")
+        .select(col("source"), col("n_docs"), col("row_xor"))
+      requireSameRows(fin, batch,
+        "stream_checksum vs the batch checksum (XOR state lost or " +
+          "double-folded a row)")
     }
-    sink.toString
   }
 
   /** Projection for the streaming interval merge: `v` carries each
@@ -1234,7 +753,6 @@ object StreamSync {
     * user's final (never-closed) island.
     */
   private def batchClosedIslands(df: DataFrame): Long = {
-    import org.apache.spark.sql.expressions.Window
     val ord = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
     val prevMax = max(col("v"))
@@ -1334,60 +852,41 @@ object StreamSync {
   private def twaSinkDir(s: SparkSession, d: String): String =
     valueEventSinkDir(s, d, "twa")(StreamingSync.twaStream(_))
 
+  /** Streaming sessionization under the oracle: every event lands as epoch
+    * seconds in batch 1 (one file — the per-user state sees the full
+    * history before any close decision), then batch 2 delivers ONE
+    * sentinel event per user, `gap + 1` past that user's last real event,
+    * which closes every still-open real session through the
+    * flatMapGroupsWithState path (state read back across micro-batches —
+    * the stateful choreography, not a single-batch sort). The sentinel's
+    * own session never closes, so it never reaches the sink; the sink is
+    * exactly the gap-and-island sessions DuckDB computes in batch. The
+    * completion marker requires sum(n_events) == real event count — a
+    * session dropped, double-closed, or left open can never pass as done.
+    */
   private def sessionizeSinkDir(s: SparkSession, d: String): String = {
     val gapSeconds = 1800L
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_sessionize_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-
-        // epoch SECONDS on both sides: the stream sessionizes over floored
-        // seconds, and the oracle's gap/island SQL floors epoch(ts) the
-        // same way (the q_sessionize discipline) — so tie orders within a
-        // second can differ without changing any session boundary
-        val ev = Tables.events(s, d).select(col("user_id"),
-          unix_timestamp(col("ts").cast("timestamp")).as("ts_s"))
-        val b1 = landOne(
-          ev.select(to_json(struct(col("user_id"), col("ts_s"))).as("j")),
-          root, landing, "batch1_events.jsonl")
-        val b2 = landOne(
-          ev.groupBy(col("user_id"))
-            .agg((max(col("ts_s")) + gapSeconds + 1L).as("ts_s"))
-            .select(to_json(struct(col("user_id"), col("ts_s"))).as("j")),
-          root, landing, "batch2_sentinels.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts_s",
-            org.apache.spark.sql.types.LongType)))
-        import s.implicits._
-        val sessions = StreamingSync.sessionizeStream(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1).as[StreamingSync.SessionEvent],
-          gapSeconds = gapSeconds)
-        val q = sessions.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_sessionize replay")
-
-        val covered = s.read.parquet(sink.toString)
-          .agg(sum(col("n_events"))).head().getLong(0)
-        val expected = Tables.events(s, d).count()
-        require(covered == expected,
-          s"stream_sessionize sink covers $covered events, expected $expected — " +
-            "a session was dropped, double-closed, or left open")
-        Files.createFile(marker)
-        ()
+    replay(s, d, "events", "stream_sessionize") { root =>
+      // epoch SECONDS on both sides: the stream sessionizes over floored
+      // seconds, and the oracle's gap/island SQL floors epoch(ts) the
+      // same way (the q_sessionize discipline) — so tie orders within a
+      // second can differ without changing any session boundary
+      val ev = Tables.events(s, d).select(col("user_id"),
+        unix_timestamp(col("ts").cast("timestamp")).as("ts_s"))
+      val sentinels = ev.groupBy(col("user_id"))
+        .agg((max(col("ts_s")) + gapSeconds + 1L).as("ts_s"))
+      import s.implicits._
+      StreamingSync.sessionizeStream(
+        replayed(s, root.resolve("landing"), Seq(ev, sentinels))
+          .as[StreamingSync.SessionEvent],
+        gapSeconds = gapSeconds)
+    } { sunk =>
+      val covered = sunk.agg(sum(col("n_events"))).head().getLong(0)
+      val expected = Tables.events(s, d).count()
+      require(covered == expected,
+        s"stream_sessionize sink covers $covered events, expected $expected — " +
+          "a session was dropped, double-closed, or left open")
     }
-    sink.toString
   }
 
   /** Stream-static enrichment under the oracle: events replay as TWO
@@ -1398,55 +897,51 @@ object StreamSync {
     * so the completion marker requires sink count == event count and the
     * driver hash-compares the enriched rows against DuckDB's batch join.
     */
-  private def enrichSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_enrich_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-
-        val ev = Tables.events(s, d).select(col("user_id"), col("event_id"))
-        def jsonl(df: org.apache.spark.sql.DataFrame) =
-          df.select(to_json(struct(col("user_id"), col("event_id"))).as("j"))
-        val b1 = landOne(jsonl(ev.filter(col("event_id") % 2 === 0)),
-          root, landing, "batch1_even.jsonl")
-        val b2 = landOne(jsonl(ev.filter(col("event_id") % 2 =!= 0)),
-          root, landing, "batch2_odd.jsonl")
-        mtimeAfter(b2, b1, 2000)
-
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType)))
-        val dim = Tables.nation(s, d)
-          .select(col("n_nationkey").cast("bigint").as("nat_key"), col("n_name"))
-        val enriched = StreamingSync.enrichWithStatic(
-          StreamingSync.readJsonlStream(s, s"$landing/*.jsonl", schema,
-            maxFilesPerTrigger = 1)
-            .withColumn("nat_key", pmod(col("user_id"), lit(25L))),
-          dim, Seq("nat_key"))
-          .select(col("event_id"), col("user_id"), col("n_name"))
-        val q = enriched.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_enrich replay")
-
-        val n = s.read.parquet(sink.toString).count()
-        val expected = Tables.events(s, d).count()
-        require(n == expected,
-          s"stream_enrich sink has $n rows, expected $expected — " +
-            "an event missed its dimension row or was duplicated")
-        Files.createFile(marker)
-        ()
+  private def enrichSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_enrich") { root =>
+      val ev = Tables.events(s, d).select(col("user_id"), col("event_id"))
+      val dim = Tables.nation(s, d)
+        .select(col("n_nationkey").cast("bigint").as("nat_key"), col("n_name"))
+      StreamingSync.enrichWithStatic(
+        replayed(s, root.resolve("landing"), Seq(
+          ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 =!= 0)))
+          .withColumn("nat_key", pmod(col("user_id"), lit(25L))),
+        dim, Seq("nat_key"))
+        .select(col("event_id"), col("user_id"), col("n_name"))
+    } { sunk =>
+      val n = sunk.count()
+      val expected = Tables.events(s, d).count()
+      require(n == expected,
+        s"stream_enrich sink has $n rows, expected $expected — " +
+          "an event missed its dimension row or was duplicated")
     }
-    sink.toString
-  }
+
+  /** The events of one type as the join replays land them. */
+  private def eventsOfType(s: SparkSession, d: String, eventType: String): DataFrame =
+    Tables.events(s, d).filter(col("event_type") === eventType)
+      .select(col("event_id"), col("user_id"), col("ts"))
+
+  /** The two sides of the click → purchase interval joins, named apart. */
+  private def clickSide(df: DataFrame): DataFrame =
+    df.select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
+  private def purchaseSide(df: DataFrame): DataFrame =
+    df.select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
+      col("ts").as("p_ts"))
+  private val withinHour =
+    "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour"
+
+  /** The batch click → purchase interval join's row count. */
+  private def batchJoinCount(s: SparkSession, d: String, joinType: String): Long =
+    clickSide(eventsOfType(s, d, "click"))
+      .join(purchaseSide(eventsOfType(s, d, "purchase")), expr(withinHour), joinType)
+      .count()
+
+  /** A join side's far-future watermark sentinel; each side gets its own
+    * negative user id so the two sentinels never join.
+    */
+  private def joinSentinel(s: SparkSession, userId: Long): DataFrame =
+    s.range(1).select(lit(-1L).as("event_id"), lit(userId).as("user_id"),
+      to_timestamp(lit("2024-06-01 00:00:00")).as("ts"))
 
   /** Stream-stream interval join under the oracle: clicks and purchases
     * land as two separate streams; purchases split across two micro-batches
@@ -1457,84 +952,25 @@ object StreamSync {
     * state evicts mid-replay, making the result exactly the batch join the
     * driver's DuckDB oracle computes.
     */
-  private def joinSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_join_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val clickDir = Files.createDirectories(root.resolve("clicks"))
-        val purchDir = Files.createDirectories(root.resolve("purchases"))
-
-        def land(eventType: String, dir: Path, parts: Int): Unit = {
-          val ev = Tables.events(s, d).filter(col("event_type") === eventType)
-            .select(to_json(struct(col("event_id"), col("user_id"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-          // land the whole stream under root first — NOT under `dir`, which
-          // the readJsonlStream glob would pick up as an extra batch
-          val whole = landOne(ev, root, root, s"whole_$eventType.jsonl")
-          if (parts == 1) { Files.move(whole, dir.resolve("batch1.jsonl")); () }
-          else {
-            // split the lines round-robin into `parts` mtime-ordered files
-            val lines = Files.readAllLines(whole)
-            val batch1 = dir.resolve("batch1.jsonl")
-            (0 until parts).foreach { p =>
-              val f = dir.resolve(s"batch${p + 1}.jsonl")
-              val mine = new java.util.ArrayList[String]()
-              (0 until lines.size).foreach(i => if (i % parts == p) { mine.add(lines.get(i)); () })
-              Files.write(f, mine)
-              if (p > 0) mtimeAfter(f, batch1, p * 2000L)
-            }
-            Files.delete(whole)
-            ()
-          }
-        }
-        land("click", clickDir, parts = 1)
-        land("purchase", purchDir, parts = 2)
-
-        val lineSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val clicks = StreamingSync.readJsonlStream(s, s"$clickDir/*.jsonl", lineSchema)
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        val purchases = StreamingSync.readJsonlStream(s, s"$purchDir/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-        val joined = StreamingSync.intervalJoinStream(
-          clicks, "c_ts", purchases, "p_ts",
-          "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour",
-          delay = "45 days")
-          .select(col("user_id"), col("click_id"), col("purchase_id"))
-        val q = joined.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_join replay")
-
-        val n = s.read.parquet(sink.toString).count()
-        val c = Tables.events(s, d).filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        val p = Tables.events(s, d).filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-        val expected = c.join(p, expr(
-          "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour")).count()
-        require(n == expected,
-          s"stream_join sink has $n pairs, batch join expects $expected — " +
-            "buffered-state matching dropped or duplicated pairs")
-        Files.createFile(marker)
-        ()
+  private def joinSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_join") { root =>
+      val purchases = eventsOfType(s, d, "purchase")
+      StreamingSync.intervalJoinStream(
+        clickSide(replayed(s, root.resolve("clicks"), Seq(eventsOfType(s, d, "click")))),
+        "c_ts",
+        // the purchases split by event_id parity into two micro-batches
+        purchaseSide(replayed(s, root.resolve("purchases"), Seq(
+          purchases.filter(col("event_id") % 2 === 0),
+          purchases.filter(col("event_id") % 2 =!= 0)))),
+        "p_ts", withinHour, delay = "45 days")
+        .select(col("user_id"), col("click_id"), col("purchase_id"))
+    } { sunk =>
+      val n = sunk.count()
+      val expected = batchJoinCount(s, d, "inner")
+      require(n == expected,
+        s"stream_join sink has $n pairs, batch join expects $expected — " +
+          "buffered-state matching dropped or duplicated pairs")
     }
-    sink.toString
-  }
 
   /** Left-outer stream-stream interval join replay: clicks left-join
     * purchases within [c_ts, c_ts + 1h]; clicks with no purchase emit
@@ -1547,81 +983,26 @@ object StreamSync {
     * filtered in the driven query. Verified in-fixture against the batch
     * left-outer join before the completion marker lands.
     */
-  private def outerJoinSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_ojoin_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val clickDir = Files.createDirectories(root.resolve("clicks"))
-        val purchDir = Files.createDirectories(root.resolve("purchases"))
-
-        def land(eventType: String, dir: Path): Path = {
-          val ev = Tables.events(s, d).filter(col("event_type") === eventType)
-            .select(to_json(struct(col("event_id"), col("user_id"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-          val whole = landOne(ev, root, root, s"whole_o_$eventType.jsonl")
-          val b1 = dir.resolve("batch1.jsonl")
-          Files.move(whole, b1)
-          b1
-        }
-        def sentinel(dir: Path, prev: Path, userId: Long): Unit = {
-          val f = dir.resolve("batch2_sentinel.jsonl")
-          Files.write(f, java.util.Arrays.asList(
-            s"""{"event_id":-1,"user_id":$userId,"ts":"2024-06-01T00:00:00.000000"}"""))
-          mtimeAfter(f, prev, 4000L)
-        }
-        // distinct sentinel user ids: the two sentinels must not join
-        sentinel(clickDir, land("click", clickDir), -1L)
-        sentinel(purchDir, land("purchase", purchDir), -2L)
-
-        val lineSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val clicks = StreamingSync.readJsonlStream(s, s"$clickDir/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        val purchases = StreamingSync.readJsonlStream(s, s"$purchDir/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-        val joined = StreamingSync.intervalJoinStreamOuter(
-          clicks, "c_ts", purchases, "p_ts",
-          "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour",
-          delay = "40 days")
-          .select(col("user_id"), col("click_id"), col("purchase_id"))
-        val q = joined.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_outer_join replay")
-
-        val n = s.read.parquet(sink.toString).count()
-        val c = Tables.events(s, d).filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        val p = Tables.events(s, d).filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-        val expected = c.join(p, expr(
-          "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour"),
-          "left_outer").count() // the sentinel click itself stays buffered:
-        // the watermark it pushes (its ts − delay) never passes its OWN
-        // eviction time, so it is never emitted — only the real rows flush
-        require(n == expected,
-          s"stream_outer_join sink has $n rows, batch left join expects $expected — " +
-            "unmatched clicks not flushed (watermark pinned?) or pairs duplicated")
-        Files.createFile(marker)
-        ()
+  private def outerJoinSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_ojoin") { root =>
+      StreamingSync.intervalJoinStreamOuter(
+        clickSide(replayed(s, root.resolve("clicks"),
+          Seq(eventsOfType(s, d, "click"), joinSentinel(s, -1L)))),
+        "c_ts",
+        purchaseSide(replayed(s, root.resolve("purchases"),
+          Seq(eventsOfType(s, d, "purchase"), joinSentinel(s, -2L)))),
+        "p_ts", withinHour, delay = "40 days")
+        .select(col("user_id"), col("click_id"), col("purchase_id"))
+    } { sunk =>
+      val n = sunk.count()
+      // the sentinel click itself stays buffered: the watermark it pushes
+      // (its ts − delay) never passes its OWN eviction time, so it is
+      // never emitted — only the real rows flush
+      val expected = batchJoinCount(s, d, "left_outer")
+      require(n == expected,
+        s"stream_outer_join sink has $n rows, batch left join expects $expected — " +
+          "unmatched clicks not flushed (watermark pinned?) or pairs duplicated")
     }
-    sink.toString
-  }
 
   /** FULL-outer stream-stream interval join replay: the left-outer
     * fixture's shape with `full_outer`, so unmatched rows flush from BOTH
@@ -1634,86 +1015,81 @@ object StreamSync {
     * click columns are null). Verified in-fixture against the batch full
     * join before the completion marker lands.
     */
-  private def fullOuterJoinSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_fojoin_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val sink = root.resolve("sink")
-    ensureFixture(root) {
-        val clickDir = Files.createDirectories(root.resolve("clicks"))
-        val purchDir = Files.createDirectories(root.resolve("purchases"))
-
-        def land(eventType: String, dir: Path): Path = {
-          val ev = Tables.events(s, d).filter(col("event_type") === eventType)
-            .select(to_json(struct(col("event_id"), col("user_id"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"))).as("j"))
-          val whole = landOne(ev, root, root, s"whole_fo_$eventType.jsonl")
-          val b1 = dir.resolve("batch1.jsonl")
-          Files.move(whole, b1)
-          b1
-        }
-        def sentinel(dir: Path, prev: Path, userId: Long): Unit = {
-          val f = dir.resolve("batch2_sentinel.jsonl")
-          Files.write(f, java.util.Arrays.asList(
-            s"""{"event_id":-1,"user_id":$userId,"ts":"2024-06-01T00:00:00.000000"}"""))
-          mtimeAfter(f, prev, 4000L)
-        }
-        // distinct sentinel user ids: the two sentinels must not join
-        sentinel(clickDir, land("click", clickDir), -1L)
-        sentinel(purchDir, land("purchase", purchDir), -2L)
-
-        val lineSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType)))
-        val clicks = StreamingSync.readJsonlStream(s, s"$clickDir/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        val purchases = StreamingSync.readJsonlStream(s, s"$purchDir/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-        val joined = StreamingSync.intervalJoinStreamOuter(
-          clicks, "c_ts", purchases, "p_ts",
-          "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour",
-          delay = "40 days", joinType = "full_outer")
-          // unmatched purchases have a null left side — surface ONE
-          // user_id column so the driven query needn't know which side
-          // produced the row
-          .select(coalesce(col("user_id"), col("p_user_id")).as("user_id"),
-            col("click_id"), col("purchase_id"))
-        val q = joined.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .format("parquet")
-          .option("path", sink.toString)
-          .start()
-        awaitOrFail(q, 180000, "stream_full_outer_join replay")
-
-        // each side's sentinel stays buffered in ITS OWN state (the
-        // watermark it pushes never passes its own eviction time), so only
-        // real rows flush — mirror the batch count over real events
-        val n = s.read.parquet(sink.toString)
-          .filter(col("user_id") >= 0).count()
-        val c = Tables.events(s, d).filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("c_ts"))
-        val p = Tables.events(s, d).filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user_id"), col("event_id").as("purchase_id"),
-            col("ts").as("p_ts"))
-        val expected = c.join(p, expr(
-          "user_id = p_user_id AND p_ts >= c_ts AND p_ts <= c_ts + interval 1 hour"),
-          "full_outer").count()
-        require(n == expected,
-          s"stream_full_outer_join sink has $n real rows, batch full join expects " +
-            s"$expected — a side's unmatched rows did not flush or pairs duplicated")
-        Files.createFile(marker)
-        ()
+  private def fullOuterJoinSinkDir(s: SparkSession, d: String): String =
+    replay(s, d, "events", "stream_fojoin") { root =>
+      StreamingSync.intervalJoinStreamOuter(
+        clickSide(replayed(s, root.resolve("clicks"),
+          Seq(eventsOfType(s, d, "click"), joinSentinel(s, -1L)))),
+        "c_ts",
+        purchaseSide(replayed(s, root.resolve("purchases"),
+          Seq(eventsOfType(s, d, "purchase"), joinSentinel(s, -2L)))),
+        "p_ts", withinHour, delay = "40 days", joinType = "full_outer")
+        // unmatched purchases have a null left side — surface ONE
+        // user_id column so the driven query needn't know which side
+        // produced the row
+        .select(coalesce(col("user_id"), col("p_user_id")).as("user_id"),
+          col("click_id"), col("purchase_id"))
+    } { sunk =>
+      // each side's sentinel stays buffered in ITS OWN state (the
+      // watermark it pushes never passes its own eviction time), so only
+      // real rows flush — mirror the batch count over real events
+      val n = sunk.filter(col("user_id") >= 0).count()
+      val expected = batchJoinCount(s, d, "full_outer")
+      require(n == expected,
+        s"stream_full_outer_join sink has $n real rows, batch full join expects " +
+          s"$expected — a side's unmatched rows did not flush or pairs duplicated")
     }
-    sink.toString
+
+  /** The versioned-state sink shared by the upsert and matview replays
+    * (their own sink shape, so not a [[replay]]): `batches` land as for a
+    * replay, and each non-empty micro-batch is `fold`ed via foreachBatch
+    * into the current state (None before the first), written as a NEW
+    * state version, and a `_CURRENT` pointer file is atomically repointed
+    * at it (write-temp + ATOMIC_MOVE). The reader of the pointer always
+    * sees a complete version; a killed batch leaves the previous version
+    * current. `guard` runs on the final version before `_DONE`; returns
+    * that version's path.
+    */
+  private def versionedReplay(s: SparkSession, d: String, name: String,
+      batches: => Seq[DataFrame])(fold: (Option[DataFrame], DataFrame) => DataFrame)(
+      guard: DataFrame => Unit): String = {
+    val root = Fixtures.root(d, "events", name)
+    val ptr = root.resolve("_CURRENT")
+    Fixtures.ensure(root) {
+      val q = replayed(s, root.resolve("landing"), batches).writeStream
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", root.resolve("ckpt").toString)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (!batch.isEmpty) {
+            val current =
+              if (Files.exists(ptr)) Some(s.read.parquet(Files.readString(ptr))) else None
+            val out = root.resolve("state").resolve(s"v$batchId").toString
+            fold(current, batch).coalesce(1).write.mode("overwrite").parquet(out)
+            val tmp = root.resolve("_CURRENT.tmp")
+            Files.writeString(tmp, out)
+            Files.move(tmp, ptr,
+              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            ()
+          }
+        }
+        .start()
+      awaitOrFail(q, 180000, s"$name replay")
+      guard(s.read.parquet(Files.readString(ptr)))
+      Files.createFile(root.resolve("_DONE"))
+      ()
+    }
+    Files.readString(ptr)
+  }
+
+  /** Events as the versioned-state replays land them, cut by `ts` at `cuts`. */
+  private def eventsCutAt(s: SparkSession, d: String, cuts: String*): Seq[DataFrame] = {
+    val ev = Tables.events(s, d)
+      .select(col("event_id"), col("user_id"), col("ts"), col("value"))
+    val edges = cuts.map(c => lit(c).cast("timestamp"))
+    val from = lit(true) +: edges.map(col("ts") >= _)
+    val until = edges.map(col("ts") < _) :+ lit(true)
+    from.zip(until).map { case (a, b) => ev.filter(a && b) }
   }
 
   /** Streaming UPSERT sink (update-mode semantics on an append-only
@@ -1730,72 +1106,18 @@ object StreamSync {
     * rows. Oracle: the batch latest-event-per-user over the raw table.
     */
   private def upsertSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_upsert_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val ptr = root.resolve("_CURRENT")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        def land(pred: org.apache.spark.sql.Column, name: String): Path = {
-          val ev = Tables.events(s, d).filter(pred)
-            .select(to_json(struct(col("event_id"), col("user_id"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"),
-              col("value"))).as("j"))
-          landOne(ev, root, landing, name)
-        }
-        val mid = lit("2024-01-16").cast("timestamp")
-        val b1 = land(col("ts") < mid, "batch1.jsonl")
-        val b2 = land(col("ts") >= mid, "batch2.jsonl")
-        mtimeAfter(b2, b1, 4000L)
-
-        val lineSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType)))
-        val stream = StreamingSync.readJsonlStream(s, s"$landing/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-        val q = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            if (!batch.isEmpty) {
-              val latest = graft.sync.Upsert.latestByKey(
-                batch, Seq("user_id"), "ts", Seq("event_id"))
-              val merged =
-                if (Files.exists(ptr))
-                  graft.sync.Upsert.latestByKey(
-                    s.read.parquet(Files.readString(ptr)).unionByName(latest),
-                    Seq("user_id"), "ts", Seq("event_id"))
-                else latest
-              val out = root.resolve("state").resolve(s"v$batchId").toString
-              merged.coalesce(1).write.mode("overwrite").parquet(out)
-              val tmp = root.resolve("_CURRENT.tmp")
-              Files.writeString(tmp, out)
-              Files.move(tmp, ptr,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              ()
-            }
-          }
-          .start()
-        awaitOrFail(q, 180000, "stream_upsert replay")
-
-        val n = s.read.parquet(Files.readString(ptr)).count()
-        val expected = Tables.events(s, d)
-          .select(countDistinct(col("user_id"))).head().getLong(0)
-        require(n == expected,
-          s"stream_upsert state has $n rows, expected one per user ($expected) — " +
-            "merge dropped or duplicated keys")
-        Files.createFile(marker)
-        ()
+    def latest(df: DataFrame) =
+      graft.sync.Upsert.latestByKey(df, Seq("user_id"), "ts", Seq("event_id"))
+    versionedReplay(s, d, "stream_upsert", eventsCutAt(s, d, "2024-01-16")) {
+      (current, batch) => current.fold(latest(batch))(c => latest(c.unionByName(latest(batch))))
+    } { state =>
+      val n = state.count()
+      val expected = Tables.events(s, d)
+        .select(countDistinct(col("user_id"))).head().getLong(0)
+      require(n == expected,
+        s"stream_upsert state has $n rows, expected one per user ($expected) — " +
+          "merge dropped or duplicated keys")
     }
-    Files.readString(ptr)
   }
 
   /** Streaming incremental matview: three micro-batches fold through
@@ -1807,73 +1129,17 @@ object StreamSync {
     * aggregate bit-for-bit (the oracle).
     */
   private def matviewSinkDir(s: SparkSession, d: String): String = {
-    val srcFile = new java.io.File(s"$d/events.parquet")
-    val root = Paths.get(
-      s"/tmp/graft_fixtures/stream_matview_${srcFile.lastModified}_${srcFile.length}")
-    val marker = root.resolve("_DONE")
-    val ptr = root.resolve("_CURRENT")
-    ensureFixture(root) {
-        val landing = Files.createDirectories(root.resolve("landing"))
-        def land(pred: org.apache.spark.sql.Column, name: String): Path = {
-          val ev = Tables.events(s, d).filter(pred)
-            .select(to_json(struct(col("event_id"), col("user_id"),
-              date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("ts"),
-              col("value"))).as("j"))
-          landOne(ev, root, landing, name)
-        }
-        val t1 = lit("2024-01-11").cast("timestamp")
-        val t2 = lit("2024-01-21").cast("timestamp")
-        val b1 = land(col("ts") < t1, "batch1.jsonl")
-        val b2 = land(col("ts") >= t1 && col("ts") < t2, "batch2.jsonl")
-        val b3 = land(col("ts") >= t2, "batch3.jsonl")
-        mtimeAfter(b2, b1, 4000L)
-        mtimeAfter(b3, b2, 8000L)
-
-        val lineSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("event_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("user_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("ts",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType)))
-        val stream = StreamingSync.readJsonlStream(s, s"$landing/*.jsonl",
-          lineSchema, maxFilesPerTrigger = 1)
-        val q = stream.writeStream
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", root.resolve("ckpt").toString)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            if (!batch.isEmpty) {
-              val m = graft.operators.Matview
-              val state =
-                if (Files.exists(ptr))
-                  m.refresh(s.read.parquet(Files.readString(ptr)), batch,
-                    Seq("user_id"), "value")
-                else m.partial(batch, Seq("user_id"), "value")
-              val out = root.resolve("state").resolve(s"v$batchId").toString
-              state.coalesce(1).write.mode("overwrite").parquet(out)
-              val tmp = root.resolve("_CURRENT.tmp")
-              Files.writeString(tmp, out)
-              Files.move(tmp, ptr,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              ()
-            }
-          }
-          .start()
-        awaitOrFail(q, 180000, "stream_matview replay")
-
-        val totalN = s.read.parquet(Files.readString(ptr))
-          .agg(sum(col("n")).cast("long")).head().getLong(0)
-        val expected = Tables.events(s, d).count()
-        require(totalN == expected,
-          s"stream_matview state counts $totalN rows, expected $expected — " +
-            "a refresh dropped or double-counted a batch")
-        Files.createFile(marker)
-        ()
+    val m = graft.operators.Matview
+    versionedReplay(s, d, "stream_matview", eventsCutAt(s, d, "2024-01-11", "2024-01-21")) {
+      (current, batch) => current.fold(m.partial(batch, Seq("user_id"), "value"))(
+        m.refresh(_, batch, Seq("user_id"), "value"))
+    } { state =>
+      val totalN = state.agg(sum(col("n")).cast("long")).head().getLong(0)
+      val expected = Tables.events(s, d).count()
+      require(totalN == expected,
+        s"stream_matview state counts $totalN rows, expected $expected — " +
+          "a refresh dropped or double-counted a batch")
     }
-    Files.readString(ptr)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

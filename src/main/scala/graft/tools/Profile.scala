@@ -4,17 +4,20 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
-/** Per-query cost split: wall seconds vs summed executor task time vs
-  * shuffle bytes vs job/stage counts. Separates driver-bound queries
-  * (planning/pin churn: wall >> task_sum/cores) from executor-bound ones
-  * (task_sum ≈ wall·cores) — the first decision the optimization guide's
-  * §1 loop needs, with no Spark UI in the sandbox.
+/** Per-query cost split in one session: planning time (analyze + optimize,
+  * forced via `executedPlan`), the first (cold: codegen compile, JIT,
+  * first-touch I/O) and two warm executions, and for the last warm run
+  * its summed executor task time, shuffle bytes, spill and job/stage/task
+  * counts. Wall >> task_s/cores marks a driver-bound query (planning, pin
+  * churn), task_s ≈ wall·cores an executor-bound one — the first decision
+  * the optimization guide's §1 loop needs, with no Spark UI in the
+  * sandbox; cold − warm is the query's cold-start tax (SCALE.md
+  * §"Round-10: cold-start tax").
   *
   *   sbt "runMain graft.tools.Profile [sfDir] name [name...]"
   *
-  * Each query runs twice; the SECOND run's numbers are reported (steady
-  * state, JIT+fixtures absorbed). Metrics accumulate across ALL jobs the
-  * query triggers (eager checkpoints included), like PlanAudit r17.
+  * Counters accumulate across ALL jobs the run triggers (eager
+  * checkpoints included), like PlanAudit r17.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -45,20 +48,24 @@ object Profile {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = { stageCount.incrementAndGet(); () }
     })
 
-    println(f"${"query"}%-26s ${"wall_s"}%7s ${"task_s"}%8s ${"par"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"shW_MB"}%7s ${"shR_MB"}%7s ${"spill_MB"}%8s")
+    def sec(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    }
+    println(f"${"query"}%-26s ${"plan_s"}%6s ${"cold_s"}%6s ${"warm_s"}%6s ${"warm2_s"}%7s ${"task_s"}%8s ${"par"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"shW_MB"}%7s ${"shR_MB"}%7s ${"spill_MB"}%8s")
     names.foreach { n =>
-      val fn = graft.SparkEntry.queries(n)
-      fn(spark, sfDir).count() // warmup run: JIT, fixtures, codegen cache
+      spark.sparkContext.setJobDescription(s"profile:$n")
+      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      val plan = sec { df.queryExecution.executedPlan; () }
+      val cold = sec { df.count(); () }
+      val warm = sec { df.count(); () }
+      // listener bus is async; let the counters settle before the reset
+      Thread.sleep(400)
       Seq(taskMs, shufWrite, shufRead, spill).foreach(_.set(0))
       Seq(taskCount, jobCount, stageCount).foreach(_.set(0))
-      spark.sparkContext.setJobDescription(s"profile:$n")
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async; let the counters settle
+      val warm2 = sec { df.count(); () }
       Thread.sleep(400)
       val ts = taskMs.get() / 1e3
-      println(f"$n%-26s $wall%7.2f $ts%8.2f ${ts / wall}%5.1f ${jobCount.get()}%5d ${stageCount.get()}%6d ${taskCount.get()}%6d ${shufWrite.get() / 1e6}%7.1f ${shufRead.get() / 1e6}%7.1f ${spill.get() / 1e6}%8.1f")
+      println(f"$n%-26s $plan%6.2f $cold%6.2f $warm%6.2f $warm2%7.2f $ts%8.2f ${ts / warm2}%5.1f ${jobCount.get()}%5d ${stageCount.get()}%6d ${taskCount.get()}%6d ${shufWrite.get() / 1e6}%7.1f ${shufRead.get() / 1e6}%7.1f ${spill.get() / 1e6}%8.1f")
     }
     spark.stop()
   }

@@ -11,6 +11,8 @@ cd "$(dirname "$0")/.."
 
 echo "== seal gate 1/2: Verify + oracle (sf0.01, full inventory) =="
 rm -rf /tmp/seal_verify
+# fixtures are keyed by the source parquet, not by the code that built them
+rm -rf /tmp/graft_fixtures
 SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/seal_verify" \
   > /tmp/seal_verify.log 2>&1 \
   || { tail -20 /tmp/seal_verify.log; echo "SEAL GATE FAIL: Verify errored"; exit 1; }
