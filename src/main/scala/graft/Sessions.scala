@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory. Every main, tool and test session is
   * built here, so they share one policy: `local[cores]`, one shuffle
-  * partition per core, UTC session time, no UI. AQE stays at Spark's
+  * partition per core, UTC session time, no UI, and parquet INT64
+  * TIMESTAMP(NANOS) columns read as ns-epoch longs
+  * (`spark.sql.legacy.parquet.nanosAsLong`; Spark rejects them otherwise,
+  * and the flag is inert for every other file). AQE stays at Spark's
   * default (on), which `SessionsSpec` pins. Logging starts at WARN from
   * the classpath `log4j2.properties`, so the context's start-up INFO
   * lines never print; `create` then sets the session's own level.
@@ -26,6 +29,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", n.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
     s

@@ -12,8 +12,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   *  - INT64 TIMESTAMP(NANOS): Spark's parquet reader rejects it outright
   *    ([PARQUET_TYPE_ILLEGAL]), so we read with
-  *    `spark.sql.legacy.parquet.nanosAsLong=true` (set up-front — it is
-  *    inert for non-nanos files) and rebuild TimestampType via integral
+  *    `spark.sql.legacy.parquet.nanosAsLong=true` (the [[Sessions]] policy;
+  *    set here too for a session built elsewhere — it is inert for
+  *    non-nanos files) and rebuild TimestampType via integral
   *    `DIV 1000` (ns → µs truncation, matching DuckDB's narrowing).
   *    Integer division matters: ns-epoch values (~1.7e18) exceed 2^53 and
   *    would lose precision through a double.

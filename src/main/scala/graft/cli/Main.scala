@@ -237,7 +237,7 @@ object Main {
     }
   }
 
-  private def sync(
+  private[cli] def sync(
       spark: SparkSession,
       source: AirbyteSource,
       config: JsonNode,

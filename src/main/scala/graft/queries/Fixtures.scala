@@ -35,7 +35,11 @@ object Fixtures {
 
   /** Run `build` exactly once per `root` across all local JVMs; `build`
     * must create the `_DONE` marker itself after verifying its output.
-    * Losers of the lock race see the winner's marker and return.
+    * Losers of the lock race see the winner's marker and return. Once the
+    * marker exists the lockfile is deleted, still under the lock: a later
+    * caller returns at the marker check before it opens the lockfile, and
+    * one already waiting on the deleted file finds the marker once it
+    * holds the lock.
     */
   def ensure(root: Path)(build: => Unit): Unit = {
     val marker = root.resolve("_DONE")
@@ -48,8 +52,10 @@ object Fixtures {
         java.nio.file.StandardOpenOption.WRITE)
       try {
         val lock = ch.lock()
-        try if (!Files.exists(marker)) { deleteRecursively(root); build }
-        finally lock.release()
+        try {
+          if (!Files.exists(marker)) { deleteRecursively(root); build }
+          if (Files.exists(marker)) Files.deleteIfExists(lockPath)
+        } finally lock.release()
       } finally ch.close()
     }
   }

@@ -56,7 +56,8 @@ object StreamSync {
     * columns (timestamps at full µs precision), one file per frame, and
     * return the glob that reads them. Each frame is staged as ONE text
     * part-file beside `dir` (never inside it, where the glob would pick
-    * the staging up as an extra batch) and moved in. Micro-batch order
+    * the staging up as an extra batch), moved in, and its staging
+    * directory deleted. Micro-batch order
     * under maxFilesPerTrigger = 1 is the files' mtime order, so the files
     * get strictly increasing mtimes taken from the first file (never the
     * wall clock), which survives a slow stage step.
@@ -72,7 +73,9 @@ object StreamSync {
       val part =
         try listing.filter(_.toString.endsWith(".txt")).findFirst().orElseThrow()
         finally listing.close()
-      Files.move(part, dir.resolve(s"batch${i + 1}.jsonl"))
+      val landed = Files.move(part, dir.resolve(s"batch${i + 1}.jsonl"))
+      Fixtures.deleteRecursively(staged)
+      landed
     }
     val t0 = Files.getLastModifiedTime(files.head).toMillis
     files.zipWithIndex.foreach { case (f, i) =>

@@ -85,12 +85,10 @@ final class FileNativeSource(streams: Seq[FileNativeSource.FileStream]) extends 
 
   private def reader(spark: SparkSession, s: FileNativeSource.FileStream): DataFrame =
     s.format match {
-      case "parquet" =>
-        // Tolerate INT64 TIMESTAMP(NANOS) columns (Spark rejects them by
-        // default): surface them as raw ns-epoch longs, which serialize
-        // losslessly through the Singer path.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.read.options(s.options).parquet(s.path)
+      // INT64 TIMESTAMP(NANOS) columns read as raw ns-epoch longs (the
+      // graft.Sessions policy), which serialize losslessly through the
+      // Singer path.
+      case "parquet" => spark.read.options(s.options).parquet(s.path)
       case "csv" =>
         // defaults FIRST so user options override them (header=false works)
         spark.read.option("header", "true").option("inferSchema", "true")

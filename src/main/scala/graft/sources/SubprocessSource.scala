@@ -2,6 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import graft.catalog.{AirbyteCatalog, ConfiguredCatalog}
 import graft.protocol.{AirbyteMessage, AirbyteMessageType}
 import graft.state.StateStore
@@ -25,7 +26,7 @@ import scala.util.Using
   * and applies its messages in the order the connector wrote them: a
   * RECORD's `data` bytes are appended to its stream's spill file as the
   * connector sent them (never parsed into a tree or re-serialized; a `data`
-  * that is not a JSON object is spilled as `null`), STATE folds into a
+  * that is not a JSON object is spilled as `{}`), STATE folds into a
   * [[StateStore]], and a TRACE ERROR fails fast (reference
   * `tap.py:649-657`), killing the child before any later message is
   * applied; any failure kills the child (kill-on-early-exit, reference
@@ -39,6 +40,16 @@ import scala.util.Using
   * Each becomes a typed DataFrame through Spark's JSON file source with the
   * discovered schema, which hands Jackson's byte parser each line's bytes,
   * so downstream transforms are columnar and distributed.
+  *
+  * Passthrough: the frame `read` returns carries its spill file's path in
+  * the [[SubprocessSource.SpillPath]] tag on its root logical plan. Any
+  * transform (a stream map, flattening, a field drop, `orderBy`,
+  * `coalesce`) builds a new root without the tag, so the tag is present
+  * exactly when the frame is the stream as the connector sent it.
+  * [[graft.sync.SingerSink.recordLines]] renders a tagged frame from the
+  * spill text itself: each RECORD carries the connector's `data` bytes
+  * unchanged, as the reference forwards them (`tap.py:819-884`), even
+  * where a value does not fit its declared type.
   *
   * Scale note: a single connector process is inherently a single producer —
   * same as the reference. The distributed path for many connectors or
@@ -105,8 +116,9 @@ final class SubprocessSource(
           for (s <- r.stream; i <- index.get(s) if r.hasData) {
             val out = spillFor(i)
             // The JSON source would read a top-level array as one row per
-            // element (none for `[]`): `null` keeps one all-null row.
-            if (r.dataIsObject) r.writeData(out) else out.write(NullBytes)
+            // element (none for `[]`): `{}` keeps one all-null row, and
+            // passthrough renders it as the typed path renders that row.
+            if (r.dataIsObject) r.writeData(out) else out.write(EmptyObject)
             out.write('\n')
           }
         case msg: AirbyteMessage.Tree if msg.msgType == AirbyteMessageType.STATE =>
@@ -125,7 +137,12 @@ final class SubprocessSource(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], entry.stream.sparkSchema)
         // Typed parse with the DISCOVERED schema (not inference): mirrors
         // the reference trusting connector discovery (tap.py:909-913).
-        else spark.read.schema(entry.stream.sparkSchema).json(spillFile(workDir, i).toString)
+        else {
+          val spill = spillFile(workDir, i).toString
+          val typed = spark.read.schema(entry.stream.sparkSchema).json(spill)
+          typed.queryExecution.logical.setTagValue(SpillPath, spill)
+          typed
+        }
       entry.stream.name -> df
     }.toMap
   }
@@ -162,5 +179,11 @@ object SubprocessSource {
     */
   def spillFile(workDir: Path, i: Int): Path = workDir.resolve("spill").resolve(s"s$i.jsonl")
 
-  private val NullBytes = "null".getBytes(StandardCharsets.US_ASCII)
+  /** On the root logical plan of a frame [[SubprocessSource.read]]
+    * returned: the path of the spill file it reads, one `data` object per
+    * line. A transformed frame has a new root, which does not carry it.
+    */
+  val SpillPath: TreeNodeTag[String] = TreeNodeTag[String]("graft.spillPath")
+
+  private val EmptyObject = "{}".getBytes(StandardCharsets.US_ASCII)
 }

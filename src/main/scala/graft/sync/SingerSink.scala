@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.schema.JsonSchemaConverter
+import graft.sources.SubprocessSource
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
@@ -18,19 +19,34 @@ import scala.concurrent.duration.Duration
   * reference's emitted shape (reference `tap_airbyte/tap.py:62-77`,
   * `tap.py:956-965`; fixture `tests/fixtures/KPHX.singer`).
   *
-  * Scalar coercion policy re-expresses the reference's `default()`
-  * serializer fallback (`tap.py:48-59`): datetime/date → ISO-8601 string,
-  * Decimal → double, bytes → UTF-8 string, everything else stringified.
-  * Implemented as Catalyst casts so serialization is distributed and
-  * codegen'd: each RECORD line — envelope `concat` around `to_json` — is
-  * built on the executors as UTF-8 bytes, and the driver only cuts the
-  * returned byte blocks into lines.
+  * RECORDs take one of two paths, and every line is built on the
+  * executors as UTF-8 bytes, so the driver only cuts the returned byte
+  * blocks into lines:
+  *  - passthrough: a connector stream that reaches the sink untransformed
+  *    (no stream map, no flattening, no field drop, no reorder; see
+  *    [[graft.sources.SubprocessSource.SpillPath]]) renders each RECORD as
+  *    the envelope `concat` around the spilled `data` bytes. Values are
+  *    forwarded as the connector sent them, as in the reference
+  *    (`tap.py:819-884`), even when they do not fit the declared type, and
+  *    explicit nulls and undeclared fields are kept.
+  *  - typed: every other frame renders through [[coerce]] and `to_json`.
+  *    The scalar coercion policy re-expresses the reference's `default()`
+  *    serializer fallback (`tap.py:48-59`): datetime/date → ISO-8601
+  *    string, Decimal → double, bytes → UTF-8 string, everything else
+  *    stringified, as Catalyst casts so serialization is distributed and
+  *    codegen'd. A NaN or infinite top-level double or float fails the
+  *    job: JSON has no number for it.
   */
 object SingerSink {
   private val mapper = new ObjectMapper()
 
-  /** Coerce a DataFrame to Singer-serializable columns (tap.py:48-59 policy). */
-  def coerce(df: DataFrame): DataFrame = {
+  /** Coerce `stream`'s frame to Singer-serializable columns (tap.py:48-59
+    * policy). A NaN or infinite double or float column value raises an
+    * error naming the stream and the column when the row is computed:
+    * `to_json` would render it as a JSON string, which the stream's own
+    * SCHEMA line forbids.
+    */
+  def coerce(stream: String, df: DataFrame): DataFrame = {
     val cols = df.schema.fields.map { f =>
       val c = col(s"`${f.name}`")
       val coerced = f.dataType match {
@@ -39,6 +55,10 @@ object SingerSink {
         case DateType       => date_format(c, "yyyy-MM-dd")
         case _: DecimalType => c.cast(DoubleType)
         case BinaryType     => c.cast(StringType) // bytes → UTF-8 string
+        case DoubleType | FloatType =>
+          when(isnan(c) || abs(c) === Double.PositiveInfinity, raise_error(lit(
+            s"stream $stream: column ${f.name} holds a non-finite number, which JSON cannot carry")))
+            .otherwise(c)
         case _              => c
       }
       coerced.as(f.name)
@@ -50,7 +70,7 @@ object SingerSink {
   def schemaMessage(stream: String, df: DataFrame, keyProperties: Seq[String]): String =
     graft.protocol.SingerMessage.Schema(
       stream,
-      JsonSchemaConverter.toJsonSchemaNode(coerce(df).schema),
+      JsonSchemaConverter.toJsonSchemaNode(coerce(stream, df).schema),
       keyProperties).toJson
 
   /** How every line of [[recordLines]] starts, and no SCHEMA or STATE
@@ -65,18 +85,26 @@ object SingerSink {
   final val TimeExtracted = "1970-01-01T00:00:00.000000Z"
 
   /** RECORD lines as a Dataset[String], built on the executors; [[emit]]
-    * drains it.
+    * drains it. A frame tagged with its spill file
+    * ([[graft.sources.SubprocessSource.SpillPath]]) renders from the spill
+    * text, each `record` being the connector's `data` bytes unchanged (no
+    * `from_json`, no [[coerce]], no `to_json`); any other frame renders
+    * typed, through [[coerce]] and `to_json`.
     */
   def recordLines(stream: String, df: DataFrame, timeExtracted: String): Dataset[String] = {
     import df.sparkSession.implicits._
-    val c = coerce(df)
+    val (rows, record) = df.queryExecution.logical.getTagValue(SubprocessSource.SpillPath) match {
+      case Some(spill) => (df.sparkSession.read.text(spill), col("value"))
+      case None =>
+        val c = coerce(stream, df)
+        (c, to_json(struct(c.columns.map(n => col(s"`$n`")).toSeq: _*)))
+    }
     // Jackson quotes the stream name, as it does in the SCHEMA line
     val quoted = mapper.writeValueAsString(stream)
-    c.select(
+    rows.select(
       concat(
-        lit(RecordPrefix + ",\"stream\":" + quoted + ","),
-        lit(""""record":"""),
-        to_json(struct(c.columns.map(n => col(s"`$n`")).toSeq: _*)),
+        lit(RecordPrefix + ",\"stream\":" + quoted + ",\"record\":"),
+        record,
         lit(s""","time_extracted":"$timeExtracted"}""")).as("line"))
       .as[String]
   }
@@ -97,8 +125,9 @@ object SingerSink {
     * strictly in partition order — the order `collect()` gives. A job
     * returns its partition as one block of UTF-8 bytes, newline-ended
     * lines, which the driver cuts into lines for `out`; no RECORD line holds
-    * a raw newline (the stream name is Jackson-quoted and `to_json` escapes
-    * control characters). The driver therefore holds at most
+    * a raw newline (the stream name is Jackson-quoted, `to_json` escapes
+    * control characters, and a spilled `data` comes from one protocol
+    * line). The driver therefore holds at most
     * `defaultParallelism` partition blocks at a time, each within
     * `spark.driver.maxResultSize`. When `out` throws or a job fails, every
     * job still outstanding is cancelled before `emit` returns or rethrows.

@@ -18,6 +18,10 @@ class SessionsSpec extends SparkSpec {
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
   }
 
+  test("parquet INT64 TIMESTAMP(NANOS) columns read as longs, by session policy") {
+    assert(spark.sparkContext.getConf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
   test("AQE is on, by Spark's default") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }

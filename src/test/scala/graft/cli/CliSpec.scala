@@ -118,4 +118,24 @@ class CliSpec extends SparkSpec {
     assert(lines.count(l => !l.startsWith("{\"type\":\"RECORD\"") && l.contains("\"RECORD\"")) == 4)
     assert(counts == Seq("events" -> 2L, "nation" -> 1L))
   }
+
+  test("sync: a connector stream's Singer stdout keeps an explicit null") {
+    val dir = java.nio.file.Files.createTempDirectory("cli_null")
+    val script = dir.resolve("connector.sh")
+    java.nio.file.Files.writeString(script,
+      """#!/bin/sh
+        |case "$1" in
+        |  discover) echo '{"type":"CATALOG","catalog":{"streams":[{"name":"s","json_schema":{"type":"object","properties":{"id":{"type":["null","integer"]},"v":{"type":["null","string"]}}},"supported_sync_modes":["full_refresh"]}]}}' ;;
+        |  read) echo '{"type":"RECORD","record":{"stream":"s","data":{"id":1,"v":null}}}' ;;
+        |esac
+        |""".stripMargin)
+    val cfg = m.readTree(s"""{"source":{"type":"subprocess","command":["/bin/sh","$script"]}}""")
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(stdout, true, "UTF-8")) {
+      Main.sync(spark, Main.buildSource(cfg), cfg, Map.empty)
+    }
+    val records = stdout.toString("UTF-8").split("\n").filter(_.startsWith(graft.sync.SingerSink.RecordPrefix))
+    assert(records.toSeq == Seq(graft.sync.SingerSink.RecordPrefix +
+      s""","stream":"s","record":{"id":1,"v":null},"time_extracted":"${graft.sync.SingerSink.TimeExtracted}"}"""))
+  }
 }

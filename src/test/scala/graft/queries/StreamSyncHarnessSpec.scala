@@ -13,7 +13,8 @@ import graft.streaming.StreamingSync
 
 /** The `q_stream_*` fixture harness: `StreamSync.land` orders micro-batches
   * by landing order, and `StreamSync.replay` writes `_DONE` only after its
-  * guard passes, so a refused sink is rebuilt rather than served.
+  * guard passes, so a refused sink is rebuilt rather than served; a built
+  * fixture leaves no staging directory and no lockfile behind.
   */
 class StreamSyncHarnessSpec extends SparkSpec {
 
@@ -67,6 +68,12 @@ class StreamSyncHarnessSpec extends SparkSpec {
         assert(spark.read.parquet(sink).collect().map(_.getLong(0)).toSeq == Seq(7L))
         assert(run(accept = true) == sink)
         assert(builds == 2, "a marked sink was rebuilt")
+        val walk = Files.walk(root)
+        val staged =
+          try walk.iterator.asScala.filter(_.getFileName.toString.startsWith("staged_")).toList
+          finally walk.close()
+        assert(staged.isEmpty, s"staging left behind: $staged")
+        assert(!Files.exists(root.resolveSibling(s"${root.getFileName}.lock")), "lockfile left behind")
       } finally {
         Fixtures.deleteRecursively(root)
         Files.deleteIfExists(root.resolveSibling(s"${root.getFileName}.lock"))

@@ -4,7 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.SparkSpec
 import graft.state.StateStore
-import graft.sync.{SingerSink, SyncEngine}
+import graft.sync.{SingerSink, StreamMaps, SyncEngine}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
@@ -376,11 +376,80 @@ class MockConnectorE2eSpec extends SparkSpec with TimeLimits {
   test("RECORD data that is null, a scalar, [] or an array of objects gives one all-null row each") {
     val shapes = Seq("null", "42", "\"text\"", "true", "[]", """[{"id":7},{"id":8}]""")
     val lines = rec("s", """{"id":1,"v":"a"}""") +: shapes.map(d => rec("s", d)) :+ rec("s", """{"id":2}""")
-    val rows = readAll(rawSource(Files.createTempDirectory("datashapes"), Seq("s"), idProps, lf(lines)),
-      new StateStore())("s").collect()
+    val df = readAll(rawSource(Files.createTempDirectory("datashapes"), Seq("s"), idProps, lf(lines)),
+      new StateStore())("s")
+    val rows = df.collect()
     assert(rows.length == shapes.size + 2)
     assert(rows.head.getLong(0) == 1L && rows.last.getLong(0) == 2L)
     rows.slice(1, shapes.size + 1).foreach(r => assert(r.isNullAt(0) && r.isNullAt(1), r))
+    // passthrough renders each of them as the empty object the typed path renders
+    assert(recordsOf(df) == ("""{"id":1,"v":"a"}""" +: shapes.map(_ => "{}") :+ """{"id":2}""").map(envelope))
+  }
+
+  // ---- passthrough: an untransformed stream's RECORDs are the spilled bytes ----
+
+  /** A RECORD line of stream `s` with `data` exactly as written. */
+  private def rawRec(data: String): String = s"""{"type":"RECORD","record":{"stream":"s","data":$data}}"""
+
+  /** The RECORD line the sink writes for stream `s` with `record` text. */
+  private def envelope(record: String): String =
+    SingerSink.RecordPrefix + ""","stream":"s","record":""" + record +
+      s""","time_extracted":"${SingerSink.TimeExtracted}"}"""
+
+  /** The RECORD lines `emit` writes for stream `s` of `df`. */
+  private def recordsOf(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val lines = ArrayBuffer.empty[String]
+    assert(SingerSink.emit("s", df, Seq.empty, new StateStore(), lines += _))
+    lines.filter(_.startsWith(SingerSink.RecordPrefix)).toSeq
+  }
+
+  /** Values that do not fit their declared type, an explicit null and an
+    * undeclared field: each loses its field on the typed path.
+    */
+  private val misfits = Seq(
+    """{"id":1,"i":1.5}""", """{"id":2,"i":"42"}""", """{"id":3,"i":12345678901234567890}""",
+    """{"id":4,"b":"yes"}""", """{"id":5,"b":1}""", """{"id":6,"n":"2.5"}""", """{"id":7,"n":1e400}""",
+    """{"id":8,"i":null}""", """{"id":9,"undeclared":{"x":[1,null]}}""")
+  private val misfitProps =
+    """{"id":{"type":["null","integer"]},"i":{"type":["null","integer"]},"b":{"type":["null","boolean"]},""" +
+      """"n":{"type":["null","number"]},"o":{"type":["null","object"],"properties":{"k":{"type":["null","string"]}}}}"""
+
+  private def misfitSource(lines: Seq[String]): SubprocessSource =
+    rawSource(Files.createTempDirectory("passthrough"), Seq("s"), misfitProps, lf(lines.map(rawRec)))
+
+  test("passthrough: each RECORD's record is the connector's data, byte for byte") {
+    val df = new SyncEngine(misfitSource(misfits)).sync(spark, _ => true)("s")
+    assert(recordsOf(df) == misfits.map(envelope))
+  }
+
+  test("passthrough and typed renders of clean lines are equal line for line") {
+    // every field present, in schema order, each value as to_json renders it
+    val clean = (1 to 40).map(i => s"""{"id":${i * 7},"i":$i,"b":${i % 2 == 0},"n":$i.25,"o":{"k":"k$i"}}""")
+    val df = new SyncEngine(misfitSource(clean)).sync(spark, _ => true)("s")
+    val passthrough = recordsOf(df)
+    assert(passthrough == clean.map(envelope))
+    assert(recordsOf(df.select("*")) == passthrough)
+  }
+
+  test("a stream map, flattening, orderBy and coalesce(1) each take the typed path") {
+    val data = Seq("""{"id":1,"i":1.5,"o":{"k":"v"}}""", """{"id":2,"i":null,"o":{"k":"w"}}""")
+    def synced(maps: Map[String, StreamMaps.StreamMap] = Map.empty, flattening: Option[Int] = None) =
+      new SyncEngine(misfitSource(data), maps, flattening).sync(spark, _ => true)("s")
+    val typed = Seq("""{"id":1,"o":{"k":"v"}}""", """{"id":2,"o":{"k":"w"}}""").map(envelope)
+    val raw = synced()
+    assert(recordsOf(raw) == data.map(envelope))
+    assert(recordsOf(synced(Map("s" -> StreamMaps.StreamMap(filter = Some("id > 0"))))) == typed)
+    assert(recordsOf(synced(flattening = Some(1))) ==
+      Seq("""{"id":1,"o__k":"v"}""", """{"id":2,"o__k":"w"}""").map(envelope))
+    assert(recordsOf(raw.orderBy("id")) == typed)
+    assert(recordsOf(raw.coalesce(1)) == typed)
+  }
+
+  test("a mapped stream holding 1e400 makes emit throw, naming the stream and the column") {
+    val df = new SyncEngine(misfitSource(Seq("""{"id":7,"n":1e400}""")),
+      Map("s" -> StreamMaps.StreamMap(filter = Some("id > 0")))).sync(spark, _ => true)("s")
+    val e = intercept[RuntimeException](recordsOf(df))
+    assert(e.getMessage.contains("stream s: column n holds a non-finite number"), e.getMessage)
   }
 
   test("JSON-source rows equal textFile + from_json rows of the raw data text") {

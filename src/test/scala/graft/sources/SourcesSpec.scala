@@ -134,4 +134,18 @@ class SourcesSpec extends SparkSpec {
     val e = intercept[RuntimeException](src.read(spark, conf, new StateStore()))
     assert(e.getMessage.contains("boom"))
   }
+
+  test("a parquet FileNativeSource read leaves the session conf unchanged") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = Files.createTempDirectory("fileconf")
+    spark.range(3).write.parquet(dir.resolve("t.parquet").toString)
+    val src = new FileNativeSource(Seq(FileNativeSource.FileStream("t", "parquet", dir.resolve("t.parquet").toString)))
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val conf = ConfiguredCatalog.configure(src.discover(spark), _ => true)
+      assert(src.read(spark, conf, new StateStore())("t").count() == 3L)
+      assert(spark.conf.get(key) == "false")
+    } finally spark.conf.set(key, saved)
+  }
 }

@@ -21,7 +21,7 @@ class SingerSinkSpec extends SparkSpec {
       lit("2024-01-01 12:34:56").cast("timestamp").as("ts"),
       lit(BigDecimal("1.50")).as("d"),
       lit("abc").cast("binary").as("b"))
-    val out = SingerSink.coerce(df).head()
+    val out = SingerSink.coerce("s", df).head()
     assert(out.getString(0).startsWith("2024-01-01T12:34:56"))
     assert(out.getDouble(1) == 1.5)
     assert(out.getString(2) == "abc")
@@ -178,6 +178,18 @@ class SingerSinkSpec extends SparkSpec {
     assert(field("id") == Seq(Some("1"), Some("2"), None, Some("4")))
     assert(field("b").map(_.map(_.take(1))) == Seq(Some("\n"), None, Some("a"), Some("")))
     assert(field("b")(2).contains("a\nb"))
+  }
+
+  test("a NaN or infinite double or float fails emit, naming the stream and the column") {
+    val frames = Seq(
+      "x" -> Seq((1L, 2.5), (2L, Double.NaN)).toDF("id", "x"),
+      "y" -> Seq((1L, Float.NegativeInfinity)).toDF("id", "y"))
+    frames.foreach { case (column, df) =>
+      val e = intercept[RuntimeException] {
+        SingerSink.emit("s", df, Seq("id"), new StateStore(), _ => ())
+      }
+      assert(e.getMessage.contains(s"stream s: column $column holds a non-finite number"), e.getMessage)
+    }
   }
 
   test("a zero-row frame emits SCHEMA and STATE only") {
