@@ -173,7 +173,10 @@ object SingerSink {
       for (p <- 0 until n) {
         while (submitted < n && submitted < p + window) {
           val q = submitted
-          jobs(q) = sc.submitJob(lines, utf8Block _, Seq(q),
+          // One RDD per job: a failed stage fails every active job whose
+          // lineage holds that stage's RDD, so jobs sharing `lines` would
+          // let a later partition's failure abort an earlier one.
+          jobs(q) = sc.submitJob(lines.mapPartitions(rows => rows), utf8Block _, Seq(q),
             (_: Int, b: Array[Byte]) => blocks(q) = b, ())
           submitted += 1
         }

@@ -145,7 +145,8 @@ class SingerSinkSpec extends SparkSpec {
 
   test("a task failing in the last partition surfaces after the earlier partitions were delivered") {
     val boom = udf { (id: Long) =>
-      if (id == 79) throw new IllegalStateException("boom in the last partition")
+      if (id == 60) Thread.sleep(2000) // partition 6 is still computing ...
+      if (id == 79) throw new IllegalStateException("boom in the last partition") // ... when 7 fails
       id
     }
     val df = spark.range(0, 80, 1, 8).select(boom(col("id")).as("id"))
