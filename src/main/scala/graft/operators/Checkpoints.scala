@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.{HashPartitioner, SparkContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * [[PageRank]], [[Graphs]] and [[Components]]): how a loop pins and
   * releases its frames, the fixed-round pin cadence ([[fixedRounds]]),
   * and the RDD-layer edge setup of the loops that run below Catalyst
-  * ([[withEdgeRdd]], [[edgePartitioner]], [[pinRows]]).
+  * ([[withWeightedEdgeRdd]], [[edgePartitioner]], [[pinRows]]).
   *
   * Release discipline for localCheckpoint-pinned frames in iterative
   * operators. `Dataset.unpersist` goes through the CacheManager and does
@@ -108,7 +108,10 @@ object Checkpoints {
     * The interval is each caller's measured trade (r17): a lazy pin
     * costs a full Catalyst pass (~0.25 s of driver time), while every
     * skipped pin deepens the next round's plan and multiplies its
-    * carried stats by one more join.
+    * carried stats by one more join. Every 2nd round (label
+    * propagation) suits a frame read once per round — an unpinned
+    * stretch only deepens the plan — or twice (a join plus a union),
+    * where exchange reuse dedups the doubled shallow subtree.
     */
   def fixedRounds(init: DataFrame, rounds: Int, every: Int,
       buildPins: Seq[DataFrame] = Nil)(step: DataFrame => DataFrame): DataFrame = {
@@ -151,32 +154,51 @@ object Checkpoints {
       math.min(sc.defaultParallelism.toLong, nEdges / 65536L + 1L)).toInt)
 
   /** Runs `loop` over the distinct (src, dst) Long edges of `edges`
-    * (both directions when `symmetric`), hash-partitioned by the
-    * [[edgePartitioner]] of their count (the setup's one job). Rows with
-    * a null id drop, as they never joined in the DataFrame renderings.
-    * `loop` returns its eagerly pinned result ([[pinRows]]); the edge
-    * storage is released after it, or when it throws.
+    * (both directions when `symmetric`) — [[withWeightedEdgeRdd]]
+    * without the weight.
     */
   def withEdgeRdd(edges: DataFrame, srcCol: String, dstCol: String,
       symmetric: Boolean = false)(
-      loop: (RDD[(Long, Long)], HashPartitioner) => DataFrame): DataFrame = {
+      loop: (RDD[(Long, Long)], HashPartitioner) => DataFrame): DataFrame =
+    withWeightedEdgeRdd(edges, srcCol, dstCol, lit(0L), symmetric)((a, _) => a) {
+      (e, part, _) => loop(e.mapValues(_._1), part)
+    }
+
+  /** Runs `loop` over the (src, dst) Long edges of `edges` (both
+    * directions when `symmetric`), keyed by src with each distinct
+    * pair's `weight` values folded by `combine` — `+` on a weight of 1
+    * counts parallel edges, `min` keeps the cheapest — and
+    * hash-partitioned by the [[edgePartitioner]] of the pair count (the
+    * setup's one job), which `loop` also receives. Rows with a null id
+    * or weight drop. `loop` returns its eagerly pinned result
+    * ([[pinRows]]); the edge storage is released after it, or when it
+    * or the setup throws.
+    */
+  def withWeightedEdgeRdd(edges: DataFrame, srcCol: String, dstCol: String,
+      weight: Column, symmetric: Boolean = false)(combine: (Long, Long) => Long)(
+      loop: (RDD[(Long, (Long, Long))], HashPartitioner, Long) => DataFrame): DataFrame = {
     // one pass over the caller's pipeline: flatMap emits both
     // directions, so nothing upstream evaluates twice
-    val distinctEdges = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"))
+    val pairs = edges.select(col(srcCol).cast("long"), col(dstCol).cast("long"),
+        weight.cast("long"))
       .rdd
-      .flatMap(r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else if (symmetric) Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
-        else Iterator((r.getLong(0), r.getLong(1))))
-      .distinct()
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) Iterator.empty
+        else {
+          val (s, d, w) = (r.getLong(0), r.getLong(1), r.getLong(2))
+          if (symmetric) Iterator(((s, d), w), ((d, s), w)) else Iterator(((s, d), w))
+        }
+      }
+      .reduceByKey(combine)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val part = edgePartitioner(edges.sparkSession.sparkContext, distinctEdges.count())
-    val keyed = distinctEdges.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    try loop(keyed, part)
-    finally {
-      distinctEdges.unpersist(blocking = false)
-      keyed.unpersist(blocking = false)
-    }
+    try {
+      val nPairs = pairs.count()
+      val part = edgePartitioner(edges.sparkSession.sparkContext, nPairs)
+      val keyed = pairs.map { case ((s, d), w) => (s, (d, w)) }
+        .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+      try loop(keyed, part, nPairs)
+      finally keyed.unpersist(blocking = false)
+    } finally pairs.unpersist(blocking = false)
   }
 
   /** A Long-keyed loop's `rows` as its eagerly pinned result frame, each

@@ -7,32 +7,26 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, StructField, StructType}
 
-/** Frontier-style graph primitives beyond ranking ([[PageRank]]) and
-  * clustering ([[Components]]): multi-source BFS hop counts (the
-  * "distance from a trusted seed set" signal of crawl-frontier
-  * prioritization and graph-based quality propagation) and fixed-round
-  * k-core peeling (the standard dense-subgraph/spam-farm detector).
-  * Both are pure integer computations with a fixed round count, so any
-  * engine replays them bit-identically — the [[PageRank]] determinism
-  * discipline.
+/** Graph primitives beyond ranking ([[PageRank]]) and clustering
+  * ([[Components]]): BFS hops and path counts, shortest paths, Katz,
+  * k-core and truss peeling, label propagation, the minimum spanning
+  * forest and structural censuses. The iterative ones are pure integer
+  * computations with a fixed round count, so any engine replays them
+  * bit-identically — the [[PageRank]] determinism discipline.
   *
-  * 100 TB shape (both): the edge list pins once (hash-partitioned on
-  * `src`, localCheckpoint); every round shuffles node-spine-sized
-  * frames only (frontier ids / surviving ids), never re-exchanging the
-  * edge list's layout; per-round frames are lazily checkpointed so the
-  * logical plan stays flat, and every superseded pin is released after
-  * the round's action proves it unreachable ([[Checkpoints]]).
+  * 100 TB shape: the edge list is set up once, hash-partitioned on
+  * `src`, and every round shuffles node-spine-sized data only. Loops
+  * whose rounds are pure (key, value) joins run at the RDD layer over
+  * [[Checkpoints.withWeightedEdgeRdd]]; the rest pin their rounds
+  * through [[Checkpoints.fixedRounds]].
   */
 object Graphs {
 
-  /** The BFS family's seed ids at the RDD layer, nulls dropped. The
-    * frontier loops run there (r18): each round is pure (key, value)
-    * joins over the pinned edge list, and the r17 DataFrame rendering
-    * still paid a full Catalyst analyze/optimize pass + AQE stages PER
-    * lazy round-pin at materialization (~40-50 jobs on q_ecc_pivots
-    * even after the convergence-count removal). RDD self-joins plan
-    * nothing; the whole hop chain materializes in ONE action (the
-    * minLabel treatment, Components.scala).
+  /** The seed ids of the RDD-layer loops (the BFS family, Bellman-Ford),
+    * nulls dropped. These loops run below Catalyst (r18): the DataFrame
+    * rendering paid a full Catalyst pass + AQE stages PER lazy round-pin
+    * (~40-50 jobs on q_ecc_pivots); RDD self-joins plan nothing, and the
+    * whole chain materializes in ONE action.
     */
   private def seedIds(seeds: DataFrame, seedCol: String): RDD[Long] =
     seeds.select(col(seedCol).cast("long")).rdd
@@ -474,13 +468,15 @@ object Graphs {
     * treat every edge equally; this is the cost-aware proximity
     * (routing, weighted trust propagation). Integer weights make every
     * round replayable bit-identically; `rounds` >= graph diameter gives
-    * the full single-source-shortest-path answer. Weights must be
-    * >= 0 (negative cycles would make a fixed-round answer
-    * path-length-dependent; enforce upstream).
+    * the full single-source-shortest-path answer. Ids and weights must
+    * be integral; a negative weight fails the job (negative cycles
+    * would make a fixed-round answer path-length-dependent). Edges and
+    * seeds with a null id or weight drop, so no row has a null id.
     *
-    * Per round: one join of the pinned edge list against the current
-    * distance frame, one min-aggregate over (old ∪ relaxed) — all
-    * node-spine-sized shuffles; pins release as rounds supersede.
+    * 100 TB shape: each (src, dst) pair keeps its cheapest weight,
+    * hash-partitioned on `src` once; each round is a co-partitioned join
+    * plus one node-spine-sized min re-key at the RDD layer, planning
+    * and pinning nothing.
     */
   def bellmanFordRounds(
       edges: DataFrame,
@@ -491,20 +487,24 @@ object Graphs {
       seedCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).as("w"))
-      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
-      .repartition(col("src")).transform(Checkpoints.pin(_, eager = false))
-    val d0 = seeds.select(col(seedCol).as("id")).distinct()
-      .withColumn("dist", lit(0L)).transform(Checkpoints.pin(_, eager = false))
-    // every-2nd-round pin: dist is referenced twice per round (join +
-    // union), so one unpinned stretch doubles a shallow subtree —
-    // exchange reuse dedups its execution — while each skipped pin
-    // saves a full Catalyst pass (r17: these loops were driver-bound)
-    Checkpoints.fixedRounds(d0, rounds, every = 2, buildPins = Seq(e, d0)) { dist =>
-      val relaxed = e.join(dist.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist.union(relaxed).groupBy(col("id")).agg(min(col("dist")).as("dist"))
+    val outType = Checkpoints.idType("bellmanFordRounds", Seq(edges.schema(srcCol).dataType,
+      edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
+    Checkpoints.idType("bellmanFordRounds", Seq(edges.schema(weightCol).dataType)) // integral
+    val weight = col(weightCol)
+    val checked = when(weight < 0, raise_error(lit(
+      "bellmanFordRounds: negative edge weight — fixed rounds need weights >= 0")))
+      .otherwise(weight)
+    Checkpoints.withWeightedEdgeRdd(edges, srcCol, dstCol, checked)(math.min(_, _)) { (e, part, _) =>
+      var dist = seedIds(seeds, seedCol).map(s => (s, 0L)).reduceByKey(part, (a, _) => a)
+      for (_ <- 1 to rounds) {
+        val relaxed = e.join(dist, part)
+          .map { case (_, ((dst, w), d)) => (dst, Math.addExact(d, w)) }
+        dist = dist.union(relaxed).reduceByKey(part, math.min(_, _))
+      }
+      Checkpoints.pinRows(edges.sparkSession, dist.map { case (v, d) => Row(v, d) },
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("dist", LongType, nullable = false))),
+        Map("id" -> outType))
     }
   }
 
@@ -518,20 +518,23 @@ object Graphs {
     * pₖ(v) = #walks of length k ending at v — so the whole computation
     * is INTEGER walk counting with zero divisions (contrast
     * [[PageRank.integerPageRank]]'s per-round floored shares, which
-    * need renormalization pins). Walk counts ride DECIMAL(38,0) with
-    * loud cast-down: pₖ ≤ (max in-degree)ᵏ·|V| grows fast, and a
-    * silent BIGINT wrap would be an ordering bug, not noise.
+    * need renormalization pins). Walk counts ride exact Long
+    * arithmetic: pₖ ≤ (max in-degree)ᵏ·|V| grows fast, and a silent
+    * BIGINT wrap would be an ordering bug, not noise. Every term is
+    * non-negative, so an overflowing term or partial sum means the
+    * result exceeds BIGINT: the job fails loudly.
     *
-    * 100 TB shape: the edge list pins once (hash-partitioned on
-    * `src`); each of the K rounds is ONE data-sized shuffle — the
-    * (dst, walk-count) sum, map-side combined — and the weighted
-    * accumulation folds as a union + final sum, never a driver loop
-    * over nodes. K is a stated horizon (the α-damped tail beyond K is
-    * bounded by (α·d_max)^K — pick K where that is below the emitted
-    * grain), so cost is K shuffles regardless of |V|.
+    * 100 TB shape: the edges reduce to one (src, dst, multiplicity) row
+    * per pair, hash-partitioned on `src` once; each of the K rounds is
+    * a co-partitioned join plus ONE node-spine-sized shuffle (the
+    * (dst, walk-count) sum, map-side combined) and a Horner fold into a
+    * co-partitioned running total — at the RDD layer, planning and
+    * pinning nothing. K is a stated horizon (the α-damped tail beyond
+    * K is bounded by (α·d_max)^K), so cost is K shuffles whatever |V|.
     *
     * Multi-edges count as parallel walks (multigraph semantics);
     * callers wanting simple-graph Katz dedup the edge list first.
+    * Edges with a null endpoint drop.
     */
   def katzRounds(
       edges: DataFrame,
@@ -541,35 +544,29 @@ object Graphs {
       alphaDenom: Long = 4L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(alphaDenom >= 2, s"alphaDenom must be >= 2, got $alphaDenom")
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .repartition(col("src")).transform(Checkpoints.pin(_, eager = false))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .transform(Checkpoints.pin(_, eager = false))
-    val pins = scala.collection.mutable.Buffer[DataFrame](e, nodes)
-    // p_0 = 1 per node; contribution weight alphaDenom^(rounds - k)
-    def w(k: Int): Column =
-      lit(BigDecimal(BigInt(alphaDenom).pow(rounds - k)).bigDecimal).cast(dec)
-    var p = nodes.withColumn("pk", lit(1L).cast(dec))
-    val contribs = scala.collection.mutable.Buffer[DataFrame](
-      p.select(col("id"), (col("pk") * w(0)).as("c")))
-    for (k <- 1 to rounds) {
-      val next = e.join(p.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum(col("pk")).as("pk"))
-      // every-2nd-round pin — see bellmanFordRounds
-      p = if (k == rounds || k % 2 == 1) next else {
-        val pin = Checkpoints.pin(next, eager = false); pins += pin; pin
+    val outType = Checkpoints.idType("katzRounds",
+      Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType))
+    def exact(f: => Long): Long = try f catch { case _: ArithmeticException =>
+      throw new ArithmeticException("katzRounds: walk-count sum exceeds BIGINT") }
+    val add = (a: Long, b: Long) => exact(Math.addExact(a, b))
+    // parallel edges add up: a pair's multiplicity is its walk count
+    Checkpoints.withWeightedEdgeRdd(edges, srcCol, dstCol, lit(1L))(_ + _) { (e, part, _) =>
+      var p = e.flatMap { case (s, (d, _)) => Iterator((s, 1L), (d, 1L)) }
+        .reduceByKey(part, (a, _) => a)
+      // p_0 = 1 per node; Horner: acc_k = alphaDenom·acc_{k−1} + p_k
+      var acc = p
+      for (_ <- 1 to rounds) {
+        p = e.join(p, part)
+          .map { case (_, ((dst, m), pk)) => (dst, exact(Math.multiplyExact(m, pk))) }
+          .reduceByKey(part, add)
+        acc = acc.mapValues(a => exact(Math.multiplyExact(a, alphaDenom)))
+          .union(p).reduceByKey(part, add)
       }
-      contribs += p.select(col("id"), (col("pk") * w(k)).as("c"))
+      Checkpoints.pinRows(edges.sparkSession, acc.map { case (v, k) => Row(v, k) },
+        StructType(Seq(StructField("id", LongType, nullable = false),
+          StructField("katz_num", LongType, nullable = false))),
+        Map("id" -> outType))
     }
-    val out = contribs.reduce(_ union _)
-      .groupBy(col("id"))
-      .agg(loudDecToLong(sum(col("c")), "katzRounds: walk-count sum exceeds BIGINT")
-        .as("katz_num"))
-    val materialized = Checkpoints.pin(out)
-    Checkpoints.release(pins.toSeq)
-    materialized
   }
 
   /** Fixed-round synchronous label propagation (Raghavan, Albert &
@@ -605,9 +602,7 @@ object Graphs {
     val labels0 = e.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     val w = Window.partitionBy(col("id")).orderBy(col("cnt").desc, col("label").asc)
-    // every-2nd-round pin — see bellmanFordRounds (labels is
-    // single-referenced per round, so an unpinned stretch only deepens
-    // the plan; the skipped Catalyst pass was the measured cost)
+    // every-2nd-round pin: see Checkpoints.fixedRounds
     Checkpoints.fixedRounds(labels0, rounds, every = 2, buildPins = Seq(e)) { labels =>
       e.join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"), col("label"))
@@ -913,157 +908,140 @@ object Graphs {
       weightCol: String,
       maxRounds: Int = 12): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // r18: the OUTER round loop runs at the RDD layer too (the inner
-    // pointer jumps moved there in r17). The DataFrame rendering paid
-    // 2 driver actions + 2-3 Catalyst passes per round (~60 jobs on
-    // q_mst); now each round is pure (key, value) joins over the
-    // pinned canonical edge set and its ONE action is the crossing
-    // count the convergence check needs anyway. Ids and weights must
-    // be integral — Long total order IS the SQL (w, u, v) struct
-    // order, so the chosen forest is bit-identical (loud require; the
-    // only caller keys on BIGINT supplier ids/costs).
+    // The round loop runs at the RDD layer (r18; the DataFrame
+    // rendering paid ~60 jobs on q_mst): each round is pure (key, value)
+    // joins over the canonical edge set, and its ONE action is the
+    // crossing count the convergence check needs anyway. Ids and weights
+    // must be integral — Long total order IS the SQL (w, u, v) struct
+    // order, so the chosen forest is bit-identical.
     val spark = edges.sparkSession
     // the id columns share the two inputs' common (widest) type, as in
     // the old least/greatest/min(w) rendering
     val idT = Checkpoints.idType("boruvkaMsf",
       Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType))
     val wT = Checkpoints.idType("boruvkaMsf", Seq(edges.schema(weightCol).dataType))
-    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // canonical simple graph: u<v, min w per pair; null ids never
-    // passed the a=!=b filter in the DataFrame rendering — drop them
-    val canon0 = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"), col(weightCol).cast("long").as("w"))
-      .rdd
-      .flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) Iterator.empty
-        else {
-          val a = r.getLong(0); val b = r.getLong(1)
-          if (a == b) Iterator.empty
-          else Iterator(((math.min(a, b), math.max(a, b)), r.getLong(2)))
-        }
-      }
-      .reduceByKey((x: Long, y: Long) => math.min(x, y))
-      .persist(storage)
-    val nEdges = canon0.count()
-    val part = Checkpoints.edgePartitioner(spark.sparkContext, nEdges)
-    // keyed by u for the per-round component-label join
-    val canon = canon0.map { case ((u, v), w) => (u, (v, w)) }
-      .partitionBy(part).persist(storage)
-    canon0.unpersist(blocking = false)
-    var comp = canon.mapValues(_._1)
-      .flatMap { case (u, v) => Iterator((u, u), (v, v)) }
-      .reduceByKey(part, (a, _) => a) // vertex spine, comp = self
-      .persist(storage)
-    // persisted RDDs superseded in earlier rounds: releasable only once
-    // a LATER count proves the chain no longer recomputes through them
-    // (chosen_{r-1} caches during the round-r count, which is what makes
-    // cross_{r-1}/comp_{r-1} unreachable — the minLabel discipline)
-    var prevComp = comp
-    var prevCross: org.apache.spark.rdd.RDD[(Long, Long, Long, Long, Long)] = null
-    // per-round chosen edges stay persisted until the forest
-    // materializes at the end — they feed BOTH the next round's
-    // contraction and the final union
-    val chosenBuf = scala.collection.mutable.Buffer
-      .empty[org.apache.spark.rdd.RDD[(Long, (Long, Long, Long, Long, Long))]]
-    var crossing = 1L
-    var round = 0
-    // pointer-jump budget for the contraction step: jumping halves the
-    // hooking forest's depth each time, and depth can never exceed the
-    // component count ≤ |V| ≤ 2·nEdges, so ceil(log2(2·nEdges)) + 1
-    // lazy jumps always compress fully — no per-jump action (an
-    // UNDER-compressed map would be a correctness bug: a later round
-    // would see one merged component under two labels and could add a
-    // cycle edge to the forest)
-    val jumps = math.max(1,
-      65 - java.lang.Long.numberOfLeadingZeros(math.max(2L, nEdges)))
-    while (crossing > 0 && round < maxRounds) {
-      // label both endpoints with their components; keep crossing edges
-      val cross = canon.join(comp, part)
-        .map { case (u, ((v, w), cu)) => (v, (u, w, cu)) }
-        .join(comp) // v-keyed side is freshly re-keyed: one shuffle
-        .flatMap { case (v, ((u, w, cu), cv)) =>
-          if (cu == cv) Iterator.empty else Iterator((u, v, w, cu, cv))
-        }
+    // pass the u =!= v filter
+    val canonical = edges.filter(col(srcCol) =!= col(dstCol))
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"), col(weightCol).as("w"))
+    Checkpoints.withWeightedEdgeRdd(canonical, "u", "v", col("w"))(math.min(_, _)) {
+        (canon, part, nEdges) =>
+      val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      var comp = canon.mapValues(_._1)
+        .flatMap { case (u, v) => Iterator((u, u), (v, v)) }
+        .reduceByKey(part, (a, _) => a) // vertex spine, comp = self
         .persist(storage)
-      crossing = cross.count() // the round's ONE action
-      // this count materialized comp (and, through its lineage, the
-      // previous round's chosen) — the previous round's cross/comp are
-      // now provably unreachable
-      if (prevCross != null) prevCross.unpersist(blocking = false)
-      prevCross = cross
-      if (prevComp ne comp) { prevComp.unpersist(blocking = false); prevComp = comp }
-      if (crossing > 0) {
-        // (w, u, v) total order picks the canonical lightest edge per
-        // component; cu/cv ride along to name the merge
-        val chosen = cross
-          .flatMap { case (u, v, w, cu, cv) =>
-            Iterator((cu, (w, u, v, cu, cv)), (cv, (w, u, v, cu, cv)))
-          }
-          .reduceByKey { (x, y) =>
-            if (x._1 < y._1 || (x._1 == y._1 && (x._2 < y._2 ||
-              (x._2 == y._2 && x._3 <= y._3)))) x else y
+      // persisted RDDs superseded in earlier rounds: releasable only once
+      // a LATER count proves the chain no longer recomputes through them
+      // (chosen_{r-1} caches during the round-r count, which is what makes
+      // cross_{r-1}/comp_{r-1} unreachable — the minLabel discipline)
+      var prevComp = comp
+      var prevCross: org.apache.spark.rdd.RDD[(Long, Long, Long, Long, Long)] = null
+      // per-round chosen edges stay persisted until the forest
+      // materializes at the end — they feed BOTH the next round's
+      // contraction and the final union
+      val chosenBuf = scala.collection.mutable.Buffer
+        .empty[org.apache.spark.rdd.RDD[(Long, (Long, Long, Long, Long, Long))]]
+      var crossing = 1L
+      var round = 0
+      // pointer-jump budget for the contraction step: jumping halves the
+      // hooking forest's depth each time, and depth can never exceed the
+      // component count ≤ |V| ≤ 2·nEdges, so ceil(log2(2·nEdges)) + 1
+      // lazy jumps always compress fully — no per-jump action (an
+      // UNDER-compressed map would be a correctness bug: a later round
+      // would see one merged component under two labels and could add a
+      // cycle edge to the forest)
+      val jumps = math.max(1,
+        65 - java.lang.Long.numberOfLeadingZeros(math.max(2L, nEdges)))
+      while (crossing > 0 && round < maxRounds) {
+        // label both endpoints with their components; keep crossing edges
+        val cross = canon.join(comp, part)
+          .map { case (u, ((v, w), cu)) => (v, (u, w, cu)) }
+          .join(comp) // v-keyed side is freshly re-keyed: one shuffle
+          .flatMap { case (v, ((u, w, cu), cv)) =>
+            if (cu == cv) Iterator.empty else Iterator((u, v, w, cu, cv))
           }
           .persist(storage)
-        chosenBuf += chosen
-        // contraction: the merge graph is a functional pseudo-forest —
-        // every tree hangs off one mutual-min 2-cycle. Break the
-        // 2-cycle to its least member (the only root), then chained
-        // p∘p pointer jumps; the budget shrinks by one per round
-        // (components at least halve).
-        val parent0 = chosen.map { case (c, (_, _, _, cu, cv)) =>
-          (c, if (c == cu) cv else cu)
-        }
-        val p1 = parent0.map { case (c, p) => (p, c) }
-          .join(parent0)
-          .map { case (p, (c, pp)) =>
-            (c, if (pp == c) math.min(c, p) else p)
+        crossing = cross.count() // the round's ONE action
+        // this count materialized comp (and, through its lineage, the
+        // previous round's chosen) — the previous round's cross/comp are
+        // now provably unreachable
+        if (prevCross != null) prevCross.unpersist(blocking = false)
+        prevCross = cross
+        if (prevComp ne comp) { prevComp.unpersist(blocking = false); prevComp = comp }
+        if (crossing > 0) {
+          // (w, u, v) total order picks the canonical lightest edge per
+          // component; cu/cv ride along to name the merge
+          val chosen = cross
+            .flatMap { case (u, v, w, cu, cv) =>
+              Iterator((cu, (w, u, v, cu, cv)), (cv, (w, u, v, cu, cv)))
+            }
+            .reduceByKey { (x, y) =>
+              if (x._1 < y._1 || (x._1 == y._1 && (x._2 < y._2 ||
+                (x._2 == y._2 && x._3 <= y._3)))) x else y
+            }
+            .persist(storage)
+          chosenBuf += chosen
+          // contraction: the merge graph is a functional pseudo-forest —
+          // every tree hangs off one mutual-min 2-cycle. Break the
+          // 2-cycle to its least member (the only root), then chained
+          // p∘p pointer jumps; the budget shrinks by one per round
+          // (components at least halve).
+          val parent0 = chosen.map { case (c, (_, _, _, cu, cv)) =>
+            (c, if (c == cu) cv else cu)
           }
-        var pk = p1
-        val roundJumps = math.max(1, jumps - round)
-        for (_ <- 1 to roundJumps)
-          pk = pk.map { case (c, pv) => (pv, c) }
+          val p1 = parent0.map { case (c, p) => (p, c) }
+            .join(parent0)
+            .map { case (p, (c, pp)) =>
+              (c, if (pp == c) math.min(c, p) else p)
+            }
+          var pk = p1
+          val roundJumps = math.max(1, jumps - round)
+          for (_ <- 1 to roundJumps)
+            pk = pk.map { case (c, pv) => (pv, c) }
+              .leftOuterJoin(pk)
+              .map { case (pv, (c, pj)) => (c, pj.getOrElse(pv)) }
+          comp = comp.map { case (id, cm) => (cm, id) }
             .leftOuterJoin(pk)
-            .map { case (pv, (c, pj)) => (c, pj.getOrElse(pv)) }
-        comp = comp.map { case (id, cm) => (cm, id) }
-          .leftOuterJoin(pk)
-          .map { case (cm, (id, l)) => (id, l.getOrElse(cm)) }
-          .partitionBy(part)
-          .persist(storage)
+            .map { case (cm, (id, l)) => (id, l.getOrElse(cm)) }
+            .partitionBy(part)
+            .persist(storage)
+        }
+        round += 1
       }
-      round += 1
-    }
-    def releaseAll(): Unit = {
-      canon.unpersist(blocking = false)
-      comp.unpersist(blocking = false)
-      if (prevComp ne comp) prevComp.unpersist(blocking = false)
-      if (prevCross != null) prevCross.unpersist(blocking = false)
-      chosenBuf.foreach(_.unpersist(blocking = false))
-    }
-    if (crossing > 0) {
+      def releaseAll(): Unit = {
+        comp.unpersist(blocking = false)
+        if (prevComp ne comp) prevComp.unpersist(blocking = false)
+        if (prevCross != null) prevCross.unpersist(blocking = false)
+        chosenBuf.foreach(_.unpersist(blocking = false))
+      }
+      if (crossing > 0) {
+        releaseAll()
+        throw new IllegalStateException(
+          s"boruvkaMsf did not finish within $maxRounds rounds " +
+            s"($crossing crossing edges remain) — raise maxRounds; a " +
+            "partial forest would silently read as disconnection")
+      }
+      // one distinct over the union replays the per-round dedup (both
+      // endpoint components choosing the same edge); cross-round dups
+      // cannot exist (a forest edge is intra-component ever after)
+      val forest =
+        if (chosenBuf.isEmpty) spark.sparkContext.emptyRDD[(Long, Long, Long)]
+        else spark.sparkContext
+          .union(chosenBuf.toSeq.map(_.map { case (_, (w, u, v, _, _)) => (u, v, w) }))
+          .distinct()
+      // the eager pin materializes the forest off the still-persisted
+      // chosen rounds BEFORE their storage releases
+      val msf = Checkpoints.pinRows(spark,
+        forest.map { case (u, v, w) => Row(u, v, w) },
+        StructType(Seq(StructField("u", LongType, nullable = false),
+          StructField("v", LongType, nullable = false),
+          StructField("w", LongType, nullable = false))),
+        Map("u" -> idT, "v" -> idT, "w" -> wT))
       releaseAll()
-      throw new IllegalStateException(
-        s"boruvkaMsf did not finish within $maxRounds rounds " +
-          s"($crossing crossing edges remain) — raise maxRounds; a " +
-          "partial forest would silently read as disconnection")
+      msf
     }
-    // one distinct over the union replays the per-round dedup (both
-    // endpoint components choosing the same edge); cross-round dups
-    // cannot exist (a forest edge is intra-component ever after)
-    val forest =
-      if (chosenBuf.isEmpty) spark.sparkContext.emptyRDD[(Long, Long, Long)]
-      else spark.sparkContext
-        .union(chosenBuf.toSeq.map(_.map { case (_, (w, u, v, _, _)) => (u, v, w) }))
-        .distinct()
-    // the eager pin materializes the forest off the still-persisted
-    // chosen rounds BEFORE their storage releases
-    val msf = Checkpoints.pinRows(spark,
-      forest.map { case (u, v, w) => Row(u, v, w) },
-      StructType(Seq(StructField("u", LongType, nullable = false),
-        StructField("v", LongType, nullable = false),
-        StructField("w", LongType, nullable = false))),
-      Map("u" -> idT, "v" -> idT, "w" -> wT))
-    releaseAll()
-    msf
   }
 
   /** Rich-club coefficient (Zhou & Mondragón 2004) at each degree cut

@@ -6,6 +6,12 @@ import org.apache.spark.sql.functions._
 class GraphsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every message in `t`'s cause chain: a task's failure reaches the
+    * driver wrapped in a job-abort exception.
+    */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
   // a directed path 1→2→3→4→5 plus a detour 1→3 (shortcut) and an
   // unreachable island 9→10
   private def pathEdges = Seq(
@@ -118,6 +124,72 @@ class GraphsSpec extends SparkSpec {
     val r2 = Graphs.bellmanFordRounds(edges, "src", "dst", "w", seeds, "id", 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2 == Map(1L -> 0L, 2L -> 5L, 3L -> 10L)) // detour wins; island absent
+  }
+
+  test("bellmanFordRounds fails on a negative or non-integral weight") {
+    val seeds = Seq(1L).toDF("id")
+    val negative = Seq((1L, 2L, 5L), (2L, 3L, -1L)).toDF("src", "dst", "w")
+    val err = intercept[Exception] {
+      Graphs.bellmanFordRounds(negative, "src", "dst", "w", seeds, "id", 2).collect()
+    }
+    assert(messages(err).contains("bellmanFordRounds: negative edge weight"), messages(err))
+    val fractional = Seq((1L, 2L, 0.5)).toDF("src", "dst", "w")
+    val typeErr = intercept[IllegalArgumentException] {
+      Graphs.bellmanFordRounds(fractional, "src", "dst", "w", seeds, "id", 2)
+    }
+    assert(typeErr.getMessage.contains("integral"), typeErr.getMessage)
+  }
+
+  test("bellmanFordRounds drops null seeds, ids and weights") {
+    val edges = Seq[(Option[Long], Option[Long], Option[Long])](
+      (Some(1L), Some(2L), Some(5L)), (Some(2L), Some(3L), Some(5L)),
+      (Some(1L), Some(3L), Some(20L)), (Some(2L), None, Some(1L)),
+      (Some(1L), Some(4L), None), (None, Some(5L), Some(1L))).toDF("src", "dst", "w")
+    val seeds = Seq(Some(1L), None).toDF("id")
+    val out = Graphs.bellmanFordRounds(edges, "src", "dst", "w", seeds, "id", 2).collect()
+    assert(out.forall(r => !r.isNullAt(0) && !r.isNullAt(1)), out.mkString(", "))
+    assert(out.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(1L -> 0L, 2L -> 5L, 3L -> 10L))
+  }
+
+  test("katzRounds and bellmanFordRounds keep INT ids INT and emit BIGINT") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val edges = Seq((1, 2, 5), (2, 3, 5)).toDF("src", "dst", "w")
+    val katz = Graphs.katzRounds(edges, "src", "dst", rounds = 2)
+    assert(katz.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> IntegerType, "katz_num" -> LongType))
+    // alphaDenom 4, K = 2: 16 per node, + 4 per in-walk of length 1, + 1 per length 2
+    assert(katz.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      Map(1 -> 16L, 2 -> 20L, 3 -> 21L))
+    val bf = Graphs.bellmanFordRounds(edges, "src", "dst", "w", Seq(1).toDF("id"), "id", 2)
+    assert(bf.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> IntegerType, "dist" -> LongType))
+    assert(bf.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      Map(1 -> 0L, 2 -> 5L, 3 -> 10L))
+  }
+
+  test("katzRounds fails loudly when only the accumulated sum exceeds BIGINT") {
+    // a² fits in BIGINT with 5,928,526,806 to spare: one in-edge adds
+    // a = 3,037,000,499 and still fits, two add 2a and overflow
+    val a = 3037000499L
+    val one = Graphs.katzRounds(Seq((1L, 3L)).toDF("src", "dst"), "src", "dst",
+        rounds = 2, alphaDenom = a)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(one == Map(1L -> a * a, 3L -> (a * a + a)))
+    val two = Seq((1L, 3L), (2L, 3L)).toDF("src", "dst")
+    val err = intercept[Exception] {
+      Graphs.katzRounds(two, "src", "dst", rounds = 2, alphaDenom = a).collect()
+    }
+    assert(messages(err).contains("katzRounds: walk-count sum exceeds BIGINT"), messages(err))
+  }
+
+  test("katzRounds fails loudly when alphaDenom^rounds exceeds BIGINT") {
+    // 2^64 wraps to 0 through BigInt.toLong; it must raise instead
+    val err = intercept[Exception] {
+      Graphs.katzRounds(Seq((1L, 2L)).toDF("src", "dst"), "src", "dst",
+        rounds = 2, alphaDenom = 1L << 32).collect()
+    }
+    assert(messages(err).contains("katzRounds: walk-count sum exceeds BIGINT"), messages(err))
   }
 
   test("degreeStats profiles the path graph correctly") {
