@@ -129,14 +129,15 @@ object Checkpoints {
     cur
   }
 
-  /** The id type a Long-keyed RDD loop returns for input id columns of
+  /** The type a Long-keyed RDD loop returns for input columns of
     * `types`: BIGINT if any is, else INT. Fails unless every type is one
-    * of the two — the loops key on Long, whose order must agree with
-    * the engine's value order.
+    * of the two — the loops carry ids and weights as Long, whose order
+    * must agree with the engine's value order. `role` names what the
+    * columns hold ("ids", "weights") in the failure.
     */
-  def idType(what: String, types: Seq[DataType]): DataType = {
+  def idType(what: String, role: String, types: Seq[DataType]): DataType = {
     require(types.forall(t => t == LongType || t == IntegerType),
-      s"$what needs integral ids, got $types — the RDD loop keys on Long")
+      s"$what needs integral $role, got $types — the RDD loop carries them as Long")
     if (types.contains(LongType)) LongType else types.head
   }
 

@@ -60,7 +60,7 @@ object Components {
     // the whole loop. Labels are compared with Long min, which matches
     // the DataFrame `least` on the same values bit-for-bit.
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val outType = Checkpoints.idType("minLabel",
+    val outType = Checkpoints.idType("minLabel", "ids",
       Seq(pairs.schema(idA).dataType, pairs.schema(idB).dataType))
     Checkpoints.withEdgeRdd(pairs, idA, idB, symmetric = true) { (edges, part) =>
       // vertex spine: edges are symmetric, so keys cover every endpoint;

@@ -50,7 +50,7 @@ object Graphs {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val outType = Checkpoints.idType("bfsHops", Seq(edges.schema(srcCol).dataType,
+    val outType = Checkpoints.idType("bfsHops", "ids", Seq(edges.schema(srcCol).dataType,
       edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
     Checkpoints.withEdgeRdd(edges, srcCol, dstCol) { (e, part) =>
       val seed0 = seedIds(seeds, seedCol).map(s => (s, 0))
@@ -95,7 +95,7 @@ object Graphs {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val outType = Checkpoints.idType("multiSourceBfs", Seq(edges.schema(srcCol).dataType,
+    val outType = Checkpoints.idType("multiSourceBfs", "ids", Seq(edges.schema(srcCol).dataType,
       edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
     Checkpoints.withEdgeRdd(edges, srcCol, dstCol) { (e, part) =>
       // state is (seed, id)-keyed; its own partitioner of the same width
@@ -147,7 +147,7 @@ object Graphs {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val outType = Checkpoints.idType("pathCounts", Seq(edges.schema(srcCol).dataType,
+    val outType = Checkpoints.idType("pathCounts", "ids", Seq(edges.schema(srcCol).dataType,
       edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
     // σ rides BigInt at the RDD layer — integer-exact like the
     // DECIMAL(38,0) sums it replaces (a DECIMAL sum of integers IS the
@@ -487,9 +487,9 @@ object Graphs {
       seedCol: String,
       rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val outType = Checkpoints.idType("bellmanFordRounds", Seq(edges.schema(srcCol).dataType,
+    val outType = Checkpoints.idType("bellmanFordRounds", "ids", Seq(edges.schema(srcCol).dataType,
       edges.schema(dstCol).dataType, seeds.schema(seedCol).dataType))
-    Checkpoints.idType("bellmanFordRounds", Seq(edges.schema(weightCol).dataType)) // integral
+    Checkpoints.idType("bellmanFordRounds", "weights", Seq(edges.schema(weightCol).dataType))
     val weight = col(weightCol)
     val checked = when(weight < 0, raise_error(lit(
       "bellmanFordRounds: negative edge weight — fixed rounds need weights >= 0")))
@@ -544,7 +544,7 @@ object Graphs {
       alphaDenom: Long = 4L): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(alphaDenom >= 2, s"alphaDenom must be >= 2, got $alphaDenom")
-    val outType = Checkpoints.idType("katzRounds",
+    val outType = Checkpoints.idType("katzRounds", "ids",
       Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType))
     def exact(f: => Long): Long = try f catch { case _: ArithmeticException =>
       throw new ArithmeticException("katzRounds: walk-count sum exceeds BIGINT") }
@@ -917,9 +917,9 @@ object Graphs {
     val spark = edges.sparkSession
     // the id columns share the two inputs' common (widest) type, as in
     // the old least/greatest/min(w) rendering
-    val idT = Checkpoints.idType("boruvkaMsf",
+    val idT = Checkpoints.idType("boruvkaMsf", "ids",
       Seq(edges.schema(srcCol).dataType, edges.schema(dstCol).dataType))
-    val wT = Checkpoints.idType("boruvkaMsf", Seq(edges.schema(weightCol).dataType))
+    val wT = Checkpoints.idType("boruvkaMsf", "weights", Seq(edges.schema(weightCol).dataType))
     // canonical simple graph: u<v, min w per pair; null ids never
     // pass the u =!= v filter
     val canonical = edges.filter(col(srcCol) =!= col(dstCol))

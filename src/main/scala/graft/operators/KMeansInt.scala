@@ -66,58 +66,20 @@ object KMeansInt {
       vecCol: String,
       k: Int,
       rounds: Int): (DataFrame, DataFrame) = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint(false)
-    val pins = scala.collection.mutable.Buffer[DataFrame](base)
-    // deterministic seeding: the k smallest ids, cids 0..k-1 in id
-    // order (k rows — the single-partition window is bounded by k)
-    var cents = base.orderBy(col("id")).limit(k)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy(col("id"))) - 1).cast("long"))
-      .select(col("cid"), col("v").as("cv"))
-      .localCheckpoint(true)
-    pins += cents
-    var assign: DataFrame = null
-    for (r <- 1 to rounds) {
-      val scored = base.crossJoin(broadcast(cents))
-        // codegen kernel, not aggregate(zip_with(...)): the interpreted
-        // HOF lambda was the dominant cost of every Lloyd round (r17
-        // profile); value-identical Long squared-L2
-        .withColumn("dist",
-          graft.expressions.functions.l2sq_long(col("v"), col("cv")))
-      assign = scored.groupBy(col("id"))
-        .agg(min(struct(col("dist"), col("cid"))).as("m"))
-        .select(col("id"), col("m.cid").as("cid"), col("m.dist").as("dist"))
-      if (r < rounds) {
-        val a = assign.localCheckpoint(false)
-        pins += a
-        val cn = a.join(base, Seq("id"))
-          .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("cid"), col("pos"))
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("c"))
-          .select(col("cid"), col("pos"), expr("s div c").as("m"))
-          .groupBy(col("cid"))
-          .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("cid"), expr("transform(pm, p -> p.m)").as("cv"))
-          .localCheckpoint(true)
-        pins += cn
-        cents = cn
-      }
-    }
-    val result = assign.localCheckpoint(true)
-    val finalCents = cents
-    Checkpoints.release(pins.filterNot(_ eq finalCents).toSeq)
-    (result, finalCents)
+    // one training = the grouped loop over a single constant group
+    val (assign, cents) = lloydRoundsGrouped(
+      df.select(lit(0).as("g"), col(idCol).as("id"), col(vecCol).as("v")),
+      "g", "id", "v", k, rounds)
+    (assign.drop("g"), cents.drop("g"))
   }
 
-  /** [[lloydRoundsFull]] for MANY INDEPENDENT trainings in one loop:
+  /** The one Lloyd loop, for MANY INDEPENDENT trainings at once:
     * `gCol` names the training group (e.g. the PQ subspace index) and
     * every group runs the same fixed-round Lloyd — seeding, floor-mean
     * updates, and argmin tie-breaks all scoped per group, so the
     * result is row-identical to |groups| separate [[lloydRoundsFull]]
-    * runs. The point is the ACTION count: per-subspace training paid
+    * runs (which is this loop over one group). Every frame pins
+    * through [[Checkpoints.pin]]. The point is the ACTION count: per-subspace training paid
     * one eager centroid pin per (group × round) — concurrent futures
     * overlap the jobs but not the driver's planning — while this loop
     * pays one per round for all groups together (r17; the PQ families
@@ -133,18 +95,17 @@ object KMeansInt {
       rounds: Int): (DataFrame, DataFrame) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val base = df.select(col(gCol).as("g"), col(idCol).as("id"), col(vecCol).as("v"))
-      .localCheckpoint(false)
+    val base = Checkpoints.pin(
+      df.select(col(gCol).as("g"), col(idCol).as("id"), col(vecCol).as("v")), eager = false)
     val pins = scala.collection.mutable.Buffer[DataFrame](base)
     // per-group deterministic seeding: the k smallest ids of each
     // group, cids 0..k-1 in id order (k rows per group — bounded)
-    var cents = base
+    var cents = Checkpoints.pin(base
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("g")).orderBy(col("id"))))
       .filter(col("__rn") <= k)
       .select(col("g"), (col("__rn") - 1).cast("long").as("cid"),
-        col("v").as("cv"))
-      .localCheckpoint(true)
+        col("v").as("cv")))
     pins += cents
     var assign: DataFrame = null
     for (r <- 1 to rounds) {
@@ -156,22 +117,21 @@ object KMeansInt {
         .select(col("g"), col("id"), col("m.cid").as("cid"),
           col("m.dist").as("dist"))
       if (r < rounds) {
-        val a = assign.localCheckpoint(false)
+        val a = Checkpoints.pin(assign, eager = false)
         pins += a
-        val cn = a.join(base, Seq("g", "id"))
+        val cn = Checkpoints.pin(a.join(base, Seq("g", "id"))
           .select(col("g"), col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
           .groupBy(col("g"), col("cid"), col("pos"))
           .agg(sum(col("x")).as("s"), count(lit(1)).as("c"))
           .select(col("g"), col("cid"), col("pos"), expr("s div c").as("m"))
           .groupBy(col("g"), col("cid"))
           .agg(sort_array(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("g"), col("cid"), expr("transform(pm, p -> p.m)").as("cv"))
-          .localCheckpoint(true)
+          .select(col("g"), col("cid"), expr("transform(pm, p -> p.m)").as("cv")))
         pins += cn
         cents = cn
       }
     }
-    val result = assign.localCheckpoint(true)
+    val result = Checkpoints.pin(assign)
     val finalCents = cents
     Checkpoints.release(pins.filterNot(_ eq finalCents).toSeq)
     (result, finalCents)

@@ -177,7 +177,7 @@ object StreamSync {
         val q = StreamingSync.syncToParquet(
           StreamingSync.readJsonlStream(s, s"$root/spill/*.jsonl", meta.sparkSchema),
           "nation", sink.toString, root.resolve("ckpt").toString,
-          Some("n_nationkey"), new StateStore(), Trigger.AvailableNow())
+          Some("n_nationkey"), new StateStore())
         awaitOrFail(q, 120000, "stream_sync replay")
 
         val n = s.read.parquet(sink.toString).count()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -22,9 +22,11 @@ import graft.state.StateStore
   *     cursor into a [[StateStore]], so batch re-runs can resume
   *     (`cursor > bookmark`) even outside streaming.
   *
-  * Beyond parity, [[sessionizeStream]] shows genuinely stateful streaming
-  * (flatMapGroupsWithState with processing-time timeouts) — the watermark/
-  * window machinery the reference lacks entirely (SURVEY §2.2).
+  * Beyond parity, the keyed operators ([[sessionizeStream]] and the
+  * rest, all on one [[foldByKey]] harness) carry explicit per-key state
+  * across micro-batches, with optional processing-time TTL eviction —
+  * the watermark/window machinery the reference lacks entirely
+  * (SURVEY §2.2).
   */
 object StreamingSync {
 
@@ -45,7 +47,8 @@ object StreamingSync {
   /** Run a stream to a parquet sink with checkpointing, committing the max
     * cursor per micro-batch into `state` (Singer STATE analog: emitted
     * after every batch, consistent with the sink because foreachBatch runs
-    * post-write).
+    * post-write). The trigger is AvailableNow: the query drains the
+    * landing directory and stops, like one reference sync run.
     */
   def syncToParquet(
       df: DataFrame,
@@ -53,10 +56,9 @@ object StreamingSync {
       outDir: String,
       checkpointDir: String,
       cursorField: Option[String],
-      state: StateStore,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      state: StateStore): StreamingQuery =
     df.writeStream
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.persist()
@@ -85,17 +87,56 @@ object StreamingSync {
       }
       .start()
 
-  /** Per-user session aggregation with explicit state: gap-based sessions
-    * via `flatMapGroupsWithState`. Emits one row per CLOSED session (a
-    * session closes when a later event arrives past the gap). `gapSeconds`
-    * defines session boundaries on the event-time column `ts_s` (epoch
-    * seconds).
-    *
-    * `useProcessingTimeout=true` additionally closes idle sessions on a
-    * processing-time timer; note that timers force continuous no-data
-    * micro-batches, so AvailableNow/test harnesses should leave it off and
-    * rely on event-driven closing.
+  /** The one `flatMapGroupsWithState` behind every keyed operator here.
+    * `fold` gets a key, its micro-batch events and its carried state, and
+    * returns the next state (`None` leaves the key without state) and the
+    * rows to emit. The harness owns what the operators share: Append
+    * output; with `ttlMs > 0`, ProcessingTimeTimeout eviction — a key
+    * silent past `ttlMs` drops its state and emits nothing; and the state
+    * write — `update` only when `fold` returns a state, the timeout
+    * re-armed only after it (`setTimeoutDuration` throws on a key
+    * without state).
     */
+  private def foldByKey[K, E, S: Encoder, O: Encoder](
+      keyed: KeyValueGroupedDataset[K, E], ttlMs: Long = 0L)(
+      fold: (K, Iterator[E], Option[S]) => (Option[S], Iterator[O])): Dataset[O] = {
+    val timeout =
+      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
+      else GroupStateTimeout.NoTimeout()
+    keyed.flatMapGroupsWithState[S, O](OutputMode.Append(), timeout) {
+      (key: K, evs: Iterator[E], gs: GroupState[S]) =>
+        if (gs.hasTimedOut) { gs.remove(); Iterator.empty }
+        else {
+          val (next, out) = fold(key, evs, gs.getOption)
+          next.foreach { st =>
+            gs.update(st)
+            if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
+          }
+          out
+        }
+    }
+  }
+
+  /** [[foldByKey]] as an ordered per-event scan: a key's micro-batch
+    * events are sorted by `order` (stable) and `step` threads the state
+    * through them, returning the next state and the rows the event
+    * emits. Sorting within the batch is what makes a scan replayable;
+    * across batches every operator relies on per-key-monotonic arrival.
+    */
+  private def scanByKey[K, E, S: Encoder, O: Encoder, T: Ordering](
+      keyed: KeyValueGroupedDataset[K, E], ttlMs: Long = 0L)(order: E => T)(
+      step: (K, Option[S], E) => (Option[S], Iterable[O])): Dataset[O] =
+    foldByKey(keyed, ttlMs) { (key, evs, init: Option[S]) =>
+      var st = init
+      val out = Vector.newBuilder[O]
+      evs.toSeq.sortBy(order).foreach { e =>
+        val (next, rows) = step(key, st, e)
+        st = next
+        out ++= rows
+      }
+      (st, out.result().iterator)
+    }
+
   final case class SessionEvent(user_id: Long, ts_s: Long)
   final case class SessionState(start: Long, last: Long, n: Int)
   final case class ClosedSession(user_id: Long, start_s: Long, end_s: Long, n_events: Int)
@@ -133,40 +174,18 @@ object StreamingSync {
       events: Dataset[TouchEvent],
       ttlMs: Long = 0L): Dataset[AttributedPurchase] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchState, AttributedPurchase](
-        OutputMode.Append(), timeoutConf) {
-        case (user, evs, gs: GroupState[TouchState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (user, evs, gs: GroupState[TouchState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[AttributedPurchase]
-          sorted.foreach { e =>
-            e.event_type match {
-              case "click" | "view" =>
-                st = Some(TouchState(e.event_id, e.event_type, e.ts_us))
-              case "purchase" =>
-                out += AttributedPurchase(e.event_id, user,
-                  st.map(_.touch_id), st.map(_.touch_type),
-                  st.map(t => e.ts_us - t.ts_us))
-              case _ => () // signup/error: neither touch nor conversion
-            }
-          }
-          // timeout only arms when state exists: a purchases-only batch
-          // leaves no touch state, and setTimeoutDuration without state
-          // throws
-          st.foreach { t =>
-            gs.update(t)
-            if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          }
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id), ttlMs)(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[TouchState], e) =>
+        e.event_type match {
+          case "click" | "view" =>
+            (Some(TouchState(e.event_id, e.event_type, e.ts_us)), Nil)
+          case "purchase" =>
+            (st, Seq(AttributedPurchase(e.event_id, user,
+              st.map(_.touch_id), st.map(_.touch_type),
+              st.map(t => e.ts_us - t.ts_us))))
+          case _ => (st, Nil) // signup/error: neither touch nor conversion
+        }
+    }
   }
 
   final case class ValueEvent(event_id: Long, user_id: Long, ts_us: Long, v: Long)
@@ -196,26 +215,12 @@ object StreamingSync {
     require(halvings >= 1 && halvings <= 20,
       s"halvings must be in [1, 20], got $halvings")
     val den = (1L << halvings).toDouble
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaState, EwmaRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[EwmaState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[EwmaRow]
-          sorted.foreach { e =>
-            val x = e.v.toDouble
-            val s = st match {
-              case None    => x
-              case Some(p) => p.s + (x - p.s) / den
-            }
-            st = Some(EwmaState(s))
-            out += EwmaRow(e.event_id, user, s)
-          }
-          st.foreach(gs.update)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[EwmaState], e) =>
+        val x = e.v.toDouble
+        val s = st.fold(x)(p => p.s + (x - p.s) / den)
+        (Some(EwmaState(s)), Seq(EwmaRow(e.event_id, user, s)))
+    }
   }
 
   final case class CusumState(tgt: Long, s: Long, minS: Long)
@@ -241,25 +246,15 @@ object StreamingSync {
       threshold: Long): Dataset[CusumRow] = {
     import events.sparkSession.implicits._
     require(threshold > 0, s"threshold must be > 0, got $threshold")
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[CusumState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[CusumRow]
-          sorted.foreach { e =>
-            val tgt = st.map(_.tgt).getOrElse(e.v)
-            val s = st.map(_.s).getOrElse(0L) + (e.v - tgt - slack)
-            val minS = math.min(st.map(_.minS).getOrElse(0L), s)
-            st = Some(CusumState(tgt, s, minS))
-            val cPlus = s - math.min(0L, minS)
-            out += CusumRow(e.event_id, user, cPlus, cPlus >= threshold)
-          }
-          st.foreach(gs.update)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[CusumState], e) =>
+        val tgt = st.map(_.tgt).getOrElse(e.v)
+        val s = st.map(_.s).getOrElse(0L) + (e.v - tgt - slack)
+        val minS = math.min(st.map(_.minS).getOrElse(0L), s)
+        val cPlus = s - math.min(0L, minS)
+        (Some(CusumState(tgt, s, minS)),
+          Seq(CusumRow(e.event_id, user, cPlus, cPlus >= threshold)))
+    }
   }
 
   final case class RateState(tokU: Long, lastUs: Long)
@@ -289,28 +284,17 @@ object StreamingSync {
     import events.sparkSession.implicits._
     require(capMicro >= 1000000L, s"capacity below one token: $capMicro")
     require(refillDivUs > 0, s"refillDivUs must be > 0: $refillDivUs")
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RateState, RateRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[RateState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[RateRow]
-          sorted.foreach { e =>
-            val pre = st match {
-              case None => capMicro
-              case Some(RateState(tok, last)) =>
-                math.min(capMicro, tok + (e.ts_us - last) / refillDivUs)
-            }
-            val allowed = pre >= 1000000L
-            val after = if (allowed) pre - 1000000L else pre
-            st = Some(RateState(after, e.ts_us))
-            out += RateRow(e.event_id, user, allowed, after)
-          }
-          st.foreach(gs.update)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[RateState], e) =>
+        val pre = st match {
+          case None => capMicro
+          case Some(RateState(tok, last)) =>
+            math.min(capMicro, tok + (e.ts_us - last) / refillDivUs)
+        }
+        val allowed = pre >= 1000000L
+        val after = if (allowed) pre - 1000000L else pre
+        (Some(RateState(after, e.ts_us)), Seq(RateRow(e.event_id, user, allowed, after)))
+    }
   }
 
   final case class BloomState(bits: Array[Long], n: Long)
@@ -348,38 +332,27 @@ object StreamingSync {
     import events.sparkSession.implicits._
     require(mBits > 0 && mBits % 64 == 0 && mBits <= 65536,
       s"mBits must be a positive multiple of 64 (<= 65536), got $mBits")
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[BloomState, BloomRow](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, gs: GroupState[BloomState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (key, evs, gs: GroupState[BloomState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          val st = gs.getOption.getOrElse(
-            BloomState(new Array[Long](mBits / 64), 0L))
-          val bits = st.bits.clone()
-          var n = st.n
-          var setCount = bits.map(java.lang.Long.bitCount(_).toLong).sum
-          val out = sorted.map { e =>
-            val ps = Seq((e.v >> 16) & 0xffL, (e.v >> 8) & 0xffL, e.v & 0xffL)
-              .map(p => (p % mBits).toInt)
-            val seen = ps.forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
-            ps.foreach { p =>
-              if ((bits(p / 64) & (1L << (p % 64))) == 0L) setCount += 1L
-              bits(p / 64) |= (1L << (p % 64))
-            }
-            n += 1L
-            BloomRow(e.event_id, key, seen, setCount, n)
+    // a batch fold, not a scan: the filter is cloned once per batch and
+    // set in place, where a per-event step would copy it per event
+    foldByKey(events.groupByKey(_.user_id), ttlMs) {
+      (key, evs, init: Option[BloomState]) =>
+        val st = init.getOrElse(BloomState(new Array[Long](mBits / 64), 0L))
+        val bits = st.bits.clone()
+        var n = st.n
+        var setCount = bits.map(java.lang.Long.bitCount(_).toLong).sum
+        val out = evs.toSeq.sortBy(e => (e.ts_us, e.event_id)).map { e =>
+          val ps = Seq((e.v >> 16) & 0xffL, (e.v >> 8) & 0xffL, e.v & 0xffL)
+            .map(p => (p % mBits).toInt)
+          val seen = ps.forall(p => (bits(p / 64) & (1L << (p % 64))) != 0L)
+          ps.foreach { p =>
+            if ((bits(p / 64) & (1L << (p % 64))) == 0L) setCount += 1L
+            bits(p / 64) |= (1L << (p % 64))
           }
-          gs.update(BloomState(bits, n))
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          out.iterator
-      }
+          n += 1L
+          BloomRow(e.event_id, key, seen, setCount, n)
+        }
+        (Some(BloomState(bits, n)), out.iterator)
+    }
   }
 
   final case class TwaState(lastU: Long, lastV: Long, area: Long, span: Long)
@@ -401,31 +374,20 @@ object StreamingSync {
     */
   def twaStream(events: Dataset[ValueEvent]): Dataset[TwaRow] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TwaState, TwaRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[TwaState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[TwaRow]
-          sorted.foreach { e =>
-            val next = st match {
-              case None => TwaState(e.ts_us, e.v, 0L, 0L)
-              case Some(p) =>
-                TwaState(e.ts_us, e.v,
-                  p.area + p.lastV * (e.ts_us - p.lastU),
-                  p.span + (e.ts_us - p.lastU))
-            }
-            st = Some(next)
-            val twa =
-              if (next.span == 0L) e.v.toDouble
-              else next.area.toDouble / next.span.toDouble
-            out += TwaRow(e.event_id, user, next.area, next.span, twa)
-          }
-          st.foreach(gs.update)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[TwaState], e) =>
+        val next = st match {
+          case None => TwaState(e.ts_us, e.v, 0L, 0L)
+          case Some(p) =>
+            TwaState(e.ts_us, e.v,
+              p.area + p.lastV * (e.ts_us - p.lastU),
+              p.span + (e.ts_us - p.lastU))
+        }
+        val twa =
+          if (next.span == 0L) e.v.toDouble
+          else next.area.toDouble / next.span.toDouble
+        (Some(next), Seq(TwaRow(e.event_id, user, next.area, next.span, twa)))
+    }
   }
 
   final case class HoltState(l: Long, b: Long)
@@ -450,27 +412,16 @@ object StreamingSync {
     */
   def holtStream(events: Dataset[ValueEvent]): Dataset[HoltRow] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[HoltState, HoltRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[HoltState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[HoltRow]
-          sorted.foreach { e =>
-            val next = st match {
-              case None => HoltState(e.v, 0L)
-              case Some(p) =>
-                val ln = (e.v + p.l + p.b) / 2
-                HoltState(ln, (p.b + (ln - p.l)) / 2)
-            }
-            st = Some(next)
-            out += HoltRow(e.event_id, user, next.l, next.b, next.l + next.b)
-          }
-          st.foreach(gs.update)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[HoltState], e) =>
+        val next = st match {
+          case None => HoltState(e.v, 0L)
+          case Some(p) =>
+            val ln = (e.v + p.l + p.b) / 2
+            HoltState(ln, (p.b + (ln - p.l)) / 2)
+        }
+        (Some(next), Seq(HoltRow(e.event_id, user, next.l, next.b, next.l + next.b)))
+    }
   }
 
   final case class MomentState(n: Long, sx: Long, sxx: Long)
@@ -502,28 +453,18 @@ object StreamingSync {
     */
   def anomalyStream(events: Dataset[ValueEvent]): Dataset[AnomalyRow] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[MomentState, AnomalyRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[MomentState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption.getOrElse(MomentState(0L, 0L, 0L))
-          val out = scala.collection.mutable.Buffer.empty[AnomalyRow]
-          sorted.foreach { e =>
-            val (lhs, rhs) =
-              if (st.n < 2) (0L, 0L)
-              else {
-                val d = st.n * e.v - st.sx
-                (d * d, 9L * (st.n * st.sxx - st.sx * st.sx))
-              }
-            out += AnomalyRow(e.event_id, user, st.n, lhs, rhs,
-              st.n >= 2 && lhs > rhs)
-            st = MomentState(st.n + 1, st.sx + e.v, st.sxx + e.v * e.v)
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, prior: Option[MomentState], e) =>
+        val st = prior.getOrElse(MomentState(0L, 0L, 0L))
+        val (lhs, rhs) =
+          if (st.n < 2) (0L, 0L)
+          else {
+            val d = st.n * e.v - st.sx
+            (d * d, 9L * (st.n * st.sxx - st.sx * st.sx))
           }
-          gs.update(st)
-          out.iterator
-      }
+        (Some(MomentState(st.n + 1, st.sx + e.v, st.sxx + e.v * e.v)),
+          Seq(AnomalyRow(e.event_id, user, st.n, lhs, rhs, st.n >= 2 && lhs > rhs)))
+    }
   }
 
   final case class ConvState(n_clicks: Long)
@@ -545,21 +486,12 @@ object StreamingSync {
     */
   def conversionStream(events: Dataset[ValueEvent]): Dataset[ConvRow] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ConvState, ConvRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[ConvState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var cnt = gs.getOption.map(_.n_clicks).getOrElse(0L)
-          val out = scala.collection.mutable.Buffer.empty[ConvRow]
-          sorted.foreach { e =>
-            if (e.v == 1L) cnt += 1
-            else { out += ConvRow(e.event_id, user, cnt); cnt = 0L }
-          }
-          gs.update(ConvState(cnt))
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[ConvState], e) =>
+        val cnt = st.fold(0L)(_.n_clicks)
+        if (e.v == 1L) (Some(ConvState(cnt + 1)), Nil)
+        else (Some(ConvState(0L)), Seq(ConvRow(e.event_id, user, cnt)))
+    }
   }
 
   final case class KmvState(hashes: Array[Long])
@@ -589,37 +521,24 @@ object StreamingSync {
     import events.sparkSession.implicits._
     require(k >= 2 && k <= 100000, s"k out of range: $k")
     val estNum = (k - 1L) * 4294967296L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[KmvState, KmvRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, evs, gs: GroupState[KmvState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption.map(_.hashes).getOrElse(Array.empty[Long])
-          val out = scala.collection.mutable.Buffer.empty[KmvRow]
-          sorted.foreach { e =>
-            val h = e.v
-            val idx = java.util.Arrays.binarySearch(st, h)
-            if (idx < 0) { // absent: sorted insert, trim to k
-              val at = -(idx + 1)
-              if (st.length < k || at < k) {
-                val grown = new Array[Long](math.min(st.length + 1, k))
-                System.arraycopy(st, 0, grown, 0, at)
-                grown(at) = h
-                System.arraycopy(st, at, grown, at + 1,
-                  grown.length - at - 1)
-                st = grown
-              }
-            }
-            val n = st.length.toLong
-            val est =
-              if (n < k) n
-              else estNum / math.max(st(k - 1), 1L)
-            out += KmvRow(e.event_id, key, n, est)
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (key, st: Option[KmvState], e) =>
+        var hs = st.fold(Array.empty[Long])(_.hashes)
+        val idx = java.util.Arrays.binarySearch(hs, e.v)
+        if (idx < 0) { // absent: sorted insert into a new array, trim to k
+          val at = -(idx + 1)
+          if (hs.length < k || at < k) {
+            val grown = new Array[Long](math.min(hs.length + 1, k))
+            System.arraycopy(hs, 0, grown, 0, at)
+            grown(at) = e.v
+            System.arraycopy(hs, at, grown, at + 1, grown.length - at - 1)
+            hs = grown
           }
-          gs.update(KmvState(st))
-          out.iterator
-      }
+        }
+        val n = hs.length.toLong
+        val est = if (n < k) n else estNum / math.max(hs(k - 1), 1L)
+        (Some(KmvState(hs)), Seq(KmvRow(e.event_id, key, n, est)))
+    }
   }
 
   final case class LangToken(lang: String, tok: String)
@@ -656,29 +575,25 @@ object StreamingSync {
       capacity: Int = 1024): Dataset[TopKCount] = {
     import toks.sparkSession.implicits._
     require(capacity >= 1, s"capacity must be positive, got $capacity")
-    toks
-      .groupByKey(_.lang)
-      .flatMapGroupsWithState[MgState, TopKCount](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (lang, ts, gs: GroupState[MgState]) =>
-          val st = gs.getOption.getOrElse(MgState(Array.empty, Array.empty, 0L))
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          st.tokens.zip(st.counts).foreach { case (t, c) => m(t) = c }
-          ts.toSeq.map(_.tok).sorted.foreach { tok =>
-            if (m.contains(tok)) m(tok) += 1L
-            else if (m.size < capacity) m(tok) = 1L
-            else { // Misra–Gries decrement-all
-              m.keys.toSeq.foreach { k =>
-                val c = m(k) - 1L
-                if (c <= 0L) m.remove(k) else m(k) = c
-              }
-            }
+    foldByKey(toks.groupByKey(_.lang)) { (lang, ts, init: Option[MgState]) =>
+      val st = init.getOrElse(MgState(Array.empty, Array.empty, 0L))
+      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+      st.tokens.zip(st.counts).foreach { case (t, c) => m(t) = c }
+      ts.toSeq.map(_.tok).sorted.foreach { tok =>
+        if (m.contains(tok)) m(tok) += 1L
+        else if (m.size < capacity) m(tok) = 1L
+        else { // Misra–Gries decrement-all
+          m.keys.toSeq.foreach { k =>
+            val c = m(k) - 1L
+            if (c <= 0L) m.remove(k) else m(k) = c
           }
-          val seq = st.seq + 1L
-          val kept = m.toArray
-          gs.update(MgState(kept.map(_._1), kept.map(_._2), seq))
-          kept.iterator.map { case (t, c) => TopKCount(lang, seq, t, c) }
+        }
       }
+      val seq = st.seq + 1L
+      val kept = m.toArray
+      (Some(MgState(kept.map(_._1), kept.map(_._2), seq)),
+        kept.iterator.map { case (t, c) => TopKCount(lang, seq, t, c) })
+    }
   }
 
   final case class TypedEvent(user_id: Long, ts_us: Long, event_id: Long, event_type: String)
@@ -704,25 +619,16 @@ object StreamingSync {
     */
   def scd2Stream(events: Dataset[TypedEvent]): Dataset[ScdRow] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ScdState, ScdRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, evs, gs: GroupState[ScdState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.ts_us, e.event_id))
-          var st = gs.getOption.orNull
-          val out = scala.collection.mutable.Buffer.empty[ScdRow]
-          sorted.foreach { e =>
-            if (st == null) {
-              st = ScdState(e.event_type, e.ts_us, 1L)
-            } else if (st.typ != e.event_type) {
-              out += ScdRow(user, st.version, st.typ, st.from, e.ts_us)
-              st = ScdState(e.event_type, e.ts_us, st.version + 1L)
-            }
-          }
-          if (st != null) gs.update(st)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id))(e => (e.ts_us, e.event_id)) {
+      (user, st: Option[ScdState], e) =>
+        st match {
+          case None => (Some(ScdState(e.event_type, e.ts_us, 1L)), Nil)
+          case Some(s) if s.typ != e.event_type =>
+            (Some(ScdState(e.event_type, e.ts_us, s.version + 1L)),
+              Seq(ScdRow(user, s.version, s.typ, s.from, e.ts_us)))
+          case _ => (st, Nil)
+        }
+    }
   }
 
   final case class SrcHash(source: String, h: Long)
@@ -746,17 +652,12 @@ object StreamingSync {
     */
   def checksumStream(rows: Dataset[SrcHash]): Dataset[XorRow] = {
     import rows.sparkSession.implicits._
-    rows
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[XorState, XorRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (src, hs, gs: GroupState[XorState]) =>
-          var st = gs.getOption.getOrElse(XorState(0L, 0L, 0L))
-          hs.foreach(r => st = XorState(st.x ^ r.h, st.n + 1L, st.seq))
-          st = st.copy(seq = st.seq + 1L)
-          gs.update(st)
-          Iterator.single(XorRow(src, st.seq, st.n, st.x))
-      }
+    foldByKey(rows.groupByKey(_.source)) { (src, hs, init: Option[XorState]) =>
+      var st = init.getOrElse(XorState(0L, 0L, 0L))
+      hs.foreach(r => st = XorState(st.x ^ r.h, st.n + 1L, st.seq))
+      st = st.copy(seq = st.seq + 1L)
+      (Some(st), Iterator.single(XorRow(src, st.seq, st.n, st.x)))
+    }
   }
 
   final case class TypeDayEvent(typ: String, day: Long)
@@ -793,37 +694,25 @@ object StreamingSync {
       events: Dataset[TypeDayEvent],
       ttlMs: Long = 0L): Dataset[CChartRow] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.typ)
-      .flatMapGroupsWithState[CChartState, CChartRow](
-        OutputMode.Append(), timeoutConf) {
-        case (typ, es, gs: GroupState[CChartState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (typ, es, gs: GroupState[CChartState]) =>
-          val st = gs.getOption.getOrElse(CChartState(Array.empty, Array.empty, 0L))
-          val m = scala.collection.mutable.TreeMap.empty[Long, Long]
-          st.days.zip(st.counts).foreach { case (d, c) => m(d) = c }
-          es.foreach(e => m(e.day) = m.getOrElse(e.day, 0L) + 1L)
-          val seq = st.seq + 1L
-          val days = m.toArray // TreeMap → day-ascending, canonical
-          gs.update(CChartState(days.map(_._1), days.map(_._2), seq))
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          var tot = 0L
-          var nd = 0L
-          val out = days.iterator.map { case (d, n) =>
-            val lhs = BigInt(n * nd - tot).pow(2)
-            val rhs = BigInt(4) * BigInt(tot) * BigInt(nd)
-            val alarm = nd >= 7 && n * nd > tot && lhs > rhs
-            val row = CChartRow(typ, seq, d, n, tot, nd, alarm)
-            tot += n; nd += 1L
-            row
-          }.toArray
-          out.iterator
+    foldByKey(events.groupByKey(_.typ), ttlMs) { (typ, es, init: Option[CChartState]) =>
+      val st = init.getOrElse(CChartState(Array.empty, Array.empty, 0L))
+      val m = scala.collection.mutable.TreeMap.empty[Long, Long]
+      st.days.zip(st.counts).foreach { case (d, c) => m(d) = c }
+      es.foreach(e => m(e.day) = m.getOrElse(e.day, 0L) + 1L)
+      val seq = st.seq + 1L
+      val days = m.toArray // TreeMap → day-ascending, canonical
+      var tot = 0L
+      var nd = 0L
+      val out = days.map { case (d, n) =>
+        val lhs = BigInt(n * nd - tot).pow(2)
+        val rhs = BigInt(4) * BigInt(tot) * BigInt(nd)
+        val alarm = nd >= 7 && n * nd > tot && lhs > rhs
+        val row = CChartRow(typ, seq, d, n, tot, nd, alarm)
+        tot += n; nd += 1L
+        row
       }
+      (Some(CChartState(days.map(_._1), days.map(_._2), seq)), out.iterator)
+    }
   }
 
   final case class TypeDayCount(typ: String, day: Long, n: Long)
@@ -853,31 +742,16 @@ object StreamingSync {
       days: Dataset[TypeDayCount],
       ttlMs: Long = 0L): Dataset[RecordRow] = {
     import days.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    days
-      .groupByKey(_.typ)
-      .flatMapGroupsWithState[RecState, RecordRow](
-        OutputMode.Append(), timeoutConf) {
-        case (typ, rows, gs: GroupState[RecState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (typ, rows, gs: GroupState[RecState]) =>
-          var st = gs.getOption.getOrElse(RecState(0L, 0L, any = false))
-          val out = rows.toSeq.sortBy(_.day).map { r =>
-            val hi = !st.any || r.n > st.pmax
-            val lo = !st.any || r.n < st.pmin
-            st = RecState(
-              if (st.any) math.max(st.pmax, r.n) else r.n,
-              if (st.any) math.min(st.pmin, r.n) else r.n,
-              any = true)
-            RecordRow(typ, r.day, r.n, hi, lo)
-          }
-          gs.update(st)
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          out.iterator
-      }
+    scanByKey(days.groupByKey(_.typ), ttlMs)(_.day) { (typ, prior: Option[RecState], r) =>
+      val st = prior.getOrElse(RecState(0L, 0L, any = false))
+      val hi = !st.any || r.n > st.pmax
+      val lo = !st.any || r.n < st.pmin
+      (Some(RecState(
+        if (st.any) math.max(st.pmax, r.n) else r.n,
+        if (st.any) math.min(st.pmin, r.n) else r.n,
+        any = true)),
+        Seq(RecordRow(typ, r.day, r.n, hi, lo)))
+    }
   }
 
   final case class TypeValue(typ: String, v: Long)
@@ -919,49 +793,49 @@ object StreamingSync {
       ttlMs: Long = 0L): Dataset[QuantRow] = {
     require(width > 0 && nBuckets > 1, s"bad grid: width=$width nBuckets=$nBuckets")
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.typ)
-      .flatMapGroupsWithState[QuantState, QuantRow](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, gs: GroupState[QuantState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (typ, es, gs: GroupState[QuantState]) =>
-          val st = gs.getOption.getOrElse(QuantState(new Array[Long](nBuckets + 1), 0L))
-          val counts = st.counts.clone()
-          es.foreach { e =>
-            val raw = (e.v - lo) / width
-            val b =
-              if (e.v < lo) 0
-              else if (raw >= nBuckets) nBuckets - 1
-              else raw.toInt
-            counts(b) += 1L
-            // slot nBuckets carries the clamp census, not a bucket
-            if (e.v < lo || raw >= nBuckets) counts(nBuckets) += 1L
-          }
-          val seq = st.seq + 1L
-          gs.update(QuantState(counts, seq))
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          val n = counts.take(nBuckets).sum
-          def qLo(pPm: Long): Long = {
-            val rank = (n * pPm + 999L) / 1000L
-            var cum = 0L
-            var i = 0
-            var out = lo + (nBuckets - 1).toLong * width
-            var found = false
-            while (i < nBuckets && !found) {
-              cum += counts(i)
-              if (cum >= rank) { out = lo + i.toLong * width; found = true }
-              i += 1
-            }
-            out
-          }
-          Iterator.single(QuantRow(typ, seq, n, counts(nBuckets),
-            qLo(500L), qLo(900L), qLo(990L)))
+    foldByKey(events.groupByKey(_.typ), ttlMs) { (typ, es, init: Option[QuantState]) =>
+      val st = init.getOrElse(QuantState(new Array[Long](nBuckets + 1), 0L))
+      val counts = st.counts.clone()
+      // slot nBuckets carries the clamp census, not a bucket
+      counts(nBuckets) += binInto(counts, es.map(_.v), lo, width, nBuckets)
+      val seq = st.seq + 1L
+      val n = counts.take(nBuckets).sum
+      def qLo(pPm: Long): Long = {
+        val rank = (n * pPm + 999L) / 1000L
+        var cum = 0L
+        var i = 0
+        var out = lo + (nBuckets - 1).toLong * width
+        var found = false
+        while (i < nBuckets && !found) {
+          cum += counts(i)
+          if (cum >= rank) { out = lo + i.toLong * width; found = true }
+          i += 1
+        }
+        out
       }
+      (Some(QuantState(counts, seq)), Iterator.single(QuantRow(typ, seq, n,
+        counts(nBuckets), qLo(500L), qLo(900L), qLo(990L))))
+    }
+  }
+
+  /** Counts each value into its bucket of the fixed grid `lo + i·width`,
+    * `i < nBuckets` — out-of-range values clamp into the edge buckets —
+    * and returns how many clamped ([[quantileStream]], [[driftStream]]).
+    */
+  private def binInto(
+      counts: Array[Long], vs: Iterator[Long], lo: Long, width: Long,
+      nBuckets: Int): Long = {
+    var clamped = 0L
+    vs.foreach { v =>
+      val raw = (v - lo) / width
+      val b =
+        if (v < lo) 0
+        else if (raw >= nBuckets) nBuckets - 1
+        else raw.toInt
+      counts(b) += 1L
+      if (v < lo || raw >= nBuckets) clamped += 1L
+    }
+    clamped
   }
 
   final case class DriftState(
@@ -1002,58 +876,36 @@ object StreamingSync {
       ttlMs: Long = 0L): Dataset[DriftRow] = {
     require(width > 0 && nBuckets > 1, s"bad grid: width=$width nBuckets=$nBuckets")
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.typ)
-      .flatMapGroupsWithState[DriftState, DriftRow](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, gs: GroupState[DriftState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (typ, es, gs: GroupState[DriftState]) =>
-          val counts = new Array[Long](nBuckets)
-          var n = 0L
-          var clamped = 0L
-          es.foreach { e =>
-            val raw = (e.v - lo) / width
-            val b =
-              if (e.v < lo) 0
-              else if (raw >= nBuckets) nBuckets - 1
-              else raw.toInt
-            counts(b) += 1L
-            n += 1L
-            if (e.v < lo || raw >= nBuckets) clamped += 1L
-          }
-          val st = gs.getOption match {
-            case None =>
-              DriftState(counts, n, new Array[Long](nBuckets), 0L, clamped, 1L)
-            case Some(p) =>
-              val live = p.live.clone()
-              var i = 0
-              while (i < nBuckets) { live(i) += counts(i); i += 1 }
-              DriftState(p.ref, p.nRef, live, p.nLive + n,
-                p.nClamped + clamped, p.seq + 1L)
-          }
-          gs.update(st)
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          val tv =
-            if (st.nRef == 0L || st.nLive == 0L) 0L
-            else {
-              var num = BigInt(0)
-              var i = 0
-              while (i < nBuckets) {
-                num += (BigInt(st.live(i)) * st.nRef
-                  - BigInt(st.ref(i)) * st.nLive).abs
-                i += 1
-              }
-              ((BigInt(1000) * num)
-                / (BigInt(2) * st.nRef * st.nLive)).toLong
-            }
-          Iterator.single(
-            DriftRow(typ, st.seq, st.nRef, st.nLive, st.nClamped, tv))
+    foldByKey(events.groupByKey(_.typ), ttlMs) { (typ, es, init: Option[DriftState]) =>
+      val counts = new Array[Long](nBuckets)
+      val clamped = binInto(counts, es.map(_.v), lo, width, nBuckets)
+      val n = counts.sum
+      val st = init match {
+        case None =>
+          DriftState(counts, n, new Array[Long](nBuckets), 0L, clamped, 1L)
+        case Some(p) =>
+          val live = p.live.clone()
+          var i = 0
+          while (i < nBuckets) { live(i) += counts(i); i += 1 }
+          DriftState(p.ref, p.nRef, live, p.nLive + n,
+            p.nClamped + clamped, p.seq + 1L)
       }
+      val tv =
+        if (st.nRef == 0L || st.nLive == 0L) 0L
+        else {
+          var num = BigInt(0)
+          var i = 0
+          while (i < nBuckets) {
+            num += (BigInt(st.live(i)) * st.nRef
+              - BigInt(st.ref(i)) * st.nLive).abs
+            i += 1
+          }
+          ((BigInt(1000) * num)
+            / (BigInt(2) * st.nRef * st.nLive)).toLong
+        }
+      (Some(st), Iterator.single(
+        DriftRow(typ, st.seq, st.nRef, st.nLive, st.nClamped, tv)))
+    }
   }
 
   final case class IntervalEvent(user_id: Long, event_id: Long, start_us: Long, end_us: Long)
@@ -1087,34 +939,17 @@ object StreamingSync {
       events: Dataset[IntervalEvent],
       ttlMs: Long = 0L): Dataset[IslandRow] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[IslandState, IslandRow](
-        OutputMode.Append(), timeoutConf) {
-        case (user, evs, gs: GroupState[IslandState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (user, evs, gs: GroupState[IslandState]) =>
-          val sorted = evs.toSeq.sortBy(e => (e.start_us, e.event_id))
-          var st = gs.getOption
-          val out = scala.collection.mutable.Buffer.empty[IslandRow]
-          sorted.foreach { e =>
-            st = st match {
-              case None => Some(IslandState(e.start_us, e.end_us, 1L, 1L))
-              case Some(s) if e.start_us > s.maxEnd =>
-                out += IslandRow(user, s.island, s.start, s.maxEnd, s.n)
-                Some(IslandState(e.start_us, e.end_us, 1L, s.island + 1L))
-              case Some(s) =>
-                Some(s.copy(maxEnd = math.max(s.maxEnd, e.end_us), n = s.n + 1L))
-            }
-          }
-          st.foreach(gs.update)
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          out.iterator
-      }
+    scanByKey(events.groupByKey(_.user_id), ttlMs)(e => (e.start_us, e.event_id)) {
+      (user, st: Option[IslandState], e) =>
+        st match {
+          case None => (Some(IslandState(e.start_us, e.end_us, 1L, 1L)), Nil)
+          case Some(s) if e.start_us > s.maxEnd =>
+            (Some(IslandState(e.start_us, e.end_us, 1L, s.island + 1L)),
+              Seq(IslandRow(user, s.island, s.start, s.maxEnd, s.n)))
+          case Some(s) =>
+            (Some(s.copy(maxEnd = math.max(s.maxEnd, e.end_us), n = s.n + 1L)), Nil)
+        }
+    }
   }
 
   final case class BandedDoc(band: Int, bh: Long, id: Long, fp: Long)
@@ -1175,84 +1010,42 @@ object StreamingSync {
     require(maxHamming >= 0 && maxHamming < 32,
       s"maxHamming must be in [0, 32), got $maxHamming")
     require(maxBucket >= 1, s"maxBucket must be positive, got $maxBucket")
-    val timeoutConf =
-      if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    docs
-      .groupByKey(d => (d.band, d.bh))
-      .flatMapGroupsWithState[BucketState, SimhashMatch](
-        OutputMode.Append(), timeoutConf) {
-        case (_, _, gs: GroupState[BucketState]) if gs.hasTimedOut =>
-          gs.remove()
-          Iterator.empty
-        case (_, ds, gs: GroupState[BucketState]) =>
-          val sorted = ds.toSeq.sortBy(_.id)
-          var st = gs.getOption.getOrElse(
-            BucketState(Array.empty[Long], Array.empty[Long]))
-          val out = scala.collection.mutable.Buffer.empty[SimhashMatch]
-          sorted.foreach { d =>
-            var i = 0
-            while (i < st.ids.length) {
-              if (st.ids(i) != d.id) {
-                val h = java.lang.Long.bitCount(st.fps(i) ^ d.fp)
-                if (h <= maxHamming) {
-                  out += (if (st.ids(i) < d.id)
-                    SimhashMatch(st.ids(i), d.id, h)
-                  else SimhashMatch(d.id, st.ids(i), h))
-                }
-              }
-              i += 1
-            }
-            if (!st.ids.contains(d.id)) {
-              if (st.ids.length < maxBucket) {
-                st = BucketState(st.ids :+ d.id, st.fps :+ d.fp)
-              } else {
-                out += SimhashMatch(-1L, d.id, -1) // cap-armed marker
-              }
-            }
-          }
-          gs.update(st)
-          if (ttlMs > 0) gs.setTimeoutDuration(ttlMs)
-          out.iterator
-      }
+    scanByKey(docs.groupByKey(d => (d.band, d.bh)), ttlMs)(_.id) {
+      (_, prior: Option[BucketState], d) =>
+        val st = prior.getOrElse(BucketState(Array.empty[Long], Array.empty[Long]))
+        val pairs = st.ids.indices.filter(st.ids(_) != d.id).flatMap { i =>
+          val h = java.lang.Long.bitCount(st.fps(i) ^ d.fp)
+          if (h > maxHamming) None
+          else Some(SimhashMatch(math.min(st.ids(i), d.id), math.max(st.ids(i), d.id), h))
+        }
+        if (st.ids.contains(d.id)) (Some(st), pairs)
+        else if (st.ids.length < maxBucket)
+          (Some(BucketState(st.ids :+ d.id, st.fps :+ d.fp)), pairs)
+        else (Some(st), pairs :+ SimhashMatch(-1L, d.id, -1)) // cap-armed marker
+    }
   }
 
+  /** Per-user gap-based sessions as explicit per-key state. Emits one row
+    * per CLOSED session: a session closes when a later event arrives past
+    * the gap, so a user's last open session is never emitted (no end of
+    * stream in a live pipeline). `gapSeconds` defines session boundaries
+    * on the event-time column `ts_s` (epoch seconds).
+    */
   def sessionizeStream(
       events: Dataset[SessionEvent],
-      gapSeconds: Long = 1800L,
-      useProcessingTimeout: Boolean = false): Dataset[ClosedSession] = {
+      gapSeconds: Long = 1800L): Dataset[ClosedSession] = {
     import events.sparkSession.implicits._
-    val timeout =
-      if (useProcessingTimeout) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, ClosedSession](OutputMode.Append(), timeout) {
-        case (user, evs, gs: GroupState[SessionState]) =>
-          if (useProcessingTimeout && gs.hasTimedOut) {
-            val closed = gs.getOption.map(s => ClosedSession(user, s.start, s.last, s.n))
-            gs.remove()
-            closed.iterator
-          } else {
-            val sorted = evs.map(_.ts_s).toSeq.sorted
-            var state = gs.getOption
-            val out = scala.collection.mutable.Buffer.empty[ClosedSession]
-            sorted.foreach { t =>
-              state match {
-                case Some(s) if t - s.last <= gapSeconds =>
-                  state = Some(s.copy(last = t, n = s.n + 1))
-                case Some(s) =>
-                  out += ClosedSession(user, s.start, s.last, s.n)
-                  state = Some(SessionState(t, t, 1))
-                case None =>
-                  state = Some(SessionState(t, t, 1))
-              }
-            }
-            state.foreach(gs.update)
-            if (useProcessingTimeout) gs.setTimeoutDuration(s"${gapSeconds} seconds")
-            out.iterator
-          }
-      }
+    scanByKey(events.groupByKey(_.user_id))(_.ts_s) {
+      (user, st: Option[SessionState], e) =>
+        val t = e.ts_s
+        st match {
+          case Some(s) if t - s.last <= gapSeconds =>
+            (Some(s.copy(last = t, n = s.n + 1)), Nil)
+          case Some(s) =>
+            (Some(SessionState(t, t, 1)), Seq(ClosedSession(user, s.start, s.last, s.n)))
+          case None => (Some(SessionState(t, t, 1)), Nil)
+        }
+    }
   }
 
   /** Streaming exact dedup with bounded state: the first record per key

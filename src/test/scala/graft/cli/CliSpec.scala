@@ -2,7 +2,7 @@ package graft.cli
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.SparkSpec
-import graft.sources.{CommandBuilder, FileNativeSource}
+import graft.sources.FileNativeSource
 
 class CliSpec extends SparkSpec {
   private val m = new ObjectMapper()
@@ -80,15 +80,6 @@ class CliSpec extends SparkSpec {
     assert(sel.selects("not_in_doc")) // document scopes only what it mentions
     assert(sel.fieldDrops("events") == Seq("props")) // automatic field kept
     assert(sel.replicationMethod("events") == "INCREMENTAL")
-  }
-
-  test("CommandBuilder: container argv with mounts mirrors docker-run shape") {
-    val cmd = CommandBuilder.container(
-      image = "airbyte/source-file", tag = "0.5.3",
-      mounts = Seq(CommandBuilder.Mount("/host/data", "/data", "ro")))
-    assert(cmd == Seq("docker", "run", "--rm", "-i",
-      "-v", "/host/data:/data:ro", "airbyte/source-file:0.5.3"))
-    assert(CommandBuilder.native("tap-foo") == Seq("tap-foo"))
   }
 
   test("writeParquetCounted: the count rides the write job — ONE pass") {

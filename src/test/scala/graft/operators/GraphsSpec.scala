@@ -137,7 +137,8 @@ class GraphsSpec extends SparkSpec {
     val typeErr = intercept[IllegalArgumentException] {
       Graphs.bellmanFordRounds(fractional, "src", "dst", "w", seeds, "id", 2)
     }
-    assert(typeErr.getMessage.contains("integral"), typeErr.getMessage)
+    assert(typeErr.getMessage.contains("bellmanFordRounds needs integral weights, " +
+      "got List(DoubleType) — the RDD loop carries them as Long"), typeErr.getMessage)
   }
 
   test("bellmanFordRounds drops null seeds, ids and weights") {

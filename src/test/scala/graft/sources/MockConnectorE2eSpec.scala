@@ -16,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * the KPHX payload — the end-to-end case the reference exercises with
   * a docker-mounted `airbyte/source-file` (`tests/test_syncs.py:177-235`),
   * here driven through a mock connector binary speaking the Airbyte
-  * protocol on stdout (no docker daemon in this environment; the argv
-  * construction for the real mount is covered by CliSpec/CommandBuilder).
+  * protocol on stdout (no docker daemon in this environment; the CLI
+  * runs the connector `command` it is given, so no container argv is
+  * built).
   *
   * One spec, the whole `run_read` contract (`tap.py:584-642`):
   * discover → catalog parse → `read --config --catalog` under a real

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.catalog.ConfiguredCatalog
 import graft.sources.SubprocessSource
 import graft.state.StateStore
-import org.apache.spark.sql.streaming.Trigger
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import java.nio.file.Files
@@ -54,7 +53,7 @@ class ConnectorStreamingSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("connckpt").toString
     val q = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, s"$landing/*.jsonl", cat.streams.head.sparkSchema),
-      "s1", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s1", out, ckpt, Some("id"), state)
     q.awaitTermination(60000)
     assert(spark.read.parquet(out).count() == 8)
     assert(state.bookmark("s1", "id").contains("8"))
@@ -69,7 +68,7 @@ class ConnectorStreamingSpec extends SparkSpec {
     Files.copy(spill2, java.nio.file.Paths.get(landing, "s1_seg2.jsonl"))
     val q2 = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, s"$landing/*.jsonl", cat.streams.head.sparkSchema),
-      "s1", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s1", out, ckpt, Some("id"), state)
     q2.awaitTermination(60000)
     assert(spark.read.parquet(out).count() == 12) // no re-read of batch 1
     assert(state.bookmark("s1", "id").contains("12"))

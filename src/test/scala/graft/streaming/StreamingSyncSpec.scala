@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.state.StateStore
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import java.nio.file.Files
@@ -27,7 +26,7 @@ class StreamingSyncSpec extends SparkSpec {
     val state = new StateStore()
     val q1 = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, landing, schema),
-      "s", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s", out, ckpt, Some("id"), state)
     q1.awaitTermination(60000)
     assert(spark.read.parquet(out).count() == 2)
     assert(state.bookmark("s", "id").contains("2"))
@@ -36,7 +35,7 @@ class StreamingSyncSpec extends SparkSpec {
     Seq("""{"id":3,"v":"c"}""").toDS().coalesce(1).write.mode("append").text(landing)
     val q2 = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, landing, schema),
-      "s", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s", out, ckpt, Some("id"), state)
     q2.awaitTermination(60000)
     val rows = spark.read.parquet(out)
     assert(rows.count() == 3) // no duplicates: checkpoint skipped batch 1 files
@@ -56,7 +55,7 @@ class StreamingSyncSpec extends SparkSpec {
     Seq("""{"id":10,"v":"x"}""").toDS().coalesce(1).write.mode("append").text(landing)
     val q = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, landing, schema),
-      "s", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s", out, ckpt, Some("id"), state)
     q.awaitTermination(60000)
     assert(state.bookmark("s", "id").contains("10")) // advanced: 10 > 9 numerically
 
@@ -64,7 +63,7 @@ class StreamingSyncSpec extends SparkSpec {
     Seq("""{"id":4,"v":"y"}""").toDS().coalesce(1).write.mode("append").text(landing)
     val q2 = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, landing, schema),
-      "s", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s", out, ckpt, Some("id"), state)
     q2.awaitTermination(60000)
     assert(state.bookmark("s", "id").contains("10"))
 
@@ -74,7 +73,7 @@ class StreamingSyncSpec extends SparkSpec {
     Seq("""{"id":11,"v":"z"}""").toDS().coalesce(1).write.mode("append").text(landing)
     val q3 = StreamingSync.syncToParquet(
       StreamingSync.readJsonlStream(spark, landing, schema),
-      "s", out, ckpt, Some("id"), state, Trigger.AvailableNow())
+      "s", out, ckpt, Some("id"), state)
     q3.awaitTermination(60000)
     assert(state.bookmark("s", "id").contains("11"))
   }
